@@ -35,20 +35,23 @@ class StealMeter:
         return 100.0 * (t1[7] - self._t0[7]) / max(total, 1)
 
 
-def wait_calm(threshold_pct: float = 3.0, sample_s: float = 0.5,
-              max_wait_s: float = 10.0) -> tuple[float, float]:
-    """Sample steal in ``sample_s`` slices until one is below
-    ``threshold_pct`` or ``max_wait_s`` has passed. Returns (seconds
-    spent, steal % of the last slice). The wait is bounded: a run that
-    starts inside a long burst still runs, and records the burst."""
+CALM_STEAL_PCT = 3.0
+CALM_SAMPLE_S = 0.5
+CALM_MAX_WAIT_S = 3.0
+
+
+def wait_calm() -> float:
+    """Sample steal in ``CALM_SAMPLE_S`` slices until one is below
+    ``CALM_STEAL_PCT`` or ``CALM_MAX_WAIT_S`` has passed; returns the
+    seconds spent. The wait is bounded: a run that starts inside a long
+    burst still runs, and records the burst."""
     t0 = time.perf_counter()
     while True:
         meter = StealMeter()
-        time.sleep(sample_s)
-        steal = meter.pct()
+        time.sleep(CALM_SAMPLE_S)
         waited = time.perf_counter() - t0
-        if steal < threshold_pct or waited >= max_wait_s:
-            return waited, steal
+        if meter.pct() < CALM_STEAL_PCT or waited >= CALM_MAX_WAIT_S:
+            return waited
 
 
 def _stat(pid: int) -> list[str] | None:
@@ -78,10 +81,10 @@ def descendants(root: int) -> list[int]:
     return out
 
 
-def tree_cpu_s(root: int | None = None) -> float:
-    """User + system CPU seconds of ``root`` and all its descendants,
+def tree_cpu_s() -> float:
+    """User + system CPU seconds of this process and all its descendants,
     reaped children included (utime, stime, cutime, cstime)."""
-    root = os.getpid() if root is None else root
+    root = os.getpid()
     ticks = 0
     for pid in [root, *descendants(root)]:
         st = _stat(pid)

@@ -65,7 +65,7 @@ def interactive_turns(seed: int, n: int) -> list[Turn]:
         classes, mode, tmpl = TURN_TEMPLATES[i % len(TURN_TEMPLATES)]
         r, r2 = _words(rng, "rr")
         m, m2 = _words(rng, "mm")
-        pattern = tmpl.format(r=r, r2=r2, m=m, m2=m2, M2=m2.capitalize())
+        pattern = tmpl.format(r=r, r2=r2, m=m, m2=m2)
         turns.append(Turn(" ".join(_words(rng, classes)), mode, pattern))
     return turns
 

@@ -1,6 +1,6 @@
 """Code-search benchmark: one seeded workload per run.
 
-    python3 perfbench/run.py --workload interactive --seed 1 --seconds 5 --trace 0
+    python3 perfbench/run.py --workload interactive --seed 1 --seconds 15 --trace 0
 
 Run it from the repository root. The last line of standard output is one
 JSON object: {"correct", "attempted", "failed", "metrics"}. With
@@ -8,6 +8,10 @@ JSON object: {"correct", "attempted", "failed", "metrics"}. With
 with ``--trace 1`` Spark's event log is switched on and the metrics are
 the per-layer ones. The line before it carries diagnostics (host steal,
 per-operation medians). See perfbench/README.md.
+
+Everything a run writes goes under .perfbench_work/ in the checkout. The
+run's own directory is deleted at the end; .perfbench_work/cache keeps
+the interactive workload's index, one per engine source tree.
 """
 
 from __future__ import annotations
@@ -22,6 +26,7 @@ import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WORK_ROOT = os.path.join(ROOT, ".perfbench_work")
 CORES = 3  # one of the 4 vCPUs stays with the driver JVM, the Python driver and the OS
 N_DOCS = 1000
 
@@ -90,23 +95,19 @@ def _stop(spark) -> None:
 def run(workload: str, seed: int, seconds: float, trace: bool,
         n_docs: int = N_DOCS, corrupt=None) -> dict:
     """Run one workload and return the result object that is printed."""
-    t0 = time.perf_counter()
     age0 = _process_age_s()
-    work = os.path.join(ROOT, ".perfbench_work", f"{workload}-{seed}-{os.getpid()}")
+    work = os.path.join(WORK_ROOT, f"{workload}-{seed}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     saved_env, saved_tmp = dict(os.environ), tempfile.tempdir
     try:
-        res = _run_in(work, workload, seed, seconds, trace, n_docs, corrupt, t0)
+        res = _run_in(work, workload, seed, seconds, trace, n_docs, corrupt)
     finally:
         os.environ.clear()
         os.environ.update(saved_env)
         tempfile.tempdir = saved_tmp
         shutil.rmtree(work, ignore_errors=True)
-        try:
-            os.rmdir(os.path.dirname(work))
-        except OSError:
-            pass  # another run's directory is still there
-    # process start until the workload's own set-up begins
+    # process start until the workload's own set-up begins, less the
+    # calm-host wait
     res.e2e["setup_s"] += age0 + res.diag["session_s"] + res.diag["imports_s"]
     if trace:
         res.per_layer["session.start_s"] = res.diag["session_s"]
@@ -132,7 +133,7 @@ def run(workload: str, seed: int, seconds: float, trace: bool,
 
 
 def _run_in(work: str, workload: str, seed: int, seconds: float, trace: bool,
-            n_docs: int, corrupt, t0: float):
+            n_docs: int, corrupt):
     _environment(work)
     tmp = os.path.join(work, "tmp")
     log_dir = os.path.join(work, "eventlog")
@@ -150,6 +151,13 @@ def _run_in(work: str, workload: str, seed: int, seconds: float, trace: bool,
             "spark.eventLog.compress": "false",
             "spark.eventLog.rolling.enabled": "false",
         })
+    from perfbench.host import StealMeter, wait_calm
+
+    # the set-up window: a calm-host wait, then steal from here until the
+    # workload's set-up ends
+    calm_wait_s = wait_calm()
+    setup_meter = StealMeter()
+    t0 = time.perf_counter()
     from ck_spark.session import get_spark
 
     from perfbench import workloads
@@ -159,7 +167,8 @@ def _run_in(work: str, workload: str, seed: int, seconds: float, trace: bool,
     spark = get_spark("perfbench", cores=CORES, extra_conf=conf)
     t2 = time.perf_counter()
     try:
-        bench = workloads.Bench(spark, work, seed, seconds, trace, n_docs, corrupt)
+        bench = workloads.Bench(spark, work, os.path.join(WORK_ROOT, "cache"), seed,
+                                seconds, trace, n_docs, corrupt, calm_wait_s, setup_meter)
         res = getattr(workloads, workload)(bench)
     finally:
         t3 = time.perf_counter()

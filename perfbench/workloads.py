@@ -3,10 +3,12 @@
 ``interactive``  a CLI/MCP user who waits for every answer. Each turn is a
                  top-k search, the same search with its results fetched
                  from the content store, and a trigram-indexed regex grep;
-                 a search_many batch follows every second turn.
-``ingest``       a writer: a timed full build, then upserts through the
-                 LSM delta path, each followed by a search_many batch on
-                 the live view.
+                 a search_many batch follows every second turn. The index
+                 is read-only here, so it is built once per engine version
+                 and reused (see ``cached_index``).
+``ingest``       a writer: a fresh full build in set-up, then upserts
+                 through the LSM delta path, each followed by a
+                 search_many batch on the live view.
 
 Each returns a ``Result``. End-to-end metrics come from the untraced run;
 ``per_layer`` is filled only when the run is traced.
@@ -14,7 +16,10 @@ Each returns a ``Result``. End-to-end metrics come from the untraced run;
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
 import statistics
 import time
 import traceback
@@ -36,6 +41,12 @@ from perfbench.oracle import BM25Oracle, same_ranking
 from perfbench.trace import EventLog, Tracer
 
 SEARCH_K = 10
+# interactive searches a fixed corpus, so its index can be reused across
+# runs; the seed picks the queries
+CORPUS_SEED = 1
+# upserts per ingest run: a fixed count keeps the LSM state the same in
+# every run, and an odd count gives a median that one upsert cannot set
+N_UPSERTS = 3
 
 
 def dir_bytes(path: str) -> int:
@@ -44,6 +55,20 @@ def dir_bytes(path: str) -> int:
         for f in files:
             total += os.path.getsize(os.path.join(d, f))
     return total
+
+
+def engine_digest() -> str:
+    """sha256 over the engine's Python sources: a cached index is reused
+    only by the engine that built it."""
+    import ck_spark
+
+    h = hashlib.sha256()
+    pkg = os.path.dirname(ck_spark.__file__)
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        h.update(os.path.relpath(path, pkg).encode())
+        with open(path, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()
 
 
 def median(xs) -> float:
@@ -68,10 +93,12 @@ class Bench:
     before it is checked; the benchmark's own test uses it to show that a
     wrong answer is counted."""
 
-    def __init__(self, spark, work_dir: str, seed: int, seconds: float,
-                 traced: bool, n_docs: int, corrupt=None):
+    def __init__(self, spark, work_dir: str, cache_dir: str, seed: int,
+                 seconds: float, traced: bool, n_docs: int, corrupt,
+                 calm_wait_s: float, setup_meter: host.StealMeter):
         self.spark = spark
         self.work = work_dir
+        self.cache = cache_dir
         self.seed = seed
         self.seconds = seconds
         self.traced = traced
@@ -80,8 +107,11 @@ class Bench:
         self.tracer = Tracer()
         self.lat: dict[str, list[float]] = defaultdict(list)
         self.res = Result()
-        self.steal: list[float] = []
-        self.calm_wait_s = 0.0
+        # steal % per window: "setup" from before the session starts, then
+        # each timed window by name
+        self.steal: dict[str, float] = {}
+        self.calm_wait_s = calm_wait_s
+        self.setup_meter = setup_meter
         self.window_cpu_s = 0.0
         self.window_ops = 0
         self.batch_calls = 0
@@ -107,18 +137,21 @@ class Bench:
             self.res.failed += 1
             self.res.errors.append(f"wrong answer: {what}")
 
+    def end_setup(self) -> None:
+        """Close the set-up window that the runner opened, after its own
+        calm-host wait, just before it started the session."""
+        self.steal["setup"] = self.setup_meter.pct()
+
     @contextmanager
-    def window(self):
-        """One timed window: a bounded wait for a calm host first, then
-        steal and process-tree CPU over the window. The CPU kept is the
-        last window's, which in both workloads is the operation window."""
-        waited, _ = host.wait_calm()
-        self.calm_wait_s += waited
+    def window(self, name: str):
+        """One timed window after set-up: a bounded wait for a calm host
+        first, then steal and process-tree CPU over the window."""
+        self.calm_wait_s += host.wait_calm()
         meter, cpu0 = host.StealMeter(), host.tree_cpu_s()
         try:
             yield
         finally:
-            self.steal.append(meter.pct())
+            self.steal[name] = meter.pct()
             self.window_cpu_s = host.tree_cpu_s() - cpu0
 
     # -- engine calls shared by the workloads --------------------------------
@@ -168,13 +201,13 @@ class Bench:
 
     # -- answer checks (never inside a timed window) ---------------------------
 
-    def check_batch(self, idx: BM25Index, queries, rows, qid: int = 0) -> None:
-        """One query of a search_many answer against a plain search."""
-        q, mode = queries[qid]
+    def check_batch(self, idx: BM25Index, queries, rows) -> None:
+        """The first query of a search_many answer against a plain search."""
+        q, mode = queries[0]
         want = [(int(r["doc_id"]), float(r["score"]))
                 for r in idx.search(q, k=inputs.BATCH_K, mode=mode).collect()]
-        got = [(d, s) for i, d, s in self.corrupt("batch", rows) if i == qid]
-        self.check(f"search_many query {qid} {q!r} vs search", same_ranking(got, want))
+        got = [(d, s) for i, d, s in self.corrupt("batch", rows) if i == 0]
+        self.check(f"search_many query 0 {q!r} vs search", same_ranking(got, want))
 
     def check_regex(self, corpus_df, pattern: str, rows) -> None:
         rows = self.corrupt("regex", rows)
@@ -183,12 +216,30 @@ class Bench:
 
     # -- setup pieces ----------------------------------------------------------
 
-    def make_corpus(self) -> tuple[str, object]:
-        path = os.path.join(self.work, "corpus")
+    def make_corpus(self, path: str, seed: int):
+        """Generate the corpus as parquet at ``path``; returns it read back."""
         with self.tracer.span("corpus"):
-            generate_corpus_spark(self.spark, self.n_docs, seed=self.seed) \
+            generate_corpus_spark(self.spark, self.n_docs, seed=seed) \
                 .write.mode("overwrite").parquet(path)
-        return path, self.spark.read.parquet(path)
+        return self.spark.read.parquet(path)
+
+    def cached_index(self) -> tuple[str, str]:
+        """(corpus path, index root) of the interactive corpus. The corpus
+        and its full build are made once per engine source tree and kept
+        under the cache directory; every run reads the corpus there and
+        searches a copy of the index in its own work directory. The build
+        is timed, every run, by the ingest workload."""
+        key = f"{self.n_docs}-{CORPUS_SEED}-{engine_digest()[:16]}"
+        cached = os.path.join(self.cache, key)
+        if not os.path.isdir(cached):
+            tmp = f"{cached}.tmp{os.getpid()}"
+            shutil.rmtree(tmp, ignore_errors=True)
+            corpus_df = self.make_corpus(os.path.join(tmp, "corpus"), CORPUS_SEED)
+            self.build_all(corpus_df, os.path.join(tmp, "index"))
+            os.rename(tmp, cached)
+        root = os.path.join(self.work, "index")
+        shutil.copytree(os.path.join(cached, "index"), root)
+        return os.path.join(cached, "corpus"), root
 
     def build_all(self, corpus_df, root: str) -> float:
         """BM25 index, trigram index and content store; returns seconds."""
@@ -207,7 +258,7 @@ class Bench:
     def phases(self) -> dict[str, float]:
         """Wall time of the set-up phases, for the diagnostics line."""
         return {f"{n}_s": self.tracer.named(n)[0].seconds
-                for n in ("corpus", "build.bm25", "build.trigram")}
+                for n in ("corpus", "build.bm25", "build.trigram") if self.tracer.named(n)}
 
     def read_layers(self, idx: BM25Index, tri: TrigramIndex, answers: list,
                     patterns: list, source_bytes: int) -> None:
@@ -261,6 +312,8 @@ class Bench:
         pl = self.res.per_layer
         for name in ("bm25", "trigram", "content_store"):
             pl[f"build.{name}_s"] = self.tracer.named(f"build.{name}")[-1].seconds
+        pl["build_docs_per_s"] = self.n_docs / sum(
+            pl[f"build.{name}_s"] for name in ("bm25", "trigram", "content_store"))
         self.source_bytes = source_bytes
 
     def write_layers(self, w: "WriteStats") -> None:
@@ -277,7 +330,7 @@ class Bench:
 
     def host_layers(self) -> None:
         pl = self.res.per_layer
-        pl["host.steal_pct"] = statistics.fmean(self.steal)
+        pl["host.steal_pct"] = statistics.fmean(self.steal.values())
         pl["host.calm_wait_s"] = self.calm_wait_s
         pl["proc.cpu_ms_per_op"] = 1000 * self.window_cpu_s / self.window_ops
 
@@ -338,14 +391,6 @@ def _oracle(corpus_df) -> BM25Oracle:
 
 def _source_bytes(pdf) -> int:
     return int(pdf["content"].str.encode("utf-8").str.len().sum())
-
-
-def _setup_index(b: Bench):
-    """Generate the corpus and read it back; returns (corpus DataFrame,
-    corpus as pandas, its content bytes, index root)."""
-    path, corpus_df = b.make_corpus()
-    pdf = inputs.read_corpus(path)
-    return corpus_df, pdf, _source_bytes(pdf), os.path.join(b.work, "index")
 
 
 def _warm_up(b: Bench, idx: BM25Index, tri: TrigramIndex) -> None:
@@ -436,23 +481,35 @@ def _compact_and_check(b: Bench, root: str, batches: list[Upsert]) -> None:
     b.check("answers before and after compaction", b.corrupt("compact", after) == before)
 
 
+def _batch_qps(b: Bench) -> float:
+    """search_many queries per second of the median batch."""
+    return inputs.BATCH_SIZE / median(b.lat["batch"])
+
+
 def interactive(b: Bench) -> Result:
-    """Set-up: corpus, full build, warm-up. Window: whole cycles of turns
-    (search, results fetch, regex; a search_many batch after every second
-    turn) until ``seconds`` have passed."""
+    """Set-up: the cached corpus and index (built here when the cache
+    misses; always built fresh in a traced run, which reports the build
+    layers), then a warm-up. Window: whole cycles of turns (search,
+    results fetch, regex; a search_many batch after every second turn)
+    until ``seconds`` have passed."""
     t_setup = time.perf_counter()
-    corpus_df, corpus_pdf, source_bytes, root = _setup_index(b)
-    build_s = b.build_all(corpus_df, root)
+    if b.traced:
+        corpus_path, root = os.path.join(b.work, "corpus"), os.path.join(b.work, "index")
+        b.build_all(b.make_corpus(corpus_path, CORPUS_SEED), root)
+    else:
+        corpus_path, root = b.cached_index()
+    corpus_df = b.spark.read.parquet(corpus_path)
     idx = BM25Index.load(b.spark, root)
     tri = TrigramIndex.load(b.spark, root)
     _warm_up(b, idx, tri)
     setup_s = time.perf_counter() - t_setup
+    b.end_setup()
 
     turns = inputs.interactive_turns(b.seed, 1000)
     n_t = len(inputs.TURN_TEMPLATES)
     done: list[tuple] = []  # (turn, search, results, regex, batch queries, batch rows)
     turn_s: list[float] = []
-    with b.window():
+    with b.window("ops"):
         t0 = time.perf_counter()
         while len(done) % n_t or time.perf_counter() - t0 < b.seconds or not done:
             t = turns[len(done)]
@@ -477,21 +534,23 @@ def interactive(b: Bench) -> Result:
         if s is not None and r is not None:
             b.check(f"results ids of {t.query!r} equal search ids",
                     [d for d, _ in b.corrupt("results", r)] == [d for d, _ in s])
-    for t, _, _, g, _, _ in done[:2]:
+    # one regex per template: every triage path, the SCAN tier included
+    for t, _, _, g, _, _ in done[:n_t]:
         if g is not None:
             b.check_regex(corpus_df, t.pattern, g)
     if done[0][5] is not None:
         b.check_batch(idx, done[0][4], done[0][5])
 
+    source_bytes = _source_bytes(inputs.read_corpus(corpus_path))
     res = b.res
     res.e2e = {
         "setup_s": setup_s,
-        "build_docs_per_s": b.n_docs / build_s,
         "op_p50_ms": 1000 * median(turn_s),
-        "batch_qps": inputs.BATCH_SIZE * len(b.lat["batch"]) / sum(b.lat["batch"]),
+        "batch_qps": _batch_qps(b),
         "index_bytes_per_source_byte": dir_bytes(root) / source_bytes,
     }
-    res.diag = {"window_s": window_s, "turns": len(done), "steal_pct": b.steal[0],
+    res.diag = {"window_s": window_s, "turns": len(done), "batches": len(b.lat["batch"]),
+                **{f"steal_{k}_pct": v for k, v in b.steal.items()},
                 "calm_wait_s": b.calm_wait_s, "checks_s": time.perf_counter() - t_checks,
                 **b.phases(), **_p50s(b)}
     if b.traced:
@@ -500,7 +559,7 @@ def interactive(b: Bench) -> Result:
         b.build_layers(source_bytes)
         # the write path is not part of this workload: one upsert and a
         # compaction after the window give its layers a reading
-        batches = _prepare_upserts(b, corpus_pdf, 1)
+        batches = _prepare_upserts(b, inputs.read_corpus(corpus_path), 1)
         w = _upserts(b, root, batches, lambda idx, u: None)
         _compact_and_check(b, root, batches)
         b.write_layers(w)
@@ -508,35 +567,36 @@ def interactive(b: Bench) -> Result:
     return res
 
 
-def ingest(b: Bench, n_upserts: int = 2) -> Result:
-    """Set-up: corpus only. Windows: a full build, then ``n_upserts``
-    upserts of 1% modified plus 0.5% new docs, each followed by a
-    search_many batch on the live view. A fixed number of upserts, not a
-    time budget, keeps the LSM state the same in every run. The traced
-    run adds searches, results fetches and regexes on the final live
-    view, then compacts."""
+def ingest(b: Bench) -> Result:
+    """Set-up: corpus, a fresh full build and the upsert batches. Window:
+    ``N_UPSERTS`` upserts of 1% modified plus 0.5% new docs, each followed
+    by a search_many batch on the live view. The traced run adds searches,
+    results fetches and regexes on the final live view, then compacts."""
     t_setup = time.perf_counter()
-    corpus_df, corpus_pdf, source_bytes, root = _setup_index(b)
-    batches = _prepare_upserts(b, corpus_pdf, n_upserts)
+    corpus_path, root = os.path.join(b.work, "corpus"), os.path.join(b.work, "index")
+    corpus_df = b.make_corpus(corpus_path, b.seed)
+    corpus_pdf = inputs.read_corpus(corpus_path)
+    source_bytes = _source_bytes(corpus_pdf)
+    build_s = b.build_all(corpus_df, root)
+    batches = _prepare_upserts(b, corpus_pdf, N_UPSERTS)
     setup_s = time.perf_counter() - t_setup
-    with b.window():
-        build_s = b.build_all(corpus_df, root)
-    with b.window():
+    b.end_setup()
+    with b.window("upserts"):
         t0 = time.perf_counter()
         w = _upserts(b, root, batches, lambda idx, u: b.batch(idx))
         window_s = time.perf_counter() - t0
-    b.window_ops = 3 * n_upserts
+    b.window_ops = 3 * N_UPSERTS
     res = b.res
     res.e2e = {
         "setup_s": setup_s,
-        "build_docs_per_s": b.n_docs / build_s,
         "op_p50_ms": 1000 * median(b.lat["commit_to_visible"]),
-        "batch_qps": inputs.BATCH_SIZE * len(b.lat["batch"]) / sum(b.lat["batch"]),
+        "batch_qps": _batch_qps(b),
         "index_bytes_per_source_byte": dir_bytes(root) / (source_bytes + w.source_delta),
     }
-    res.diag = {"window_s": window_s, "upserts": n_upserts,
-                "steal_pct": max(b.steal), "calm_wait_s": b.calm_wait_s, **b.phases(),
-                "update_p50_s": median(b.lat["upsert"]), **_p50s(b)}
+    res.diag = {"window_s": window_s, "upserts": N_UPSERTS,
+                **{f"steal_{k}_pct": v for k, v in b.steal.items()},
+                "calm_wait_s": b.calm_wait_s, "build_docs_per_s": b.n_docs / build_s,
+                **b.phases(), "update_p50_s": median(b.lat["upsert"]), **_p50s(b)}
     if b.traced:
         # read-path layers on the live view (base plus delta generations)
         idx = BM25Index.load(b.spark, root)
