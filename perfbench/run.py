@@ -1,6 +1,6 @@
 """Code-search benchmark: one seeded workload per run.
 
-    python3 perfbench/run.py --workload interactive --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload interactive --seed 1 --seconds 8 --trace 0
 
 Run it from the repository root. The last line of standard output is one
 JSON object: {"correct", "attempted", "failed", "metrics"}. With
@@ -27,7 +27,7 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK_ROOT = os.path.join(ROOT, ".perfbench_work")
-CORES = 3  # one of the 4 vCPUs stays with the driver JVM, the Python driver and the OS
+CORES = 2  # two of the 4 vCPUs stay with the driver JVM, the Python driver and the OS
 N_DOCS = 1000
 
 

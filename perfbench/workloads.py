@@ -3,12 +3,12 @@
 ``interactive``  a CLI/MCP user who waits for every answer. Each turn is a
                  top-k search, the same search with its results fetched
                  from the content store, and a trigram-indexed regex grep;
-                 a search_many batch follows every second turn. The index
-                 is read-only here, so it is built once per engine version
-                 and reused (see ``cached_index``).
-``ingest``       a writer: a fresh full build in set-up, then upserts
-                 through the LSM delta path, each followed by a
-                 search_many batch on the live view.
+                 then a search_many batch.
+``ingest``       a writer: upserts through the LSM delta path, each timed
+                 until it is searchable on a freshly loaded handle.
+
+Both start from a copy of one base index, built once per engine version
+and reused (see ``Bench.base_index``).
 
 Each returns a ``Result``. End-to-end metrics come from the untraced run;
 ``per_layer`` is filled only when the run is traced.
@@ -41,8 +41,8 @@ from perfbench.oracle import BM25Oracle, same_ranking
 from perfbench.trace import EventLog, Tracer
 
 SEARCH_K = 10
-# interactive searches a fixed corpus, so its index can be reused across
-# runs; the seed picks the queries
+# both workloads start from the index of one fixed corpus, so it can be
+# reused across runs; the seed picks the queries and the upserts
 CORPUS_SEED = 1
 # upserts per ingest run: a fixed count keeps the LSM state the same in
 # every run, and an odd count gives a median that one upsert cannot set
@@ -201,49 +201,52 @@ class Bench:
 
     # -- answer checks (never inside a timed window) ---------------------------
 
-    def check_batch(self, idx: BM25Index, queries, rows) -> None:
-        """The first query of a search_many answer against a plain search."""
-        q, mode = queries[0]
-        want = [(int(r["doc_id"]), float(r["score"]))
-                for r in idx.search(q, k=inputs.BATCH_K, mode=mode).collect()]
+    def check_batch(self, q: str, want, rows) -> None:
+        """Query 0 of a search_many answer against ``want``, a plain search
+        of the same query at the same k."""
         got = [(d, s) for i, d, s in self.corrupt("batch", rows) if i == 0]
         self.check(f"search_many query 0 {q!r} vs search", same_ranking(got, want))
 
-    def check_regex(self, corpus_df, pattern: str, rows) -> None:
-        rows = self.corrupt("regex", rows)
-        want = sorted(tuple(r) for r in grep(corpus_df, pattern, count_matches=True).collect())
-        self.check(f"regex {pattern!r} vs scan grep", rows == want)
+    def check_regex(self, pattern: str, want, rows) -> None:
+        """A trigram-indexed grep answer against ``want``, the scan grep's."""
+        self.check(f"regex {pattern!r} vs scan grep", self.corrupt("regex", rows) == want)
 
     # -- setup pieces ----------------------------------------------------------
 
-    def make_corpus(self, path: str, seed: int):
-        """Generate the corpus as parquet at ``path``; returns it read back."""
+    def make_corpus(self, path: str):
+        """Generate the base corpus as parquet at ``path``; returns it read
+        back."""
         with self.tracer.span("corpus"):
-            generate_corpus_spark(self.spark, self.n_docs, seed=seed) \
+            generate_corpus_spark(self.spark, self.n_docs, seed=CORPUS_SEED) \
                 .write.mode("overwrite").parquet(path)
         return self.spark.read.parquet(path)
 
-    def cached_index(self) -> tuple[str, str]:
-        """(corpus path, index root) of the interactive corpus. The corpus
-        and its full build are made once per engine source tree and kept
-        under the cache directory; every run reads the corpus there and
-        searches a copy of the index in its own work directory. The build
-        is timed, every run, by the ingest workload."""
+    def base_index(self) -> tuple[str, str]:
+        """(corpus path, index root) of the base corpus. A traced run
+        generates and builds it in its own work directory and so reports
+        the build layers. An untraced run uses the cache: the corpus and
+        its full build are made once per engine source tree and kept under
+        the cache directory; every run reads the corpus there and works on
+        a copy of the index in its own work directory."""
+        if self.traced:
+            corpus_path = os.path.join(self.work, "corpus")
+            root = os.path.join(self.work, "index")
+            self.build_all(self.make_corpus(corpus_path), root)
+            return corpus_path, root
         key = f"{self.n_docs}-{CORPUS_SEED}-{engine_digest()[:16]}"
         cached = os.path.join(self.cache, key)
         if not os.path.isdir(cached):
             tmp = f"{cached}.tmp{os.getpid()}"
             shutil.rmtree(tmp, ignore_errors=True)
-            corpus_df = self.make_corpus(os.path.join(tmp, "corpus"), CORPUS_SEED)
-            self.build_all(corpus_df, os.path.join(tmp, "index"))
+            self.build_all(self.make_corpus(os.path.join(tmp, "corpus")),
+                           os.path.join(tmp, "index"))
             os.rename(tmp, cached)
         root = os.path.join(self.work, "index")
         shutil.copytree(os.path.join(cached, "index"), root)
         return os.path.join(cached, "corpus"), root
 
-    def build_all(self, corpus_df, root: str) -> float:
-        """BM25 index, trigram index and content store; returns seconds."""
-        t0 = time.perf_counter()
+    def build_all(self, corpus_df, root: str) -> None:
+        """BM25 index, trigram index and content store."""
         for name, fn in (
             ("build.bm25", lambda: build_index(self.spark, corpus_df, root)),
             ("build.trigram", lambda: build_trigram_index(self.spark, None, root)),
@@ -251,7 +254,6 @@ class Bench:
         ):
             if self.op(name, fn) is None:
                 raise RuntimeError(f"{name} failed:\n{self.res.errors[-1]}")
-        return time.perf_counter() - t0
 
     # -- metric assembly -------------------------------------------------------
 
@@ -273,6 +275,7 @@ class Bench:
         pl["bm25.plan_ms"] = 1000 * median(lat["search.plan"])
         pl["bm25.collect_ms"] = 1000 * median(lat["search.collect"])
         pl["batch.call_s"] = median(lat["batch"])
+        pl["batch_qps"] = inputs.BATCH_SIZE / median(lat["batch"])
 
         # the result fetch over an already materialised top-k, and the
         # content store's driver-side point read on its own
@@ -393,16 +396,17 @@ def _source_bytes(pdf) -> int:
     return int(pdf["content"].str.encode("utf-8").str.len().sum())
 
 
-def _warm_up(b: Bench, idx: BM25Index, tri: TrigramIndex) -> None:
-    """One untimed call of each kind, on inputs the timed stream never
-    uses: fills the term-dictionary cache, the file listings and the
-    Python worker pool."""
+def _warm_up(b: Bench, idx: BM25Index, tri: TrigramIndex | None = None) -> None:
+    """One untimed search, and with ``tri`` a results fetch, a regex and
+    a search_many, on inputs the timed stream never uses: fills the
+    term-dictionary cache, the file listings and the Python worker pool."""
     seed = b.seed + 1_000_003
     t = inputs.interactive_turns(seed, 1)[0]
     idx.search(t.query, k=SEARCH_K).collect()
-    idx.fetch_search_results(idx.search(t.query, k=SEARCH_K)).collect()
-    tri.grep(None, t.pattern, count_matches=True).collect()
-    idx.search_many(inputs.batch_queries(seed, 0), k=inputs.BATCH_K).collect()
+    if tri is not None:
+        idx.fetch_search_results(idx.search(t.query, k=SEARCH_K)).collect()
+        tri.grep(None, t.pattern, count_matches=True).collect()
+        idx.search_many(inputs.batch_queries(seed, 0), k=inputs.BATCH_K).collect()
 
 
 @dataclass
@@ -435,11 +439,10 @@ def _prepare_upserts(b: Bench, corpus_pdf, n_upserts: int) -> list[Upsert]:
     return out
 
 
-def _upserts(b: Bench, root: str, batches: list[Upsert], reads) -> WriteStats:
+def _upserts(b: Bench, root: str, batches: list[Upsert]) -> WriteStats:
     """Upserts through the LSM delta path, each timed from the call until
     its marker token is searchable on a freshly loaded handle; the marker
-    must return exactly the upserted docs. ``reads(idx, u)`` runs after
-    each commit."""
+    must return exactly the upserted docs."""
     w = WriteStats()
     for u, up in enumerate(batches):
         before = dir_bytes(root)
@@ -465,7 +468,6 @@ def _upserts(b: Bench, root: str, batches: list[Upsert], reads) -> WriteStats:
         w.gens.append(len(idx.gens))
         b.check(f"upsert {u} marker {up.tag!r} doc set",
                 sorted(b.corrupt("marker", got)) == up.want)
-        reads(idx, u)
     return w
 
 
@@ -481,32 +483,31 @@ def _compact_and_check(b: Bench, root: str, batches: list[Upsert]) -> None:
     b.check("answers before and after compaction", b.corrupt("compact", after) == before)
 
 
-def _batch_qps(b: Bench) -> float:
-    """search_many queries per second of the median batch."""
-    return inputs.BATCH_SIZE / median(b.lat["batch"])
-
-
 def interactive(b: Bench) -> Result:
-    """Set-up: the cached corpus and index (built here when the cache
-    misses; always built fresh in a traced run, which reports the build
-    layers), then a warm-up. Window: whole cycles of turns (search,
-    results fetch, regex; a search_many batch after every second turn)
-    until ``seconds`` have passed."""
+    """Set-up: the base index, a warm-up and the reference answers of the
+    checks. Window: whole cycles of turns until ``seconds`` have passed;
+    a turn is a search, a results fetch, a regex and a search_many."""
     t_setup = time.perf_counter()
-    if b.traced:
-        corpus_path, root = os.path.join(b.work, "corpus"), os.path.join(b.work, "index")
-        b.build_all(b.make_corpus(corpus_path, CORPUS_SEED), root)
-    else:
-        corpus_path, root = b.cached_index()
+    corpus_path, root = b.base_index()
     corpus_df = b.spark.read.parquet(corpus_path)
     idx = BM25Index.load(b.spark, root)
     tri = TrigramIndex.load(b.spark, root)
     _warm_up(b, idx, tri)
+    turns = inputs.interactive_turns(b.seed, 1000)
+    n_t = len(inputs.TURN_TEMPLATES)
+    # reference answers, made before the window: their Spark jobs also
+    # warm the JVM up further
+    t_checks = time.perf_counter()
+    oracle = _oracle(corpus_df)
+    regex_want = [sorted(tuple(r) for r in grep(corpus_df, t.pattern, count_matches=True)
+                         .collect()) for t in turns[:n_t]]
+    q0, mode0 = inputs.batch_queries(b.seed, 0)[0]
+    batch_want = [(int(r["doc_id"]), float(r["score"]))
+                  for r in idx.search(q0, k=inputs.BATCH_K, mode=mode0).collect()]
+    checks_s = time.perf_counter() - t_checks
     setup_s = time.perf_counter() - t_setup
     b.end_setup()
 
-    turns = inputs.interactive_turns(b.seed, 1000)
-    n_t = len(inputs.TURN_TEMPLATES)
     done: list[tuple] = []  # (turn, search, results, regex, batch queries, batch rows)
     turn_s: list[float] = []
     with b.window("ops"):
@@ -517,16 +518,15 @@ def interactive(b: Bench) -> Result:
             s = b.search(idx, t.query, t.mode)
             r = b.results(idx, t.query, t.mode)
             g = b.regex(tri, t.pattern)
-            if None not in (s, r, g):
+            q, rows = b.batch(idx)
+            if None not in (s, r, g, rows):
                 turn_s.append(time.perf_counter() - ts)
-            # a search_many batch after every second turn
-            done.append((t, s, r, g, *(b.batch(idx) if len(done) % 2 == 0 else (None, None))))
+            done.append((t, s, r, g, q, rows))
         window_s = time.perf_counter() - t0
-    b.window_ops = 3 * len(done) + len(b.lat["batch"])
+    b.window_ops = 4 * len(done)
 
     # ---- answer checks, outside the window
     t_checks = time.perf_counter()
-    oracle = _oracle(corpus_df)
     for t, s, r, g, _, _ in done:
         if s is not None:
             b.check(f"search {t.query!r} {t.mode} vs BM25 oracle",
@@ -535,23 +535,23 @@ def interactive(b: Bench) -> Result:
             b.check(f"results ids of {t.query!r} equal search ids",
                     [d for d, _ in b.corrupt("results", r)] == [d for d, _ in s])
     # one regex per template: every triage path, the SCAN tier included
-    for t, _, _, g, _, _ in done[:n_t]:
+    for (t, _, _, g, _, _), want in zip(done, regex_want):
         if g is not None:
-            b.check_regex(corpus_df, t.pattern, g)
+            b.check_regex(t.pattern, want, g)
     if done[0][5] is not None:
-        b.check_batch(idx, done[0][4], done[0][5])
+        b.check_batch(q0, batch_want, done[0][5])
+    checks_s += time.perf_counter() - t_checks
 
     source_bytes = _source_bytes(inputs.read_corpus(corpus_path))
     res = b.res
     res.e2e = {
         "setup_s": setup_s,
         "op_p50_ms": 1000 * median(turn_s),
-        "batch_qps": _batch_qps(b),
         "index_bytes_per_source_byte": dir_bytes(root) / source_bytes,
     }
-    res.diag = {"window_s": window_s, "turns": len(done), "batches": len(b.lat["batch"]),
+    res.diag = {"window_s": window_s, "turns": len(done),
                 **{f"steal_{k}_pct": v for k, v in b.steal.items()},
-                "calm_wait_s": b.calm_wait_s, "checks_s": time.perf_counter() - t_checks,
+                "calm_wait_s": b.calm_wait_s, "checks_s": checks_s,
                 **b.phases(), **_p50s(b)}
     if b.traced:
         b.read_layers(idx, tri, [s for _, s, *_ in done],
@@ -560,7 +560,7 @@ def interactive(b: Bench) -> Result:
         # the write path is not part of this workload: one upsert and a
         # compaction after the window give its layers a reading
         batches = _prepare_upserts(b, inputs.read_corpus(corpus_path), 1)
-        w = _upserts(b, root, batches, lambda idx, u: None)
+        w = _upserts(b, root, batches)
         _compact_and_check(b, root, batches)
         b.write_layers(w)
         b.host_layers()
@@ -568,35 +568,33 @@ def interactive(b: Bench) -> Result:
 
 
 def ingest(b: Bench) -> Result:
-    """Set-up: corpus, a fresh full build and the upsert batches. Window:
-    ``N_UPSERTS`` upserts of 1% modified plus 0.5% new docs, each followed
-    by a search_many batch on the live view. The traced run adds searches,
-    results fetches and regexes on the final live view, then compacts."""
+    """Set-up: the base index, the upsert batches and a warm-up search.
+    Window: ``N_UPSERTS`` upserts of 1% modified plus 0.5% new docs. The
+    traced run adds turns (search, results fetch, regex, search_many) on
+    the final live view, then compacts."""
     t_setup = time.perf_counter()
-    corpus_path, root = os.path.join(b.work, "corpus"), os.path.join(b.work, "index")
-    corpus_df = b.make_corpus(corpus_path, b.seed)
+    corpus_path, root = b.base_index()
     corpus_pdf = inputs.read_corpus(corpus_path)
     source_bytes = _source_bytes(corpus_pdf)
-    build_s = b.build_all(corpus_df, root)
     batches = _prepare_upserts(b, corpus_pdf, N_UPSERTS)
+    _warm_up(b, BM25Index.load(b.spark, root))
     setup_s = time.perf_counter() - t_setup
     b.end_setup()
     with b.window("upserts"):
         t0 = time.perf_counter()
-        w = _upserts(b, root, batches, lambda idx, u: b.batch(idx))
+        w = _upserts(b, root, batches)
         window_s = time.perf_counter() - t0
-    b.window_ops = 3 * N_UPSERTS
+    b.window_ops = 2 * N_UPSERTS
     res = b.res
     res.e2e = {
         "setup_s": setup_s,
         "op_p50_ms": 1000 * median(b.lat["commit_to_visible"]),
-        "batch_qps": _batch_qps(b),
         "index_bytes_per_source_byte": dir_bytes(root) / (source_bytes + w.source_delta),
     }
     res.diag = {"window_s": window_s, "upserts": N_UPSERTS,
                 **{f"steal_{k}_pct": v for k, v in b.steal.items()},
-                "calm_wait_s": b.calm_wait_s, "build_docs_per_s": b.n_docs / build_s,
-                **b.phases(), "update_p50_s": median(b.lat["upsert"]), **_p50s(b)}
+                "calm_wait_s": b.calm_wait_s, **b.phases(),
+                "update_p50_s": median(b.lat["upsert"]), **_p50s(b)}
     if b.traced:
         # read-path layers on the live view (base plus delta generations)
         idx = BM25Index.load(b.spark, root)
@@ -606,6 +604,7 @@ def ingest(b: Bench) -> Result:
             answers.append(b.search(idx, t.query, t.mode))
             b.results(idx, t.query, t.mode)
             patterns.append((t.pattern, b.regex(tri, t.pattern)))
+            b.batch(idx)
         b.read_layers(idx, tri, answers, patterns, source_bytes)
         _compact_and_check(b, root, batches)
         b.build_layers(source_bytes)
