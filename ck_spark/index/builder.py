@@ -85,6 +85,9 @@ POSTINGS_SCHEMA = (
     "block_max array<float>, block_last array<long>, avgdl_enc double"
 )
 
+# the term dictionary: one row per term, df summed over segments
+TERM_STATS_SCHEMA = "bucket int, term string, df long, n_segments long"
+
 # doc_map columns, in write order; tfm/posm/content last so narrow readers
 # prune them (parquet scans read only selected columns either way — the
 # order just documents the access classes: identity, stats, token maps,
@@ -635,8 +638,7 @@ def _write_term_stats(spark: SparkSession, paths: IndexPaths) -> int:
         # every group was empty (all-binary / zero-token corpus): no
         # postings dir was ever created — the term dictionary is empty,
         # write it as such instead of failing the read
-        empty = spark.createDataFrame(
-            [], "bucket int, term string, df long, n_segments long")
+        empty = spark.createDataFrame([], TERM_STATS_SCHEMA)
         empty.coalesce(1).write.mode("overwrite").parquet(paths.term_stats)
         return 0
     post = spark.read.parquet(paths.postings)
@@ -786,6 +788,11 @@ def build_index(
     fetch is a seg-pruned, doc_id-sorted narrow read of the index instead
     of a join against a full corpus scan, trigram refresh after updates is
     segment-local, and the query service needs no caller-held corpus."""
+    if build_groups < 1:
+        raise ValueError(
+            "build_groups must be >= 1 (postings are encoded in that many "
+            f"segment groups), got {build_groups!r}"
+        )
     paths = IndexPaths(out_dir)
     os.makedirs(out_dir, exist_ok=True)
     man = Manifest(out_dir)

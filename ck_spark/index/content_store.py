@@ -579,41 +579,30 @@ class ContentStore:
         ids = sorted({int(i) for i in doc_ids})
         if len(ids) > self.LOCAL_FETCH_MAX:
             return None
-        # explicit schema, mirroring _PTR_TABLE_SCHEMA exactly as _ptr_df
-        # does: pyarrow dataset discovery infers from ONE fragment, so on
-        # a pre-format-2 store that later received a packed delta append
-        # it could land on an old file without blk_off and silently hand
+        # explicit schema, the same one _ptr_df reads with: pyarrow
+        # dataset discovery infers from ONE fragment, so on a
+        # pre-format-2 store that later received a packed delta append it
+        # could land on an old file without blk_off and silently hand
         # every packed doc its whole multi-doc block as content
-        import pyarrow as pa
+        from ck_spark.plans.schemas import arrow_dataset
 
-        ptr_schema = pa.schema([
-            ("doc_id", pa.int64()), ("repo", pa.string()),
-            ("path", pa.string()), ("lang", pa.string()),
-            ("file", pa.string()), ("off", pa.int64()),
-            ("clen", pa.int64()), ("blk_off", pa.int64()),
-            ("raw_len", pa.int64()), ("is_binary", pa.bool_()),
-            ("seg", pa.int32()),
-        ])
-        dset = pads.dataset(
-            os.path.join(_store_dir(self.root), PTR_SUBDIR),
-            format="parquet", partitioning="hive", schema=ptr_schema,
-        )
+        dset = arrow_dataset(os.path.join(_store_dir(self.root), PTR_SUBDIR),
+                             _PTR_TABLE_SCHEMA, ("seg",))
         flt = (
             pads.field("seg").isin([int(s) for s in set(segs)])
             & pads.field("doc_id").isin(ids)
         )
         if exclude_binary:
             flt = flt & ~pads.field("is_binary")
-        has_blk = True
         want = ["doc_id", "repo", "path", "lang", "file", "off", "clen",
                 "raw_len", "blk_off"]
         tbl = dset.to_table(columns=want, filter=flt)
         pdf = tbl.to_pandas().reset_index(drop=True)
-        boffs = pdf["blk_off"].fillna(0).astype("int64") if has_blk             else pd.Series(np.zeros(len(pdf), dtype=np.int64))
+        boffs = pdf["blk_off"].fillna(0).astype("int64")
         rlens = pdf["raw_len"].astype("int64")
         contents = np.empty(len(pdf), dtype=object)
         for fname, grp in pdf.groupby("file", sort=False):
-            grp = grp.sort_values(["off", "blk_off"]) if has_blk                 else grp.sort_values("off")
+            grp = grp.sort_values(["off", "blk_off"])
             with open(os.path.join(self.blobs_dir, fname), "rb") as fh:
                 last_off, block = -1, b""
                 for pos, off, clen in zip(grp.index, grp["off"], grp["clen"]):

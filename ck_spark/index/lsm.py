@@ -188,6 +188,54 @@ def live_postings(spark: SparkSession, root: str, meta: dict) -> DataFrame:
     )
 
 
+def postings_datasets(root: str, meta: dict) -> list:
+    """Driver-side twin of live_postings for small reads: one pyarrow
+    dataset per live generation as (gen, dataset), 0 = base, each
+    hive-partitioned over seg (and bucket where bucket is a directory)
+    and read with the Spark table's schema. Listing happens here, so a
+    caller that keeps the list sees one snapshot, like postings_df."""
+    from ck_spark.index.builder import POSTINGS_SCHEMA
+    from ck_spark.plans.schemas import arrow_dataset
+
+    ddl = POSTINGS_SCHEMA + ", seg int, bucket int"
+
+    out = []
+    base = os.path.join(root, "postings")
+    if os.path.isdir(base):
+        out.append((0, arrow_dataset(base, ddl, ("seg", "bucket"))))
+    delta_part = ("seg", "bucket") if delta_bucket_dirs(root, meta) else ("seg",)
+    for g in live_gens(meta):
+        d = delta_postings_dir(root, g)
+        if os.path.isdir(d):  # a pure-removal update writes no postings
+            out.append((g, arrow_dataset(d, ddl, delta_part)))
+    return out
+
+
+_TOMBSTONE_SCHEMA = "gen int, seg int, doc_id long, created int"
+
+
+def tombstone_sets(root: str, meta: dict) -> dict:
+    """Driver-side twin of read_tombstones: (gen, seg) -> sorted dead doc
+    ids, the banned set _seg_grouped's cogroup hands each segment
+    scorer. Empty for an index without generations."""
+    import numpy as np
+    import pyarrow.dataset as pads
+
+    from ck_spark.plans.schemas import arrow_dataset
+
+    gens = live_gens(meta)
+    d = tombstones_dir(root)
+    if not gens or not os.path.isdir(d):
+        return {}
+    pdf = arrow_dataset(d, _TOMBSTONE_SCHEMA, ("created",)).to_table(
+        columns=["gen", "seg", "doc_id"], filter=pads.field("created").isin(gens),
+    ).to_pandas()
+    return {
+        (int(g), int(s)): np.sort(grp["doc_id"].to_numpy(dtype=np.int64))
+        for (g, s), grp in pdf.groupby(["gen", "seg"])
+    }
+
+
 def read_tombstones(spark: SparkSession, root: str, meta: dict) -> DataFrame:
     """(gen, seg, doc_id) of dead document VERSIONS: gen/seg locate the
     generation+segment whose stored rows (doc_map and postings alike)
@@ -202,7 +250,7 @@ def read_tombstones(spark: SparkSession, root: str, meta: dict) -> DataFrame:
             F.col("id").alias("doc_id"),
         )
     return (
-        spark.read.schema("gen int, seg int, doc_id long, created int")
+        spark.read.schema(_TOMBSTONE_SCHEMA)
         .parquet(d)
         .where(F.col("created").isin(gens))
         .select("gen", "seg", "doc_id")

@@ -4,6 +4,8 @@ does this engine."""
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -98,16 +100,46 @@ SPAN = StructType([
 
 
 def empty_df(spark, schema: str):
-    """JVM-only empty DataFrame for a flat 'name type, …' schema string.
+    """Empty DataFrame for a flat 'name type, …' schema string that runs
+    no Spark job.
 
-    spark.createDataFrame([], schema) goes through the python-object
-    local-relation path — defaultParallelism tasks each spinning a Python
-    worker (~4 s cold, ~0.5 s warm, for ZERO rows). range(0)+casts stays
-    entirely JVM-side (~50 ms) and yields the identical schema."""
-    from pyspark.sql import functions as F
-
+    spark.createDataFrame([], schema) (and an EMPTY pandas frame, which
+    skips the Arrow path) goes through the python-object RDD path — one
+    job of defaultParallelism tasks, each spinning a Python worker (~4 s
+    cold, ~0.3 s warm, for ZERO rows); range(0)+casts still runs one job.
+    A constant-false filter over a one-row SELECT optimizes to an empty
+    local relation: collecting it, or any plan over it, is job-free."""
     cols = []
     for part in schema.split(","):
         name, typ = part.strip().rsplit(" ", 1)
-        cols.append(F.lit(None).cast(typ).alias(name))
-    return spark.range(0).select(*cols)
+        cols.append(f"CAST(NULL AS {typ}) AS `{name}`")
+    return spark.sql(f"SELECT {', '.join(cols)} WHERE false")
+
+
+@functools.lru_cache(maxsize=None)
+def _arrow_schema(ddl: str):
+    # pyspark parses the DDL through the JVM (~5-10 ms a call): cache it,
+    # fetch_pred_local builds a dataset on every small result fetch
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(StructType.fromDDL(ddl))
+
+
+def arrow_dataset(path: str, ddl: str, partition_cols: tuple = ()):
+    """pyarrow dataset over a Spark-written parquet table, read with the
+    schema of the DDL string `ddl` — the same string the Spark reader
+    uses, converted by pyspark itself, so the two cannot drift —
+    hive-partitioned over the `partition_cols` directory levels. The
+    schema is explicit because pyarrow's dataset discovery infers from
+    ONE file: a column missing there (an older layout) would be dropped
+    for every file instead of read as null. Listing happens here, so a
+    caller that keeps the dataset reads one snapshot of the table."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+
+    schema = _arrow_schema(ddl)
+    part = pads.partitioning(
+        pa.schema([schema.field(c) for c in partition_cols]), flavor="hive"
+    ) if partition_cols else None
+    return pads.dataset(path, format="parquet", schema=schema,
+                        partitioning=part)

@@ -1,21 +1,34 @@
-"""Distributed BM25 top-k query over the segmented posting index.
+"""BM25 top-k query over the segmented posting index.
 
 Query lifecycle (the rebuild of ck's lexical_search,
-/root/reference/ck-engine/src/lib.rs:729-845):
+ck-engine/src/lib.rs:729-845):
 
   query string → tokenize (same module as index build — rank identity by
-  construction) → term_stats lookup (tiny pruned scan → driver) → idf per
-  term → postings scan pruned to the query terms' hash buckets (parquet
-  partition pruning on `bucket`, row-group predicate on `term`) →
-  groupBy(seg).applyInPandas segment scorer (per-segment top-k heap;
-  exhaustive-DAAT or block-max WAND) → global TakeOrderedAndProject
-  (orderBy(score desc, doc_id).limit(k) — Catalyst's distributed partial
-  top-k merge; the treeReduce analogue with zero custom code).
+  construction) → term_stats lookup (driver-cached dictionary, read with
+  pyarrow) → idf per term → postings read pruned to the query terms' hash
+  buckets (partition pruning on `bucket`, row-group predicate on `term`)
+  → per-segment scorer (per-segment top-k heap; exhaustive-DAAT,
+  block-max WAND or MaxScore) → global top-k (score desc, doc_id).
 
-Shuffle profile per query: only the selected posting rows move (one row
-per (term, segment)), never the corpus. At 10^12 docs the scan is bounded
-by the query terms' posting mass, and each segment task is bounded by the
-segment width chosen at build time.
+Two read tiers run that pipeline with the same segment scorers:
+
+  driver-local  at most LOCAL_POSTINGS_MAX postings read (Σ df of the
+                scanned terms, known before any read, scaled for the
+                dead versions generations still hold), no path scope,
+                no path join: pyarrow reads the pruned postings of
+                every live generation, scoring runs per (gen, seg) with that
+                group's tombstones, and the merged top-k comes back as an
+                already-sorted local DataFrame — zero Spark jobs, and
+                fetch_search_results over it stays job-free too.
+  distributed   everything else: groupBy(seg).applyInPandas (a cogroup
+                with the tombstone / path-scope sets on LSM indexes) →
+                orderBy(score desc, doc_id).limit(k), Catalyst's
+                TakeOrderedAndProject distributed partial top-k merge.
+
+Shuffle profile of the distributed tier: only the selected posting rows
+move (one row per (term, segment)), never the corpus. At 10^12 docs the
+scan is bounded by the query terms' posting mass, and each segment task
+is bounded by the segment width chosen at build time.
 """
 
 from __future__ import annotations
@@ -46,6 +59,23 @@ _POSTING_COLS = [
     "seg", "bucket", "term", "n_docs", "ids_blocks", "tfs_blocks",
     "dls_blocks", "block_max", "block_last", "avgdl_enc",
 ]
+
+# Driver-local read tier: a search that reads at most this many postings
+# (Σ df of the scanned terms from term_stats, scaled up for the dead
+# versions still stored in generations — see _top_k) is scored on the
+# driver — pyarrow reads of the same pruned postings, the same segment
+# kernels, a pandas top-k — and comes back as a local DataFrame, so it
+# runs no Spark job at all. Measured crossover (40k-doc generated corpus
+# built with 4 segments, 4-vCPU host, OR and AND queries of the 1-256
+# most common terms, ids and scores identical in both tiers): with one
+# task per segment at local[4], the distributed tier first won at 1.07M
+# postings (AND, 64 terms: 1.43 s against the driver's 1.52 s); at 0.98M
+# and below the driver was faster in both modes (AND 1.21 s vs 1.24 s,
+# OR 1.36 s vs 1.58 s). At local[2] the driver won at every mass up to
+# 1.08M. The cap sits at that crossover. grep_indexed's driver-side
+# candidate intersection uses the same cap on the kept grams' Σ df; it
+# was faster than the Spark tier at every mass measured, up to 2.26M ids.
+LOCAL_POSTINGS_MAX = 1_000_000
 
 _OR_SCORERS = {
     "exhaustive": _scorer.score_exhaustive_or,
@@ -90,6 +120,23 @@ def _score_boolean_segment(by_term: dict, plan: dict, idfs: dict,
         )
     return _scorer.score_boolean(m, s, n, idfs, avgdl, k1, b, k, allowed,
                                  banned, cache=cache)
+
+
+_NO_ROWS = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
+                        "score": pd.Series(dtype="float64")})
+
+
+def _in_term_order(score_fn):
+    """Hand `score_fn` its segment's posting rows sorted by term. The
+    kernels add per-term contributions in row order, and float addition
+    is order-sensitive in the last bit; a fixed order makes scores
+    independent of scan and shuffle order, so both read tiers agree to
+    the bit."""
+    def ordered(pdf: pd.DataFrame, allowed, banned) -> pd.DataFrame:
+        return score_fn(pdf.sort_values("term", kind="stable", ignore_index=True),
+                        allowed, banned)
+
+    return ordered
 
 
 def _pick_or_scorer(strategy: str, total_postings: int, k: int):
@@ -218,10 +265,12 @@ class BM25Index:
 
     def term_stats(self, terms: list[str]) -> pd.DataFrame:
         """df/bucket lookup for query terms. For small indexes the whole
-        term dictionary is cached driver-side after the first query (the
-        analogue of tantivy keeping the term dict mmap'd); above the cap it
-        stays a pruned parquet read per query — at 10^12 docs the dict is
-        executor-resident data, not driver state."""
+        term dictionary is cached driver-side on the first query (the
+        analogue of tantivy keeping the term dict mmap'd), read with
+        pyarrow — no Spark job, so a freshly loaded handle's first search
+        can stay job-free; above the cap it stays a pruned parquet read
+        per query — at 10^12 docs the dict is executor-resident data, not
+        driver state."""
         from ck_spark.index.lsm import term_stats_path
 
         ts_path = term_stats_path(self.paths.root, self.meta)
@@ -229,15 +278,18 @@ class BM25Index:
             # one attempt per handle: a stored None means "dict exceeds
             # the cap" — without the sentinel a too-big dict would be
             # fully materialized driver-side on EVERY query. When meta
-            # lacks n_terms (legacy/resume), a metadata-only count gates
-            # the toPandas so an oversized dict never reaches the driver.
-            ts = self.spark.read.parquet(ts_path)
+            # lacks n_terms (legacy/resume), a footer-only row count gates
+            # the read so an oversized dict never reaches the driver.
+            from ck_spark.index.builder import TERM_STATS_SCHEMA
+            from ck_spark.plans.schemas import arrow_dataset
+
+            ts = arrow_dataset(ts_path, TERM_STATS_SCHEMA)
             n_terms = self.meta.get("n_terms")
             if n_terms is None:
-                n_terms = ts.count()
+                n_terms = ts.count_rows()
             cache = None
             if n_terms <= self._TERM_CACHE_MAX:
-                pdf = ts.toPandas()
+                pdf = ts.to_table().to_pandas()
                 if len(pdf) <= self._TERM_CACHE_MAX:
                     cache = pdf.set_index("term", drop=False)
             self.__dict__["_term_cache"] = cache
@@ -277,15 +329,18 @@ class BM25Index:
     def _seg_grouped(self, post: DataFrame, score_fn, out_schema: str,
                      allowed_df: DataFrame | None = None) -> DataFrame:
         """Run `score_fn(pdf, allowed, banned) -> pdf` once per segment
-        group of `post`. Gen-less indexes keep the original plans (plain
-        groupBy(seg), cogroup only when scoping). With LSM generations the
+        group of `post`, rows in term order (_in_term_order). Gen-less
+        indexes keep the original plans (plain groupBy(seg), cogroup
+        only when scoping). With LSM generations the
         right side of ONE cogroup carries both the tombstone set
         (ban=True — dead versions whose postings still sit in their
         generation) and the optional path-scope allowed set (ban=False),
         split into the scorer's two filters executor-side: no driver
-        state, no corpus-scale broadcast, rows ∝ tombstones + scope."""
+        state, no corpus-scale broadcast, rows ∝ tombstones + scope.
+        _seg_local is the driver-side twin for small reads."""
         import numpy as np
 
+        score_fn = _in_term_order(score_fn)
         gens = self.gens
         if not gens:
             if allowed_df is None:
@@ -337,6 +392,72 @@ class BM25Index:
             .applyInPandas(cg2, out_schema)
         )
 
+    def _seg_local(self, buckets: list[int], terms: list[str],
+                   cols: list[str], score_fn) -> pd.DataFrame:
+        """Driver-side twin of _seg_grouped for small reads (no path
+        scope): pyarrow reads the same bucket/term-pruned postings of
+        every live generation (lsm.postings_datasets), groups them by
+        (gen, seg) and calls the same `score_fn` with that group's
+        tombstones (lsm.tombstone_sets) as the banned set. Returns the
+        concatenated per-segment top-k rows, unsorted."""
+        import pyarrow.dataset as pads
+
+        from ck_spark.index import lsm
+
+        if "_local_postings" not in self.__dict__:
+            # one listing per handle, the snapshot postings_df also keeps
+            self.__dict__["_local_postings"] = (
+                lsm.postings_datasets(self.paths.root, self.meta),
+                lsm.tombstone_sets(self.paths.root, self.meta),
+            )
+        datasets, tombs = self.__dict__["_local_postings"]
+        score_fn = _in_term_order(score_fn)
+        flt = pads.field("bucket").isin(buckets) & pads.field("term").isin(terms)
+        tops = [_NO_ROWS]
+        for gen, ds in datasets:
+            pdf = ds.to_table(columns=["seg", *cols], filter=flt).to_pandas()
+            for seg, grp in pdf.groupby("seg", sort=True):
+                top = score_fn(grp, None, tombs.get((gen, int(seg))))
+                # an empty frame carries float columns: concatenated with
+                # int64 ids it would round them through float64
+                if len(top):
+                    tops.append(top)
+        return pd.concat(tops, ignore_index=True)
+
+    def _top_k(self, buckets: list[int], terms: list[str], cols: list[str],
+               score_fn, n_postings: int, k: int, normalize: bool,
+               threshold: float | None, with_paths: bool,
+               allowed_df: DataFrame | None) -> DataFrame:
+        """Score the postings of `terms` per segment and cut the global
+        top-k. Tier choice: at most LOCAL_POSTINGS_MAX postings read, no
+        path scope and no path join run on the driver (zero Spark jobs);
+        everything else is the distributed plan.
+
+        `n_postings` is the live Σ df. Dead versions' postings still sit
+        in their generations until compaction and are read before the
+        tombstone ban drops them, so the read is estimated at the index's
+        dead-to-live ratio (meta n_tombstones / n_docs)."""
+        n_dead = int(self.meta.get("n_tombstones") or 0)
+        n_read = n_postings * (1 + n_dead / max(int(self.meta["n_docs"]), 1))
+        if allowed_df is None and not with_paths \
+                and n_read <= LOCAL_POSTINGS_MAX:
+            return self._finish_local(
+                self._seg_local(buckets, terms, cols, score_fn),
+                k, normalize, threshold,
+            )
+        post = (
+            self.postings_df
+            .where(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
+            .select(*self._group_cols(), *cols)
+        )
+        seg_top = self._seg_grouped(post, score_fn, _RESULT_SCHEMA, allowed_df)
+        return self._finish(seg_top, k, normalize, threshold, with_paths)
+
+    def _no_hits(self, k: int, normalize: bool, threshold: float | None,
+                 with_paths: bool) -> DataFrame:
+        return self._finish(_empty_df(self.spark, _RESULT_SCHEMA), k,
+                            normalize, threshold, with_paths)
+
     # -- search ---------------------------------------------------------------
 
     def search(
@@ -360,24 +481,16 @@ class BM25Index:
         ids flow to the segment scorers via a seg-cogrouped doc_map read
         (F3/F4/F7), so scoped top-k is exact, not a post-filter."""
         terms = list(dict.fromkeys(tokenize(query, self.meta["tokenizer_mode"])))
-        spark = self.spark
-        empty = _empty_df(spark, _RESULT_SCHEMA)
         if not terms:
-            return self._finish(empty, k, normalize, threshold, with_paths)
+            return self._no_hits(k, normalize, threshold, with_paths)
 
         ts = self.term_stats(terms)
         idfs = self.idfs(terms, ts=ts)
         if ts.empty or (mode == "and" and len(ts) < len(terms)):
             # conjunctive with any unknown term matches nothing
-            return self._finish(empty, k, normalize, threshold, with_paths)
+            return self._no_hits(k, normalize, threshold, with_paths)
         found_terms = list(ts["term"])
         buckets = sorted(set(int(b) for b in ts["bucket"]))
-
-        post = (
-            self.postings_df
-            .where(F.col("bucket").isin(buckets) & F.col("term").isin(found_terms))
-            .select(*self._group_cols(), *_POSTING_COLS[1:])
-        )
 
         avgdl = float(self.meta["avgdl"])
         k1, b = float(self.meta["k1"]), float(self.meta["b"])
@@ -413,8 +526,9 @@ class BM25Index:
                 .where(path_scope_pred(F.col("path"), include_prefixes, exclude_globs))
                 .select(*self._scope_cols())
             )
-        seg_top = self._seg_grouped(post, score_rows, _RESULT_SCHEMA, allowed_df)
-        return self._finish(seg_top, k, normalize, threshold, with_paths)
+        return self._top_k(buckets, found_terms, _POSTING_COLS[1:], score_rows,
+                           int(ts["df"].sum()), k, normalize, threshold,
+                           with_paths, allowed_df)
 
     def search_query(
         self,
@@ -445,10 +559,8 @@ class BM25Index:
         from ck_spark.query.boolean import parse_query, phrase_adjacency_regex
 
         pq = parse_query(query, self.meta["tokenizer_mode"])
-        spark = self.spark
-        empty = _empty_df(spark, _RESULT_SCHEMA)
         if not pq.positive_terms:
-            return self._finish(empty, k, normalize, threshold, with_paths)
+            return self._no_hits(k, normalize, threshold, with_paths)
         use_positions = bool(self.meta.get("with_positions"))
         if (pq.phrases or pq.neg_phrases) and not use_positions and corpus is None:
             raise ValueError(
@@ -463,7 +575,7 @@ class BM25Index:
         must = list(dict.fromkeys(pq.must + [t for p in pq.phrases for t in p]))
         if any(t not in known for t in must):
             # a required term absent from the corpus matches nothing
-            return self._finish(empty, k, normalize, threshold, with_paths)
+            return self._no_hits(k, normalize, threshold, with_paths)
         should = [t for t in pq.should if t in known]
         must_not = [t for t in pq.must_not if t in known]
         # a negative phrase with any unknown term can never match a doc,
@@ -472,17 +584,11 @@ class BM25Index:
         neg_terms = [t for p in neg_phrases for t in p] if use_positions else []
         scan_terms = list(dict.fromkeys(must + should + must_not + neg_terms))
         if not scan_terms:
-            return self._finish(empty, k, normalize, threshold, with_paths)
-        buckets = sorted(
-            {int(b) for t, b in zip(ts["term"], ts["bucket"]) if t in scan_terms}
-        )
-        post_cols = _POSTING_COLS + (
+            return self._no_hits(k, normalize, threshold, with_paths)
+        scanned = ts[ts["term"].isin(scan_terms)]
+        buckets = sorted({int(b) for b in scanned["bucket"]})
+        post_cols = _POSTING_COLS[1:] + (
             ["pos_blocks"] if use_positions and (pq.phrases or neg_phrases) else []
-        )
-        post = (
-            self.postings_df
-            .where(F.col("bucket").isin(buckets) & F.col("term").isin(scan_terms))
-            .select(*self._group_cols(), *post_cols[1:])
         )
 
         avgdl = float(self.meta["avgdl"])
@@ -556,8 +662,9 @@ class BM25Index:
                 scoped, ["seg", "doc_id"], "inner"
             )
 
-        seg_top = self._seg_grouped(post, score_rows, _RESULT_SCHEMA, allowed_df)
-        return self._finish(seg_top, k, normalize, threshold, with_paths)
+        return self._top_k(buckets, scan_terms, post_cols, score_rows,
+                           int(scanned["df"].sum()), k, normalize, threshold,
+                           with_paths, allowed_df)
 
     def search_many(
         self,
@@ -814,17 +921,21 @@ class BM25Index:
         lines. byte_end counts UTF-8 BYTES (octet_length), not chars.
 
         Scale shape: the ≤k result rows collect driver-side (top-k is
-        driver-sized by definition), their segments derive in pure driver
-        arithmetic (seg = pmod(xxhash64(doc_id), S) — no doc_map scan),
-        and the stored rows are fetched with parsed `seg IN (...) AND
-        doc_id IN (...)` literals. With a content store
-        (index.content_store blobs) the fetch is a narrow pointer lookup
-        + k ranged blob reads — content bytes read ∝ the RESULTS. Without
-        one it falls back to the doc_map parquet, where seg partition
-        pruning still applies but every row group containing a hit is
-        read whole (k hash-spread ids can touch most row groups — build
-        the content store to close that). Requires a store_content index
-        (v6 default)."""
+        driver-sized by definition; a driver-scored search is a local
+        frame, so this collect runs no Spark job), and their segments
+        derive in pure driver arithmetic (seg = pmod(xxhash64(doc_id), S)
+        — no doc_map scan). With a content store (index.content_store
+        blobs) up to its LOCAL_FETCH_MAX the stored rows are read on the
+        driver (pyarrow pointer lookup + k ranged blob reads), the scores
+        and the result order are attached in pandas, and only the
+        preview/line projection runs, over an already-sorted local frame:
+        zero Spark jobs. Larger sets read the store distributed and join
+        the scores back. Without a store the fetch falls back to the
+        doc_map parquet with parsed `seg IN (...) AND doc_id IN (...)`
+        literals: seg partition pruning still applies, but every row
+        group containing a hit is read whole (k hash-spread ids can touch
+        most row groups — build the content store to close that).
+        Requires a store_content index (v6 default)."""
         if not self.meta.get("store_content"):
             raise ValueError(
                 "index was built with store_content=False — stored-content "
@@ -838,59 +949,67 @@ class BM25Index:
         n_seg = int(self.meta["n_segments"])
         # segments derive in pure driver arithmetic (functions/xxh.py is
         # bit-identical to the JVM xxhash64-over-BIGINT) — no Spark job;
-        # the relations below stay SQL text, never python-local rows or
-        # per-value py4j Column.isin literals (both cost seconds at k~10^3)
+        # the distributed path's relations stay SQL text, never per-value
+        # py4j Column.isin literals (seconds at k~10^3)
         from ck_spark.functions.xxh import seg_of_doc_id
+        from ck_spark.index.content_store import FETCH_SCHEMA
 
         segs = sorted({seg_of_doc_id(i, n_seg) for i in ids})
-        pred = (
-            f"seg IN ({','.join(map(str, segs))}) AND "
-            f"doc_id IN ({','.join(map(str, ids))})"
-        )
-        score_rel = self.spark.sql(
-            "SELECT * FROM VALUES "
-            + ",".join(f"({i}L, CAST({scores[i]!r} AS DOUBLE))" for i in ids)
-            + " AS t(doc_id, score)"
-        )
+        store = self.content_store
+        local = store.fetch_pred_local(segs, ids) if store is not None else None
+        if local is not None:
+            local["score"] = local["doc_id"].map(scores)
+            base = self.spark.createDataFrame(
+                local.sort_values(["score", "doc_id"], ascending=[False, True],
+                                  kind="stable", ignore_index=True),
+                FETCH_SCHEMA + ", score double",
+            )
+        else:
+            score_rel = self.spark.sql(
+                "SELECT * FROM VALUES "
+                + ",".join(f"({i}L, CAST({scores[i]!r} AS DOUBLE))" for i in ids)
+                + " AS t(doc_id, score)"
+            )
+            if store is not None:
+                # blob point reads: bytes ∝ the k results
+                src = store.fetch_pred(segs, ids)
+            else:
+                src = self.doc_map_df.where(
+                    f"seg IN ({','.join(map(str, segs))}) AND "
+                    f"doc_id IN ({','.join(map(str, ids))})"
+                )
+            base = src.join(F.broadcast(score_rel), "doc_id")
         from ck_spark.query.results import preview_expr, rust_lines
 
-        lines = rust_lines(F.col("content"))
-        preview = preview_expr(F.col("content"), full_section)
-        store = self.content_store
-        base = None
-        if store is not None:
-            # blob point reads: bytes ∝ the k results (the parquet path
-            # below reads every row group containing a hit — k spread-out
-            # ids can touch most of the content column). k ≤ the local cap
-            # fetches DRIVER-SIDE (pyarrow + ranged reads, zero Spark
-            # jobs) and ships the ≤k rows back via Arrow createDataFrame —
-            # the enrichment expressions below stay identical either way.
-            local = store.fetch_pred_local(segs, ids)
-            if local is not None:
-                from ck_spark.index.content_store import FETCH_SCHEMA
-
-                base = self.spark.createDataFrame(local, FETCH_SCHEMA)
-            else:
-                base = store.fetch_pred(segs, ids)
-        if base is None:
-            base = self.doc_map_df.where(pred)
-        return (
-            base
-            .select(
-                "doc_id", "repo", "path",
-                preview.alias("preview"),
-                F.lit(0).cast("long").alias("byte_start"),
-                F.octet_length("content").cast("long").alias("byte_end"),
-                F.lit(1).cast("int").alias("line_start"),
-                F.size(lines).alias("line_end"),
-                "lang",
-            )
-            .join(F.broadcast(score_rel), "doc_id")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "repo", "path", "score", "preview",
-                    "byte_start", "byte_end", "line_start", "line_end",
-                    "lang")
+        out = base.select(
+            "doc_id", "repo", "path", "score",
+            preview_expr(F.col("content"), full_section).alias("preview"),
+            F.lit(0).cast("long").alias("byte_start"),
+            F.octet_length("content").cast("long").alias("byte_end"),
+            F.lit(1).cast("int").alias("line_start"),
+            F.size(rust_lines(F.col("content"))).alias("line_end"),
+            "lang",
         )
+        if local is not None:
+            return out
+        return out.orderBy(F.desc("score"), F.asc("doc_id"))
+
+    def _finish_local(self, top: pd.DataFrame, k: int, normalize: bool,
+                      threshold: float | None) -> DataFrame:
+        """_finish for driver-scored rows: the same global top-k order,
+        normalization and threshold in pandas. The rows come back already
+        sorted in an Arrow-built local DataFrame, which collects without a
+        Spark job (an orderBy().limit() over it would cost three)."""
+        top = top.sort_values(["score", "doc_id"], ascending=[False, True],
+                              kind="stable").head(max(int(k), 0))
+        if normalize and len(top):
+            top = top.assign(score=top["score"] / top["score"].max())
+        if threshold is not None:
+            top = top[top["score"] >= threshold]
+        if top.empty:  # an empty pandas frame skips the Arrow path
+            return _empty_df(self.spark, _RESULT_SCHEMA)
+        return self.spark.createDataFrame(top.reset_index(drop=True),
+                                          _RESULT_SCHEMA)
 
     def _finish(self, df: DataFrame, k: int, normalize: bool,
                 threshold: float | None, with_paths: bool) -> DataFrame:

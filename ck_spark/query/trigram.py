@@ -291,6 +291,27 @@ def _read_trigram_table(
     return base.unionByName(delta)
 
 
+def _trigram_datasets(root: str, n_apps: int) -> list:
+    """Driver-side twin of _read_trigram_table for small reads: pyarrow
+    datasets of the base table and of each committed delta append (app <
+    n_apps, the marker value the Spark table was read with), read with
+    the Spark table's schema."""
+    import os
+
+    from ck_spark.plans.schemas import arrow_dataset
+
+    # the base listing skips _-prefixed entries (_delta, _gram_stats),
+    # as Spark's partition discovery does
+    out = [arrow_dataset(os.path.join(root, TRIGRAM_DIR),
+                         _TRIGRAM_TABLE_SCHEMA, ("seg", "bucket"))]
+    ddir = _trigram_delta_dir(root)
+    for app in range(n_apps):
+        d = os.path.join(ddir, f"app={app}")
+        if os.path.isdir(d):
+            out.append(arrow_dataset(d, _TRIGRAM_TABLE_SCHEMA, ("seg",)))
+    return out
+
+
 def trigram_index_exists(root: str) -> bool:
     import os
 
@@ -1057,7 +1078,8 @@ class TrigramIndex:
                 f"{TRIGRAM_DIR}/{TRIGRAM_MARKER}) — run build_trigram_index, "
                 "or use the full-scan grep"
             )
-        marker_key = _read_trigram_marker(root).get("gram_key")
+        marker = _read_trigram_marker(root)
+        marker_key = marker.get("gram_key")
         if marker_key != GRAM_KEY:
             # pre-v7 keying (xxhash64%2^24): candidate lookups with the
             # packed-byte keys would silently miss — refuse so callers
@@ -1072,12 +1094,16 @@ class TrigramIndex:
         self.meta = Manifest(root).load_meta()
         self.term_buckets = int(self.meta["term_buckets"])
         self.store_content = bool(self.meta.get("store_content"))
-        self.df = _read_trigram_table(spark, root)
+        n_apps = int(marker.get("n_apps", 0))
+        self.df = _read_trigram_table(spark, root, n_apps=n_apps)
         if cache:
             # hold the (compact, int-keyed) candidate index in executor
             # memory — the Spark analogue of Zoekt's memory-mapped shards;
             # at cluster scale each executor caches its slice
             self.df = self.df.cache()
+        # candidates_local's datasets, listed from the same marker read,
+        # so both candidate tiers of a handle answer from one snapshot
+        self._local_datasets = _trigram_datasets(root, n_apps)
         self._doc_map_df: DataFrame | None = None
         self._gram_stats: dict | None = None
         self._content_store = None
@@ -1128,6 +1154,31 @@ class TrigramIndex:
         """(seg, doc_id) candidates for a flat gram list (all required)
         or a trigram_dnf clause list (per-clause AND, clauses unioned)."""
         return _intersect_candidates(self.df, grams, self.term_buckets)
+
+    def candidates_local(self, grams) -> pd.DataFrame:
+        """Driver-side twin of candidates for small sets (no Spark job):
+        pyarrow reads the same bucket/ghash-pruned rows of the base table
+        and every committed delta append, and each segment intersects
+        with the same _intersect_segment. Returns a pandas (seg, doc_id)
+        frame. It reads every kept gram's whole posting list before any
+        intersection, so callers gate it on posting_mass as well as on the
+        candidate bound. It reads from disk (the OS page cache) even when
+        the handle was loaded with cache=True."""
+        import pyarrow.dataset as pads
+
+        clause_hashes, ghashes = _clause_hashes(grams)
+        buckets = sorted({h % self.term_buckets for h in ghashes})
+        flt = pads.field("bucket").isin(buckets) & pads.field("ghash").isin(ghashes)
+        cols = ["seg", "ghash", "n_docs", "ids_blocks"]
+        rows = pd.concat(
+            [ds.to_table(columns=cols, filter=flt).to_pandas()
+             for ds in self._local_datasets], ignore_index=True,
+        )
+        return pd.concat(
+            [_NO_CANDIDATES, *(_intersect_segment(grp, clause_hashes)
+                               for _, grp in rows.groupby("seg", sort=True))],
+            ignore_index=True,
+        )
 
     def triage_grams(self, grams: list[str]) -> list[str] | str:
         """Zoekt-style gram selection BEFORE any posting decode: rank the
@@ -1225,6 +1276,17 @@ class TrigramIndex:
         vals = [stats.get(gram_hash(g), 0) + delta for g in grams]
         return min(vals) if vals else None
 
+    def posting_mass(self, grams) -> int | None:
+        """Driver-side upper bound on the doc ids candidates_local reads
+        for a flat gram list or a clause list: Σ global df over the
+        distinct ghashes, delta-corrected like estimate_candidates. None
+        without a stats side table."""
+        stats = self.gram_stats
+        if not stats:
+            return None
+        delta = int(_read_trigram_marker(self.root).get("delta_docs", 0))
+        return sum(stats.get(h, 0) + delta for h in _clause_hashes(grams)[1])
+
     def grep(self, corpus: DataFrame | None = None, pattern: str | None = None, **kw):
         """corpus may be None on stored-content (v6) indexes — the scan
         then runs over doc_map's own content column."""
@@ -1263,17 +1325,7 @@ def _normalize_clauses(grams_or_clauses) -> list[list[str]]:
 def _intersect_candidates(
     trigram_df: DataFrame, grams_or_clauses, term_buckets: int
 ) -> DataFrame:
-    from ck_spark.codec import decode_all_blocks
-
-    # gram -> ghash -> bucket, all DRIVER-SIDE (pure-Python xxhash64,
-    # parity-tested against F.xxhash64) — no Spark job just for routing.
-    # Distinct ghashes only: two query grams colliding into one key are one
-    # (sound) constraint. The query is OR-of-ANDs: each clause's posting
-    # lists intersect, clause results union — ONE postings scan covers
-    # every clause's ghashes (single IN filter, still page-skippable).
-    clauses = _normalize_clauses(grams_or_clauses)
-    clause_hashes = [sorted({gram_hash(g) for g in cl}) for cl in clauses]
-    ghashes = sorted(set().union(*clause_hashes)) if clause_hashes else []
+    clause_hashes, ghashes = _clause_hashes(grams_or_clauses)
     buckets = sorted({h % term_buckets for h in ghashes})
 
     post = (
@@ -1281,62 +1333,85 @@ def _intersect_candidates(
         .where(F.col("bucket").isin(buckets) & F.col("ghash").isin(ghashes))
         .select("seg", "ghash", "n_docs", "ids_blocks")
     )
-    empty = pd.DataFrame({
-        "seg": np.empty(0, dtype=np.int32),
-        "doc_id": np.empty(0, dtype=np.int64),
-    })
-
-    def intersect(pdf: pd.DataFrame) -> pd.DataFrame:
-        # a (seg, ghash) key may carry SEVERAL rows: the base row plus
-        # LSM-style delta rows appended by incremental updates. A gram's
-        # doc list is the UNION of its rows (over-inclusion is sound —
-        # the doc_map fetch/regex verify drops stale ids).
-        by_hash = {int(g): grp for g, grp in pdf.groupby("ghash", sort=False)}
-        decoded: dict[int, np.ndarray] = {}
-
-        def ids_of(h: int) -> np.ndarray:
-            if h not in decoded:
-                parts = [decode_all_blocks(b)
-                         for b in by_hash[h]["ids_blocks"]]
-                decoded[h] = parts[0] if len(parts) == 1 else np.unique(
-                    np.concatenate(parts)
-                )
-            return decoded[h]
-
-        results = []
-        for ch in clause_hashes:
-            # some gram absent in this segment -> clause empty here
-            if any(h not in by_hash for h in ch):
-                continue
-            # AND across the clause's ghashes, rarest (summed n_docs) first
-            order = sorted(ch, key=lambda h: by_hash[h]["n_docs"].sum())
-            acc = None
-            for h in order:
-                if acc is not None and acc.size <= PRUNE_STOP:
-                    # further decodes cost more than the over-inclusion
-                    # they remove (extra candidates fail the regex verify)
-                    break
-                ids = ids_of(h)
-                acc = ids if acc is None else np.intersect1d(
-                    acc, ids, assume_unique=True
-                )
-                if acc.size == 0:
-                    break
-            if acc is not None and acc.size:
-                results.append(acc)
-        if not results:
-            return empty
-        union = results[0] if len(results) == 1 else np.unique(
-            np.concatenate(results)
-        )
-        return pd.DataFrame({
-            "seg": np.full(union.size, pdf["seg"].iloc[0], dtype=np.int32),
-            "doc_id": union.astype(np.int64),
-        })
-
     # seg rides along so a stored-content fetch can prune doc_map's seg
     # partitions without recomputing the hash
-    return post.groupBy("seg").applyInPandas(intersect, "seg int, doc_id long")
+    return post.groupBy("seg").applyInPandas(
+        lambda pdf: _intersect_segment(pdf, clause_hashes), "seg int, doc_id long"
+    )
+
+
+def _clause_hashes(grams_or_clauses) -> tuple[list[list[int]], list[int]]:
+    """(per-clause sorted ghashes, all distinct ghashes) — gram routing,
+    all DRIVER-SIDE, no Spark job.
+
+    Distinct ghashes only: two query grams colliding into one key are one
+    (sound) constraint. The query is OR-of-ANDs: each clause's posting
+    lists intersect, clause results union — ONE postings scan covers
+    every clause's ghashes (single IN filter, still page-skippable)."""
+    clauses = _normalize_clauses(grams_or_clauses)
+    clause_hashes = [sorted({gram_hash(g) for g in cl}) for cl in clauses]
+    ghashes = sorted(set().union(*clause_hashes)) if clause_hashes else []
+    return clause_hashes, ghashes
+
+
+_NO_CANDIDATES = pd.DataFrame({
+    "seg": np.empty(0, dtype=np.int32),
+    "doc_id": np.empty(0, dtype=np.int64),
+})
+
+
+def _intersect_segment(pdf: pd.DataFrame,
+                       clause_hashes: list[list[int]]) -> pd.DataFrame:
+    """Candidate (seg, doc_id) rows of ONE segment's gram rows: each
+    clause's posting lists intersect, clause results union.
+
+    A (seg, ghash) key may carry SEVERAL rows: the base row plus
+    LSM-style delta rows appended by incremental updates. A gram's doc
+    list is the UNION of its rows (over-inclusion is sound — the doc_map
+    fetch/regex verify drops stale ids)."""
+    from ck_spark.codec import decode_all_blocks
+
+    by_hash = {int(g): grp for g, grp in pdf.groupby("ghash", sort=False)}
+    decoded: dict[int, np.ndarray] = {}
+
+    def ids_of(h: int) -> np.ndarray:
+        if h not in decoded:
+            parts = [decode_all_blocks(b) for b in by_hash[h]["ids_blocks"]]
+            decoded[h] = parts[0] if len(parts) == 1 else np.unique(
+                np.concatenate(parts)
+            )
+        return decoded[h]
+
+    results = []
+    for ch in clause_hashes:
+        # some gram absent in this segment -> clause empty here
+        if any(h not in by_hash for h in ch):
+            continue
+        # AND across the clause's ghashes, rarest (summed n_docs) first
+        order = sorted(ch, key=lambda h: by_hash[h]["n_docs"].sum())
+        acc = None
+        for h in order:
+            if acc is not None and acc.size <= PRUNE_STOP:
+                # further decodes cost more than the over-inclusion
+                # they remove (extra candidates fail the regex verify)
+                break
+            ids = ids_of(h)
+            acc = ids if acc is None else np.intersect1d(
+                acc, ids, assume_unique=True
+            )
+            if acc.size == 0:
+                break
+        if acc is not None and acc.size:
+            results.append(acc)
+    if not results:
+        return _NO_CANDIDATES
+    union = results[0] if len(results) == 1 else np.unique(
+        np.concatenate(results)
+    )
+    return pd.DataFrame({
+        "seg": np.full(union.size, pdf["seg"].iloc[0], dtype=np.int32),
+        "doc_id": union.astype(np.int64),
+    })
 
 
 def grep_indexed(
@@ -1464,7 +1539,18 @@ def _grep_indexed_impl(
         src = idx.doc_map_df if use_stored else corpus
         return grep(src, pattern, fixed_string, whole_word, ignore_case,
                     topk=topk, count_matches=count_matches)
-    cands = idx.candidates(grams)
+    from ck_spark.query import bm25
+
+    mass = idx.posting_mass(grams) if est_union is not None else None
+    if est_union is not None and est_union <= CANDIDATE_COLLECT_MAX \
+            and mass is not None and mass <= bm25.LOCAL_POSTINGS_MAX:
+        # the bound proves the set is collect-sized and the kept grams'
+        # posting lists are small enough to read on one driver thread
+        # (the BM25 driver tier's cap): intersect on the driver (no Spark
+        # job) instead of collecting a distributed one
+        cands = idx.candidates_local(grams)
+    else:
+        cands = idx.candidates(grams)
 
     if use_stored or idx.store_content:
         # Zoekt-style candidate-only content fetch (even when the caller
@@ -1491,6 +1577,8 @@ def _grep_indexed_impl(
         # (NUL) docs: a doc updated to binary can linger in stale trigram
         # postings, and the union branch below already covers it — the
         # filter keeps it from matching twice.
+        if isinstance(cands, pd.DataFrame):
+            cands = idx.spark.createDataFrame(cands, "seg int, doc_id long")
         scoped = corpus.where(
             ~F.contains("content", F.lit("\x00"))
         ).withColumn("doc_id", doc_id_expr()).join(
@@ -1518,10 +1606,12 @@ def _may_have_binary_docs(meta: dict) -> bool:
     return total != int(n_docs)
 
 
-def _fetch_candidates(dm: DataFrame, cands: DataFrame,
+def _fetch_candidates(dm: DataFrame, cands: "DataFrame | pd.DataFrame",
                       store=None, est: int | None = None,
                       n_docs: int | None = None) -> DataFrame:
-    """Content rows for the candidate (seg, doc_id) set.
+    """Content rows for the candidate (seg, doc_id) set: a Spark frame,
+    or a pandas one already intersected on the driver
+    (TrigramIndex.candidates_local).
 
     Binary (NUL-flagged) docs are excluded from EVERY tier: a doc
     rewritten to binary by an incremental update can linger in stale
@@ -1550,8 +1640,11 @@ def _fetch_candidates(dm: DataFrame, cands: DataFrame,
     narrow = ["repo", "path", "content"]
     nb = ~F.col("is_binary")
     rows = None
-    if est is None or est <= CANDIDATE_COLLECT_MAX:
-        rows = cands.limit(CANDIDATE_COLLECT_MAX + 1).collect()
+    if isinstance(cands, pd.DataFrame):
+        rows = list(zip(cands["seg"].tolist(), cands["doc_id"].tolist()))
+    elif est is None or est <= CANDIDATE_COLLECT_MAX:
+        rows = [(r["seg"], r["doc_id"])
+                for r in cands.limit(CANDIDATE_COLLECT_MAX + 1).collect()]
         if len(rows) > CANDIDATE_COLLECT_MAX:
             rows = None  # est unknown and the probe overflowed
     if rows is None:
@@ -1584,8 +1677,8 @@ def _fetch_candidates(dm: DataFrame, cands: DataFrame,
         return dm.where(nb).select(*narrow)
     if not rows:
         return dm.select(*narrow).limit(0)
-    segs = sorted({r["seg"] for r in rows})
-    ids = sorted(r["doc_id"] for r in rows)
+    segs = sorted({seg for seg, _ in rows})
+    ids = sorted(doc_id for _, doc_id in rows)
     if store is not None:
         # small sets read driver-side (pyarrow + ranged reads — no ptr
         # Spark job) and ship back via Arrow; the regex verify still runs

@@ -169,3 +169,12 @@ def test_doc_len_matches_tokenizer(spark, built):
             assert row["doc_len"] == 0
         else:
             assert row["doc_len"] == len(tokenize(r.content, "code"))
+
+
+@pytest.mark.parametrize("groups", [0, -1])
+def test_build_groups_below_one_is_rejected(tmp_path, groups):
+    # validated before any Spark work or write: no session, no directory
+    out = tmp_path / "index"
+    with pytest.raises(ValueError, match="build_groups must be >= 1"):
+        build_index(None, None, str(out), build_groups=groups)
+    assert not out.exists()

@@ -5,8 +5,11 @@ breadcrumbs fixture at ck-chunk/tests/fixtures/markdown_breadcrumbs.md).
 No Spark needed — the chunker is a pure function."""
 
 import textwrap
+from pathlib import Path
 
 from ck_spark.functions.symbols import chunk_code
+
+FIXTURES = Path(__file__).parent / "fixtures"
 
 PY_SRC = textwrap.dedent('''\
     """Module docstring."""
@@ -203,9 +206,11 @@ def test_haskell_equation_merging():
 
 
 def test_markdown_sections_fixture():
-    """Mirrors ck-chunk/tests/fixtures/markdown_breadcrumbs.md: nested
-    heading ancestry."""
-    src = open("/root/reference/ck-chunk/tests/fixtures/markdown_breadcrumbs.md").read()
+    """Nested heading ancestry over tests/fixtures/markdown_breadcrumbs.md
+    (Project Overview › Usage › Installation, after the reference's
+    fixture of the same name)."""
+    with open(FIXTURES / "markdown_breadcrumbs.md", encoding="utf-8") as f:
+        src = f.read()
     chunks = chunk_code(src, "markdown")
     _spans_are_byte_exact(chunks, src)
     # heading sections exist and the nested one carries its ancestry —
