@@ -120,7 +120,7 @@ LSM_EDIT_MARKER = " lsmfresh lsmfresh update marker"
 
 def documents_index_updated(spark: SparkSession, sf_dir: str) -> BM25Index:
     """The LSM-update contract index: base build over documents, then ONE
-    update_index (strategy='delta' default) with the deterministically
+    update_index (an LSM delta append) with the deterministically
     edited snapshot — removals become tombstones, modified docs a new
     generation. Cached like documents_index; the 'lsm_done' sentinel
     records (version, snapshot) so reruns skip straight to load."""

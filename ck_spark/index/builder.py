@@ -25,18 +25,17 @@ produce only as many segment rows as they have docs — no small-term
 overhead. Query-time intersection stays aligned because every term uses
 the same modulus.
 
-Incremental update (update_index): the segment is the unit of change.
-Docs hash to fixed segments, so an added/modified/removed doc affects
-exactly one segment; only affected segments are re-tokenized and their
-seg=N partitions atomically replaced (tmp-write + directory swap locally;
-one overwritePartitions commit on Iceberg). An update-in-progress marker
-brackets the mutation: a crash between the doc_map swap and the postings
-re-encode is detected on the next load/update and repaired by re-encoding
-the flagged segments from doc_map — postings can never silently stay
-stale. Global stats (N, avgdl, df) are recomputed exactly, so incremental
-and from-scratch builds are rank- and score-identical — asserted in
-tests. This is the scale analogue of ck's manifest-gated incremental
-re-index (ck-index/src/lib.rs:841-906).
+Incremental update (update_index): the tantivy/Lucene segment model
+(index/lsm.py). Only added/modified docs are re-tokenized, into a new
+delta generation; superseded versions become tombstone rows; global
+stats (N, avgdl, df) are maintained arithmetically exactly, so
+incremental and from-scratch builds are rank- and score-identical —
+asserted in tests. One atomic meta write commits a generation.
+Compaction (compact_index) folds generations back into the base through
+the SegmentStore stage/swap protocol (index/format.py), bracketed by a
+compact-in-progress marker that repair_index rolls forward. This is the
+scale analogue of ck's manifest-gated incremental re-index
+(ck-index/src/lib.rs:841-906).
 
 Because different segments may be (re)encoded under different avgdl
 values, every posting row records avgdl_enc; the WAND scorer scales
@@ -340,26 +339,29 @@ def _summarize_and_write_stats(
         )
         .collect()[0]
     )
-    # range(1).select(lit(...)) — NOT spark.createDataFrame(python rows):
-    # a python-object local relation parallelizes into defaultParallelism
-    # tasks, each spinning a Python worker — measured 4+ s for ONE row,
-    # paid on every build/update; the JVM literal row is ~0.2 s
-    avgdl_lit = (
-        F.lit(float(row["avgdl"])) if row["avgdl"] is not None
-        else F.lit(None).cast("double")
-    )
-    stats = spark.range(1).select(
-        F.lit(int(row["n_docs"])).cast("long").alias("n_docs"),
-        avgdl_lit.alias("avgdl"),
-        F.lit(int(row["total_tokens"] or 0)).cast("long").alias("total_tokens"),
-    )
-    stats.coalesce(1).write.mode("overwrite").parquet(paths.corpus_stats)
+    _write_corpus_stats(spark, paths, int(row["n_docs"]), row["avgdl"],
+                        int(row["total_tokens"] or 0))
     out = (int(row["n"]), int(row["nd"]), f"n{row['n']}-h{row['h']}",
            int(row["n_docs"]), float(row["avgdl"] or 0.0),
            int(row["total_tokens"] or 0))
     if build_groups > 0:
         return out + ([int(row[f"gt{g}"] or 0) for g in range(build_groups)],)
     return out
+
+
+def _write_corpus_stats(spark: SparkSession, paths: IndexPaths, n_docs: int,
+                        avgdl: float | None, total_tokens: int) -> None:
+    """The 1-row corpus_stats side table (avgdl None: no indexed doc)."""
+    # range(1).select(lit(...)) — NOT spark.createDataFrame(python rows):
+    # a python-object local relation parallelizes into defaultParallelism
+    # tasks, each spinning a Python worker — measured 4+ s for ONE row,
+    # paid on every build/update; the JVM literal row is ~0.2 s
+    spark.range(1).select(
+        F.lit(n_docs).cast("long").alias("n_docs"),
+        (F.lit(float(avgdl)) if avgdl is not None
+         else F.lit(None).cast("double")).alias("avgdl"),
+        F.lit(total_tokens).cast("long").alias("total_tokens"),
+    ).coalesce(1).write.mode("overwrite").parquet(paths.corpus_stats)
 
 
 def _pairs_df(docs: DataFrame, term_buckets: int) -> DataFrame:
@@ -652,44 +654,31 @@ def _write_term_stats(spark: SparkSession, paths: IndexPaths) -> int:
     return int(obs.get["rows"])
 
 
-def _reencode_segments(
-    spark: SparkSession, paths: IndexPaths, meta: dict, segs: list[int],
-    avgdl: float,
-) -> None:
-    """Drop + rebuild the postings partitions for the given segments from
-    the current doc_map (the repair/update shared path)."""
-    for s in segs:
-        shutil.rmtree(os.path.join(paths.postings, f"seg={s}"), ignore_errors=True)
-    docs_aff = spark.read.parquet(paths.doc_map).where(F.col("seg").isin(list(segs)))
-    pairs_aff = _pairs_df(docs_aff, int(meta["term_buckets"]))
-    _encode_and_write_postings(
-        spark, pairs_aff, paths.postings, avgdl,
-        float(meta["k1"]), float(meta["b"]), int(meta["block_size"]),
-        n_groups=len(segs) * int(meta["term_buckets"]),
-        seg_list=list(segs), term_buckets=int(meta["term_buckets"]),
-    )
-
-
 def repair_index(spark: SparkSession, out_dir: str,
                  store: "SegmentStore | None" = None) -> bool:
-    """Crash recovery: if an update-in-progress marker exists, first finish
-    or roll forward the doc_map segment swap (the rename-aside protocol
-    guarantees every crash point leaves each segment's data in exactly one
-    of real / tmp / .old), then re-derive the flagged segments' postings —
-    postings are a pure function of doc_map, so this converges to a
-    consistent index no matter where in the window the crash landed.
-    A segment whose update was lost entirely simply reverts to its
-    pre-update state; rerunning the update re-detects the diff.
-    Also heals the LSM paths (index/lsm.py): an interrupted compaction
-    (compact_inprogress — the staged fold completed before the marker, so
-    heal always rolls forward) and an interrupted content-store pointer
-    commit (cs_refresh_pending — re-derives the flagged segments from the
-    live view). An interrupted delta APPEND needs no repair at all: the
-    generation only becomes visible at the atomic meta commit, and its
-    orphan directories are GC'd by the next update.
+    """Crash recovery for the brackets an update can leave open:
+    an interrupted compaction (compact_inprogress — the folded doc_map
+    staged completely before the marker was written, so the SegmentStore
+    heal always rolls the swap forward, then postings and the term
+    dictionary are re-derived from the folded doc_map) and an interrupted
+    content-store pointer commit (cs_refresh_pending — re-derives the
+    flagged segments from the live view). An interrupted delta APPEND
+    needs no repair at all: the generation only becomes visible at the
+    atomic meta commit, and its orphan directories are GC'd by the next
+    update.
+
+    An update_inprogress marker can only be left by a crashed
+    segment-rewrite update of older code, which this code cannot finish:
+    raises ValueError asking for a rebuild with build_index.
 
     Returns True if a repair ran."""
     man = Manifest(out_dir)
+    if man.load_marker("update_inprogress") is not None:
+        raise ValueError(
+            f"index at {out_dir} holds the marker of a crashed "
+            "segment-rewrite update (update_inprogress) that this version "
+            "cannot repair; rebuild with build_index"
+        )
     ran = False
     cs_marker = man.load_marker("cs_refresh_pending")
     if cs_marker is not None:
@@ -708,54 +697,8 @@ def repair_index(spark: SparkSession, out_dir: str,
             spark, out_dir, store, man, man.load_meta(), cmarker["tmp"],
             heal=True,
         )
-        return True
-    marker = man.load_marker("update_inprogress")
-    if marker is None:
-        return ran
-    if store is None:
-        from ck_spark.index.format import ParquetDirStore
-
-        store = ParquetDirStore()
-    paths = IndexPaths(out_dir)
-    meta = man.load_meta()
-    tmp_dm = marker.get("tmp") or os.path.join(out_dir, "_tmp_doc_map")
-    store.heal(paths.doc_map, marker["segs"], tmp_dm)
-    store.cleanup(tmp_dm)
-    n, nd, snapshot, n_docs_nb, avgdl, total_tokens = \
-        _summarize_and_write_stats(spark, paths)
-    if n != nd:
-        raise RuntimeError(
-            f"doc_id collision surfaced by repair: {n} rows, {nd} ids"
-        )
-    _reencode_segments(spark, paths, meta, marker["segs"], avgdl)
-    # a trigram index is the same pure function of doc_map content: re-run
-    # the interrupted refresh for the flagged segments (the marker was
-    # dropped at the start of the update window, so until this completes
-    # readers fall back to full-scan grep — never a silent stale miss)
-    from ck_spark.query.trigram import TRIGRAM_DIR, refresh_trigram_segments
-
-    _tri_dir = os.path.join(out_dir, TRIGRAM_DIR)
-    if os.path.exists(_tri_dir):
-        if meta.get("store_content"):
-            refresh_trigram_segments(spark, out_dir, marker["segs"])
-        else:
-            shutil.rmtree(_tri_dir, ignore_errors=True)
-    # content blob store: same pure function of doc_map — re-derive the
-    # flagged segments (its marker was dropped at the start of the update
-    # window, so until this completes readers fetch from parquet)
-    from ck_spark.index.content_store import refresh_content_store_segments
-
-    refresh_content_store_segments(spark, out_dir, marker["segs"])
-    n_terms = _write_term_stats(spark, paths)
-    meta.update({
-        "avgdl": avgdl, "n_docs": n_docs_nb, "total_tokens": total_tokens,
-        "n_terms": int(n_terms), "input_snapshot": snapshot,
-    })
-    man.save_meta(meta)
-    man.clear_marker("update_inprogress")
-    man.complete("repair", int(time.time()), snapshot, 0, n_terms, 0,
-                 lineage=f"crash-repair segs={sorted(marker['segs'])}")
-    return True
+        ran = True
+    return ran
 
 
 def build_index(
@@ -992,7 +935,6 @@ def update_index(
     out_dir: str,
     full_snapshot: bool = True,
     store: "SegmentStore | None" = None,
-    strategy: str = "delta",
 ) -> dict:
     """Incrementally update an existing index.
 
@@ -1001,10 +943,10 @@ def update_index(
     missing doc_id = removed (removal applies only when full_snapshot=True;
     with full_snapshot=False `corpus` is an upsert batch — the streaming
     ingestion mode — and absent docs are left alone). ONLY added/modified
-    docs are re-tokenized; either strategy keeps the updated index
-    result-identical to a from-scratch build (asserted in tests).
+    docs are re-tokenized; the updated index stays result-identical to a
+    from-scratch build (asserted in tests).
 
-    strategy='delta' (default — the tantivy/Lucene segment model,
+    The update is an LSM append (the tantivy/Lucene segment model,
     index/lsm.py): the changed docs are written as a NEW generation
     (doc_map + postings), dead versions become tombstone rows, and the
     global stats (n_docs, avgdl, per-term df, even the manifest's
@@ -1013,16 +955,9 @@ def update_index(
     visible in one atomic meta commit, so a crash anywhere mid-append
     leaves the index at its exact prior state (orphan dirs are GC'd on
     the next update). Compaction folds generations back into the base
-    when lsm.needs_compaction trips.
-
-    strategy='rewrite' (the pre-LSM path, kept for the SegmentStore swap
-    protocol and as the compaction engine): affected seg partitions are
-    rebuilt wholesale and swapped atomically, bracketed by an
-    update-in-progress marker that repair_index knows how to heal. Under
-    hash-scattered doc ids ANY spread-out change marks every segment
-    affected, making this a near-full rewrite — which is exactly why
-    delta is the default. Requires a generation-less index (call
-    compact_index first; done automatically).
+    through `store` (index/format.py) when lsm.needs_compaction trips.
+    A crashed compaction or content-store commit is healed first
+    (repair_index).
 
     Returns UpdateStats-style counters (SURVEY §2.4 A6):
     {added, removed, modified, unchanged, affected_segments, build_ms,
@@ -1046,250 +981,9 @@ def update_index(
             "rebuild with build_index"
         )
     lsm.gc_orphan_gens(out_dir, meta)
-    if strategy == "delta":
-        return _update_delta(
-            spark, corpus, out_dir, full_snapshot, store, man, meta, repaired
-        )
-    if strategy != "rewrite":
-        raise ValueError(f"unknown update strategy {strategy!r}")
-    if lsm.live_gens(meta):
-        # the rewrite path stages against the BASE table only — fold the
-        # delta generations in first so it rewrites the true live view
-        compact_index(spark, out_dir, store=store)
-        meta = man.load_meta()
-    return _update_rewrite(
+    return _update_delta(
         spark, corpus, out_dir, full_snapshot, store, man, meta, repaired
     )
-
-
-def _update_rewrite(
-    spark: SparkSession,
-    corpus: DataFrame,
-    out_dir: str,
-    full_snapshot: bool,
-    store: "SegmentStore",
-    man: Manifest,
-    meta: dict,
-    repaired: bool,
-) -> dict:
-    paths = IndexPaths(out_dir)
-    store_content = bool(meta.get("store_content", False))
-    n_segments = int(meta["n_segments"])
-    mode = meta["tokenizer_mode"]
-    term_buckets = int(meta["term_buckets"])
-    t_start = time.time()
-
-    new_min = corpus.select(
-        doc_id_expr().alias("doc_id"),
-        snapshot_sha_expr(corpus).alias("content_sha256"),
-    ).withColumn("seg", seg_expr(n_segments))
-    old_min = spark.read.parquet(paths.doc_map).select(
-        "doc_id", F.col("content_sha256").alias("old_sha"), "seg"
-    )
-    join_type = "full_outer" if full_snapshot else "left_outer"
-    diff = new_min.alias("n").join(old_min.alias("o"), "doc_id", join_type).select(
-        "doc_id",
-        F.col("n.content_sha256").alias("new_sha"),
-        F.col("o.old_sha").alias("old_sha"),
-        F.coalesce(F.col("n.seg"), F.col("o.seg")).alias("seg"),
-    )
-    # ---- ONE diff pass (same design as the delta path): the corpus-wide
-    # sha2 hash join is the expensive input; the counts + affected segs
-    # ride the write job as observed metrics and the (small) changed-id
-    # set is MATERIALIZED so every downstream consumer — carried-over
-    # rows, fresh tokenize, trigram append, content-store stage —
-    # broadcast-reads it instead of each re-hashing the full corpus
-    # (measured up to 5 evaluations of the lazy diff before this).
-    from pyspark.sql import Observation
-
-    changed_pred = (
-        F.col("old_sha").isNull()
-        | F.col("new_sha").isNull()
-        | (F.col("old_sha") != F.col("new_sha"))
-    )
-    obs_diff = Observation()
-    diff_o = diff.observe(
-        obs_diff,
-        F.sum(F.when(F.col("old_sha").isNull(), 1).otherwise(0)).alias("added"),
-        F.sum(F.when(F.col("new_sha").isNull(), 1).otherwise(0)).alias("removed"),
-        F.sum(
-            F.when(
-                F.col("old_sha").isNotNull()
-                & F.col("new_sha").isNotNull()
-                & (F.col("old_sha") != F.col("new_sha")),
-                1,
-            ).otherwise(0)
-        ).alias("modified"),
-        F.sum(
-            F.when(
-                F.col("old_sha").isNotNull() & (F.col("new_sha") == F.col("old_sha")), 1
-            ).otherwise(0)
-        ).alias("unchanged"),
-        F.collect_set(F.when(changed_pred, F.col("seg"))).alias("affected"),
-    )
-    diff_dir = os.path.join(out_dir, "_rewrite_diff_staging")
-    (
-        diff_o.where(changed_pred)
-        .select(
-            "doc_id",
-            F.col("seg").cast("int").alias("seg"),
-            F.col("old_sha").isNotNull().alias("is_dead"),
-            F.col("new_sha").isNotNull().alias("is_fresh"),
-        )
-        .write.mode("overwrite")
-        .parquet(diff_dir)
-    )
-    counts = obs_diff.get
-    stats = {k: int(counts[k] or 0) for k in ("added", "removed", "modified", "unchanged")}
-    stats["repaired"] = repaired
-
-    affected = sorted(int(s) for s in (counts["affected"] or []))
-    stats["affected_segments"] = affected
-    if not affected:
-        shutil.rmtree(diff_dir, ignore_errors=True)
-        stats["build_ms"] = int((time.time() - t_start) * 1000)
-        return stats
-
-    # ids whose OLD state must be dropped (modified + removed); broadcast-
-    # sized in the common case, and Spark handles the general anti-join.
-    changed_ids = spark.read.parquet(diff_dir)
-    dead = changed_ids.where(F.col("is_dead")).select("doc_id")
-    fresh_ids = changed_ids.where(F.col("is_fresh")).select("doc_id")
-
-    # Tokenize ONLY added/modified docs.
-    fresh_corpus = (
-        corpus.withColumn("doc_id", doc_id_expr())
-        .join(F.broadcast(fresh_ids), "doc_id", "left_semi")
-        .drop("doc_id")
-    )
-    docs_new = _with_doc_columns(fresh_corpus, mode, n_segments)
-
-    # Merge carried-over rows with fresh rows; STAGE first (the merged
-    # plan lazily reads the partitions being replaced), then swap through
-    # the table-format strategy (parquet dirs: rename-aside protocol;
-    # Iceberg: a single overwritePartitions commit — index/format.py).
-    cols = doc_map_cols(store_content)
-    old_dm_kept = (
-        spark.read.parquet(paths.doc_map)
-        .where(F.col("seg").isin(affected))
-        .join(F.broadcast(dead), "doc_id", "left_anti")
-        .select(*cols)
-    )
-    merged = old_dm_kept.unionByName(docs_new.select(*cols))
-    tmp_dm = store.stage(merged, paths.root, len(affected))
-
-    # a trigram candidate index beside this root derives from content and
-    # would go silently STALE (missed grep matches). With stored content
-    # it is refreshed segment-granularly below (same swap unit as the
-    # postings); without, it must be dropped and rebuilt by the caller.
-    from ck_spark.query.trigram import (
-        TRIGRAM_DIR, maybe_compact_trigram, refresh_trigram_append,
-    )
-
-    _tri_dir = os.path.join(out_dir, TRIGRAM_DIR)
-    tri_refresh = os.path.exists(_tri_dir) and store_content
-    if os.path.exists(_tri_dir) and not store_content:
-        shutil.rmtree(_tri_dir, ignore_errors=True)
-
-    if tri_refresh:
-        # LSM delta append, BEFORE the doc_map swap (its plan joins the
-        # caller corpus against the pre-swap doc_map diff — evaluating it
-        # after the swap would read replaced files): grams for ONLY the
-        # added/modified docs. Sound because the trigram index is a
-        # candidate over-approximation — extra entries (old versions of
-        # changed docs, or this append replayed after a crash) are
-        # dropped by the doc_map fetch/regex verify; only MISSING entries
-        # would be a bug, and the append restores cover for all new
-        # content. Under hash-scattered segments a per-segment rebuild
-        # would touch every segment on any spread-out update; the append
-        # touches 2% of content for a 2% update. Compaction is deferred
-        # to after the swap (the rebuilt base must see NEW content).
-        # Crash anywhere inside leaves the completion marker absent —
-        # readers fall back to the full scan, never a silent stale miss.
-        refresh_trigram_append(
-            spark, out_dir,
-            corpus.withColumn("doc_id", doc_id_expr())
-            .join(F.broadcast(fresh_ids), "doc_id", "left_semi")
-            .withColumn("seg", seg_expr(n_segments))
-            .select("doc_id", "seg", "content"),
-            n_fresh=stats["added"] + stats["modified"],
-            allow_compact=False,
-        )
-
-    # ---- mutation window: marker first, clear only after postings+stats
-    # are consistent again (crash => repair_index restores/completes the
-    # swap from the surviving staging/aside state, then re-derives
-    # postings)
-    # content blob store, stage half — MUST evaluate before the swap
-    # (the fresh/changed plans diff the caller corpus against the
-    # PRE-swap doc_map; see stage_content_store_delta). LSM blob append:
-    # compresses only the changed docs' bytes, stages the affected
-    # segments' pointer partitions. Marker moved aside inside — a crash
-    # anywhere in the window leaves readers on the parquet fallback,
-    # never on stale pointers.
-    from ck_spark.index.content_store import (
-        COMPACT, build_content_store, commit_content_store_delta,
-        stage_content_store_delta,
-    )
-
-    # light projection for the blob stage: it needs content + identity
-    # columns only, and mapInArrow inside docs_new is a pruning barrier
-    # that would re-tokenize the fresh docs just to throw the maps away
-    fresh_light = (
-        fresh_corpus.withColumn("doc_id", doc_id_expr())
-        .withColumn("seg", seg_expr(n_segments))
-        .withColumn("is_binary", F.contains("content", F.lit("\x00")))
-    )
-    cs_stage = stage_content_store_delta(
-        spark, out_dir, affected,
-        fresh_light,
-        dead.unionByName(fresh_ids).distinct(),
-        stats["added"] + stats["modified"],
-    )
-
-    man.save_marker(
-        "update_inprogress",
-        {"segs": affected, "tmp": tmp_dm, "ts": time.time()},
-    )
-
-    store.swap(paths.doc_map, affected, tmp_dm)
-    store.cleanup(tmp_dm)
-
-    n, nd, snapshot, n_docs_nb, avgdl, total_tokens = \
-        _summarize_and_write_stats(spark, paths)
-    if n != nd:
-        raise RuntimeError(
-            f"doc_id collision introduced by update: {n} rows, {nd} ids"
-        )
-
-    _reencode_segments(spark, paths, meta, affected, avgdl)
-    if tri_refresh:
-        maybe_compact_trigram(spark, out_dir)
-    # content blob store, commit half (pure renames) — or the deferred
-    # compaction, which must see the POST-swap doc_map
-    if cs_stage == COMPACT:
-        build_content_store(spark, out_dir)
-    elif cs_stage is not None:
-        commit_content_store_delta(
-            spark, out_dir, affected, *cs_stage,
-            n_change=stats["added"] - stats["removed"],
-        )
-    n_terms = _write_term_stats(spark, paths)
-    meta["n_terms"] = int(n_terms)
-
-    meta.update({"avgdl": avgdl, "n_docs": n_docs_nb,
-                 "input_snapshot": snapshot, "total_tokens": total_tokens})
-    man.save_meta(meta)
-    man.clear_marker("update_inprogress")
-    shutil.rmtree(diff_dir, ignore_errors=True)
-    stats["build_ms"] = int((time.time() - t_start) * 1000)
-    man.complete(
-        "update", int(time.time()), snapshot,
-        stats["added"] + stats["modified"], 0, stats["build_ms"],
-        lineage=f"incremental segs={sorted(affected)} "
-                f"+{stats['added']} ~{stats['modified']} -{stats['removed']}",
-    )
-    return stats
 
 
 def _update_delta(
@@ -1302,7 +996,7 @@ def _update_delta(
     meta: dict,
     repaired: bool,
 ) -> dict:
-    """The LSM append path (index/lsm.py; strategy='delta' above).
+    """The LSM append path of update_index (index/lsm.py).
 
     Write volume ∝ the change: one new generation's doc_map + postings
     for the added/modified docs, tombstone rows for the superseded/
@@ -1725,39 +1419,24 @@ def _update_delta(
             .agg(F.countDistinct("doc_id")).collect()[0][0] or 0
         )
 
-    def _run_corpus_stats() -> None:
-        # corpus_stats side table (no query-path readers; informational
-        # for external tooling) — 1-row literal write; written before the
-        # meta commit, which is harmless for an informational table (a
-        # crash leaves it one generation ahead of the meta; any rerun
-        # overwrites it)
-        spark.range(1).select(
-            F.lit(n_docs_nb).cast("long").alias("n_docs"),
-            (F.lit(float(avgdl)) if n_docs_nb > 0
-             else F.lit(None).cast("double")).alias("avgdl"),
-            F.lit(total_tokens).cast("long").alias("total_tokens"),
-        ).coalesce(1).write.mode("overwrite").parquet(paths.corpus_stats)
-
     # the post-diff producers — postings encode, term-dict merge,
-    # trigram append, content-store staging, the collision-check scan and
-    # the 1-row corpus_stats write — write disjoint directories, mutate
-    # only their own marker files, and never touch session conf: run
-    # them concurrently so the chain pays ~max() of their walls instead
-    # of the sum (guide §2.6; each is a small dispatch-heavy job at
-    # delta scale, and at corpus scale the scheduler back-fills tails).
-    with ThreadPoolExecutor(max_workers=6) as _pool:
+    # trigram append, content-store staging and the collision-check scan
+    # — write disjoint directories, mutate only their own marker files,
+    # and never touch session conf: run them concurrently so the chain
+    # pays ~max() of their walls instead of the sum (guide §2.6; each is
+    # a small dispatch-heavy job at delta scale, and at corpus scale the
+    # scheduler back-fills tails).
+    with ThreadPoolExecutor(max_workers=5) as _pool:
         _f_post = _pool.submit(_run_postings)
         _f_ts = _pool.submit(_run_term_stats)
         _f_tri = _pool.submit(_run_trigram)
         _f_cs = _pool.submit(_run_cs_stage)
         _f_nd = _pool.submit(_run_collision_check)
-        _f_cstat = _pool.submit(_run_corpus_stats)
         _f_post.result()
         n_terms = _f_ts.result()
         _f_tri.result()
         cs_stage = _f_cs.result()
         ndist = _f_nd.result()
-        _f_cstat.result()
     _mark("postings_terms_trigram_cs")
     if n_fresh > 0 and int(new_stats["n_new"]) != int(ndist):
         # nothing is committed yet (the meta write below is the single
@@ -1790,6 +1469,11 @@ def _update_delta(
         + int(dead_stats["n_dead"] or 0),
     })
     man.save_meta(meta)
+    # the corpus_stats side table mirrors the COMMITTED meta, so it is
+    # written only after the commit: a crash before it leaves the table
+    # at the prior generation's values, equal to the prior meta
+    _write_corpus_stats(spark, paths, n_docs_nb,
+                        avgdl if n_docs_nb > 0 else None, total_tokens)
 
     if tri_refresh:
         maybe_compact_trigram(spark, out_dir)
@@ -1867,7 +1551,7 @@ def _finish_compact(spark: SparkSession, out_dir: str, store: "SegmentStore",
     # base now IS the live view: retire generations/tombstones FIRST so no
     # reader anti-joins an old gen-0 tombstone against a freshly folded
     # row (queries inside the remaining window are bracketed by the
-    # marker, same consistency model as the rewrite path's update window)
+    # compact-in-progress marker, which load warns on)
     arith_snapshot = meta.get("input_snapshot")
     meta.update({"gens": [], "n_tombstones": 0})
     man.save_meta(meta)
@@ -1882,7 +1566,16 @@ def _finish_compact(spark: SparkSession, out_dir: str, store: "SegmentStore",
             "LSM arithmetic-stats drift: compacted fingerprint "
             f"{snapshot} != maintained {arith_snapshot} — exactness bug"
         )
-    _reencode_segments(spark, paths, meta, all_segs, avgdl)
+    for s in all_segs:
+        shutil.rmtree(os.path.join(paths.postings, f"seg={s}"), ignore_errors=True)
+    term_buckets = int(meta["term_buckets"])
+    _encode_and_write_postings(
+        spark, _pairs_df(spark.read.parquet(paths.doc_map), term_buckets),
+        paths.postings, avgdl,
+        float(meta["k1"]), float(meta["b"]), int(meta["block_size"]),
+        n_groups=len(all_segs) * term_buckets,
+        seg_list=all_segs, term_buckets=term_buckets,
+    )
     n_terms = _write_term_stats(spark, paths)
     meta.update({
         "avgdl": avgdl, "n_docs": n_docs_nb, "n_terms": int(n_terms),

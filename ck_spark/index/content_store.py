@@ -79,8 +79,7 @@ CODEC = "zlib1"  # zlib level 1 blocks: ~3-4x on code, cheap to inflate
 # (seek + inflate setup + Arrow framing) amortizes while a mid-size
 # candidate set still skips most blocks: at ~700 B/doc that is ~12
 # docs/block, so a 4% candidate fraction hits ~39% of blocks instead of
-# the ~93% that 64 KB blocks gave (witnessed in
-# scripts/smalldoc_blob_witness.py).
+# the ~93% that 64 KB blocks gave (witness in BENCH/SCALE_DEMO_R5.md).
 FORMAT = 2
 _PACK_MAX_DOCS = 32
 _PACK_MAX_BYTES = 8 << 10
@@ -365,12 +364,10 @@ def stage_content_store_delta(
     O(affected segments), which under hash-scattered segments is the
     whole corpus.
 
-    MUST run BEFORE the doc_map swap: ``fresh_docs``/``changed_ids`` are
-    plans over the caller's corpus diffed against the PRE-swap doc_map —
-    evaluated after the swap they would see no changes and silently
-    leave stale pointers. All Spark evaluation happens here; the commit
-    half is pure renames. Returns None (no store), COMPACT (caller must
-    build_content_store AFTER the swap), or (stage_dir, delta_docs) to
+    Runs BEFORE update_index's meta commit: all Spark evaluation
+    happens here; the commit half is pure renames. Returns None (no
+    store), COMPACT (caller must build_content_store AFTER the commit, so
+    the rebuild sees the new live view), or (stage_dir, delta_docs) to
     pass to commit_content_store_delta.
 
     Crash protocol: the marker is moved aside first — a crash anywhere
@@ -416,8 +413,8 @@ def commit_content_store_delta(
     stage: str, delta_docs: int, n_change: int = 0,
 ) -> None:
     """Commit half: swap the staged pointer partitions in (pure
-    filesystem renames — safe after the doc_map swap) and restore the
-    marker. The pointer table stays EXACT — stale rows were anti-joined
+    filesystem renames, run after update_index's meta commit) and restore
+    the marker. The pointer table stays EXACT — stale rows were anti-joined
     out at stage time, so a fetch can never return removed or outdated
     content. The marker's informational n_docs updates arithmetically
     (prior ± added-removed) — no count job per update."""
@@ -443,11 +440,12 @@ def refresh_content_store_segments(
     spark: SparkSession, root: str, segs: list[int]
 ) -> None:
     """Re-derive the given segments' blobs + pointers WHOLESALE from the
-    (already swapped) doc_map — the crash-REPAIR hook (repair doesn't
-    know which docs changed, only which segments the interrupted update
-    touched). update_index itself uses the cheaper
-    refresh_content_store_delta. Stale blobs die with their seg dir, so
-    pointers can never reference removed or outdated docs."""
+    live doc_map view — the crash-REPAIR hook for an interrupted pointer
+    commit (cs_refresh_pending: repair doesn't know which docs changed,
+    only which segments the interrupted update touched). update_index
+    itself uses the cheaper stage/commit_content_store_delta pair. Stale
+    blobs die with their seg dir, so pointers can never reference removed
+    or outdated docs."""
     if not os.path.isdir(_store_dir(root)):
         return
     # other segments may still carry delta-appended blobs — keep their

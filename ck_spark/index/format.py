@@ -1,21 +1,20 @@
-"""Table-format strategy: how index tables are written and how segment
-partitions are atomically replaced.
+"""Table-format seam: how compaction (builder.compact_index) stages the
+folded doc_map and atomically replaces the live seg=N partitions.
 
-The SURVEY's production target is an Iceberg catalog (BASELINE.json
-north_star: "materialized as Iceberg side tables", update =
-overwritePartitions commits). This sandbox has no Iceberg runtime, so the
-default strategy is plain parquet directories with a crash-safe
-rename-aside swap protocol; the Iceberg strategy is a thin documented
-mapping onto snapshot commits. update_index/repair_index call ONLY this
-interface — switching formats is a constructor argument, not a rewrite.
+ParquetDirStore is the only implementation: plain parquet directories
+with a crash-safe rename-aside swap. There is no Iceberg store. One
+would have to keep the same contract — `stage` writes the replacement
+durably before the compact-in-progress marker is recorded — because
+repair_index heals an interrupted compaction by rolling the swap
+FORWARD from the staged data and then re-derives postings from the
+swapped doc_map; a store whose stage held the rows only in memory
+would leave nothing to roll forward after a crash.
 
-Crash model of the parquet strategy (what tests/test_kill_resume.py
-SIGKILLs through): every crash point leaves each segment's data in
-exactly one of {real, staging, aside}; `heal` rolls the swap forward from
-whichever survives, and the caller (repair_index) then re-derives the
-postings from doc_map. Iceberg gets this for free: overwritePartitions is
-ONE atomic snapshot commit, so `heal` is a no-op and the in-progress
-marker is only advisory.
+Crash model of ParquetDirStore (tests/test_update.py leaves a
+compaction in each window): every crash point leaves each segment's
+data in exactly one of {real, staging, aside}; `heal` rolls the swap
+forward from whichever survives, and the caller (repair_index) then
+re-derives the postings from doc_map.
 """
 
 from __future__ import annotations
@@ -28,21 +27,21 @@ from pyspark.sql import DataFrame
 
 
 class SegmentStore(ABC):
-    """Strategy for staging + atomically swapping seg=N partitions of the
-    doc_map table (the unit of incremental change)."""
+    """Stages + atomically swaps the seg=N partitions of the doc_map
+    table (compaction's unit of replacement)."""
 
     name: str
 
     @abstractmethod
     def stage(self, df: DataFrame, root: str, n_segments: int) -> str:
-        """Write the replacement rows (partitioned by seg) to a staging
-        location; returns an opaque staging token recorded in the
-        update-in-progress marker."""
+        """Durably write the replacement rows (partitioned by seg) to a
+        staging location; returns an opaque staging token recorded in the
+        compact-in-progress marker."""
 
     @abstractmethod
     def swap(self, doc_map_dir: str, segs: list[int], staging: str) -> None:
         """Atomically (per segment) replace the live partitions with the
-        staged ones and drop segments the update emptied."""
+        staged ones and drop segments the fold emptied."""
 
     @abstractmethod
     def heal(self, doc_map_dir: str, segs: list[int], staging: str) -> None:
@@ -91,7 +90,7 @@ class ParquetDirStore(SegmentStore):
                 os.rename(cand, real)
                 shutil.rmtree(old, ignore_errors=True)
             elif os.path.exists(real):
-                # the update emptied this segment: rename aside FIRST (an
+                # the fold emptied this segment: rename aside FIRST (an
                 # interrupted rmtree would leave a torn partition that
                 # repair would bless), then drop the aside
                 os.rename(real, old)
@@ -104,7 +103,7 @@ class ParquetDirStore(SegmentStore):
             old = _aside(doc_map_dir, s)
             if os.path.exists(cand):
                 # swap never completed for this segment: roll it forward
-                # (cand present => real is pre-update state or absent)
+                # (cand present => real is pre-compaction state or absent)
                 if os.path.exists(real):
                     os.rename(real, old)
                 os.rename(cand, real)
@@ -116,51 +115,3 @@ class ParquetDirStore(SegmentStore):
 
     def cleanup(self, staging: str) -> None:
         shutil.rmtree(staging, ignore_errors=True)
-
-
-class IcebergStore(SegmentStore):
-    """Iceberg mapping (documented; needs an Iceberg catalog on the
-    cluster — not present in this sandbox):
-
-      stage  -> no separate staging table: the replacement DataFrame is
-                held lazily and committed in swap
-      swap   -> df.writeTo(table).overwritePartitions() — ONE atomic
-                snapshot commit replacing exactly the affected seg
-                partitions (readers see old or new, never a mix)
-      heal   -> no-op: an interrupted commit simply never became a
-                snapshot; the marker only tells the caller to re-run
-      cleanup-> no-op (no staging directory)
-
-    Instantiating raises unless pyspark reports an Iceberg catalog, so a
-    mis-configured cluster fails loudly at construction, not mid-swap.
-    """
-
-    name = "iceberg"
-
-    def __init__(self, spark, table: str):
-        self.spark = spark
-        self.table = table
-        if not any(
-            k.startswith("spark.sql.catalog.") and "iceberg" in str(v).lower()
-            for k, v in spark.sparkContext.getConf().getAll()
-        ):
-            raise RuntimeError(
-                "IcebergStore needs an Iceberg catalog configured "
-                "(spark.sql.catalog.* = org.apache.iceberg.spark.SparkCatalog)"
-            )
-        self._pending: DataFrame | None = None
-
-    def stage(self, df: DataFrame, root: str, n_segments: int) -> str:
-        self._pending = df.repartition(max(n_segments, 1), "seg")
-        return f"iceberg:{self.table}"
-
-    def swap(self, doc_map_dir: str, segs: list[int], staging: str) -> None:
-        assert self._pending is not None, "stage() must run before swap()"
-        self._pending.writeTo(self.table).overwritePartitions()
-        self._pending = None
-
-    def heal(self, doc_map_dir: str, segs: list[int], staging: str) -> None:
-        pass  # snapshot isolation: an uncommitted swap never happened
-
-    def cleanup(self, staging: str) -> None:
-        pass

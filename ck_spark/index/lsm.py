@@ -1,9 +1,9 @@
 """LSM delta generations for the main index (doc_map + postings).
 
 The tantivy/Lucene segment model re-expressed for a partitioned parquet
-(or Iceberg) layout — the reference writes each commit as a new
-immutable segment and merges later (tantivy SegmentMeta / merge policy;
-ck rides on it via ck-index/src/lib.rs:841-906). Spark analogue:
+layout — the reference writes each commit as a new immutable segment
+and merges later (tantivy SegmentMeta / merge policy; ck rides on it
+via ck-index/src/lib.rs:841-906). Spark analogue:
 
   root/doc_map/seg=S/                 base (generation 0)
   root/postings/seg=S/bucket=B/       base postings
@@ -14,16 +14,16 @@ ck rides on it via ck-index/src/lib.rs:841-906). Spark analogue:
                                       superseded/removed by update K
 
 Why: doc ids hash across ALL segments, so a spread-out 2% update marks
-every segment affected — the rewrite path then re-writes the whole
-doc_map (with stored content, the whole corpus' bytes) and re-encodes
-every posting. At 100 TB that is a full-corpus write per update. The
-delta path writes data proportional to the CHANGE: new docs land in a
-fresh generation, dead versions become tombstone rows, and global
-statistics are maintained ARITHMETICALLY EXACTLY (see below), so query
-results stay bit-identical to a from-scratch build — asserted in
-tests/test_lsm_update.py.
+every segment affected — replacing affected segments wholesale would
+re-write the whole doc_map (with stored content, the whole corpus'
+bytes) and re-encode every posting. At 100 TB that is a full-corpus
+write per update. This path, update_index's only one, writes data
+proportional to the CHANGE: new docs land in a fresh generation, dead
+versions become tombstone rows, and global statistics are maintained
+ARITHMETICALLY EXACTLY (see below), so query results stay bit-identical
+to a from-scratch build — asserted in tests/test_lsm.py.
 
-Exactness (the property the rewrite path had, kept without its cost):
+Exactness (what a full recompute would give, without its cost):
   n_docs'      = n_docs − dead_nonbinary + new_nonbinary
   total_tokens'= total  − Σ dead doc_len + Σ new doc_len   (exact ints)
   avgdl'       = total'/n_docs'          (same float64 division Spark does)
@@ -31,8 +31,9 @@ Exactness (the property the rewrite path had, kept without its cost):
   fingerprint' = fingerprint ⊕ xor(dead row hashes) ⊕ xor(new row hashes)
                  (bit_xor is self-inverse, so the manifest's corpus
                   fingerprint needs no full scan either)
-Dead docs' term sets come from their stored tfm maps — a doc_id-pruned
-narrow read, never a re-tokenize.
+Dead docs' term sets come from their stored tfm maps, or, when the
+content store exists, from re-tokenizing their old content fetched by
+ranged blob reads (IO ∝ the change; builder._update_delta).
 
 Visibility/commit: a generation is LIVE iff its number is in
 meta["gens"]; meta writes are atomic (tmp+rename), so a crash anywhere
@@ -44,10 +45,11 @@ scorers via a cogrouped per-(gen, seg) banned set — executor-side, no
 driver state, no broadcast of corpus-scale bitsets.
 
 Compaction (deferred merge): when generations or tombstones exceed the
-thresholds, fold everything back into generation 0 through the existing
-SegmentStore stage/swap protocol (builder.compact_index). Until then a
-query pays one extra parquet partition per generation — bounded by
-MAX_GENS.
+thresholds, fold everything back into generation 0 through the
+SegmentStore stage/swap protocol (builder.compact_index,
+index/format.py; a crash inside it is rolled forward by
+builder.repair_index). Until then a query pays one extra parquet
+partition per generation — bounded by MAX_GENS.
 """
 
 from __future__ import annotations

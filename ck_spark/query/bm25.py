@@ -161,32 +161,26 @@ class BM25Index:
 
     @classmethod
     def load(cls, spark: SparkSession, root: str, repair: bool = False) -> "BM25Index":
-        """repair=True additionally heals a crashed update (re-deriving the
-        marker's segments) — pass it ONLY from a context that owns the
-        index exclusively: a concurrent reader repairing while the writer's
-        update is legitimately in flight would clobber the writer's
-        partitions and clear its crash bracket. Owners: update_index
-        (always repairs first) and CkService (single-service root)."""
+        """repair=True additionally heals a crashed compaction or
+        content-store commit (builder.repair_index) — pass it ONLY from a
+        context that owns the index exclusively: a concurrent reader
+        repairing while the writer's update is legitimately in flight
+        would clobber the writer's partitions and clear its crash
+        bracket. Owners: update_index (always repairs first) and
+        CkService (single-service root)."""
         if repair:
             from ck_spark.index.builder import repair_index
 
             repair_index(spark, root)
-        else:
-            man = Manifest(root)
-            inflight = next(
-                (m for m in ("update_inprogress", "compact_inprogress")
-                 if man.load_marker(m) is not None), None,
-            )
-            if inflight is not None:
-                import warnings
+        elif Manifest(root).load_marker("compact_inprogress") is not None:
+            import warnings
 
-                warnings.warn(
-                    f"index at {root} has an in-progress "
-                    f"{inflight.split('_')[0]} (or a crashed one): results "
-                    "may be mid-mutation until the owner repairs it "
-                    "(BM25Index.load(repair=True) / update_index)",
-                    stacklevel=2,
-                )
+            warnings.warn(
+                f"index at {root} has an in-progress compaction (or a "
+                "crashed one): results may be mid-mutation until the owner "
+                "repairs it (BM25Index.load(repair=True) / update_index)",
+                stacklevel=2,
+            )
         meta = Manifest(root).load_meta()
         return cls(spark, IndexPaths(root), meta)
 

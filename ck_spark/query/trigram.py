@@ -265,8 +265,8 @@ def _read_trigram_table(
     n_apps are visible — a crashed partial append (dir present, marker
     never rewritten) is excluded, because a PARTIAL append would be a
     candidate UNDER-approximation (missed matches), the one unsound
-    direction. Callers holding the pre-invalidation marker (repair) pass
-    n_apps explicitly."""
+    direction. A caller that already read the marker (TrigramIndex)
+    passes its n_apps, so every read of the handle sees one snapshot."""
     import os
 
     base = spark.read.schema(_TRIGRAM_TABLE_SCHEMA).parquet(
@@ -384,7 +384,7 @@ BLOB_SCAN_FRACTION = 0.30
 
 # packed (format-2) SMALL-doc stores: candidates are hash-scattered, so a
 # c-candidate fetch hits ~min(c, n_blocks) blocks and block bytes are the
-# IO unit. Measured crossover (scripts/smalldoc_blob_witness.py, ~700 B
+# IO unit. Measured crossover (BENCH/SCALE_DEMO_R5.md, ~700 B
 # docs, 8 KB blocks): the blob tier reads LESS than the scan below ~2.5%
 # candidate fraction (1.8x less at 0.8%, 9.6x at ~0) and more above it —
 # past the crossover the doc_map semi-join (scan-equal IO, candidate-only
@@ -763,18 +763,17 @@ def _encode_and_write_grams(
 GRAM_STATS_DIR = "_gram_stats"  # _-prefixed: invisible to partition discovery
 
 
-def _write_gram_stats(spark: SparkSession, root: str,
-                      n_apps: int | None = None) -> None:
+def _write_gram_stats(spark: SparkSession, root: str) -> None:
     """Persist global per-gram document frequencies beside the postings
-    (the BM25 term_stats analogue): ONE aggregation at build/compact/
-    repair time so query-time gram triage is a driver-side dict lookup —
+    (the BM25 term_stats analogue): ONE aggregation at build/compact
+    time so query-time gram triage is a driver-side dict lookup —
     zero Spark jobs per grep (the previous per-query metadata aggregation
     cost more CPU than the candidate intersection it was optimizing)."""
     import os
 
     out = os.path.join(root, TRIGRAM_DIR, GRAM_STATS_DIR)
     (
-        _read_trigram_table(spark, root, n_apps=n_apps)
+        _read_trigram_table(spark, root)
         .groupBy("ghash").agg(F.sum("n_docs").alias("df"))
         .coalesce(1).write.mode("overwrite").parquet(out)
     )
@@ -982,7 +981,7 @@ def refresh_trigram_append(
 
 def maybe_compact_trigram(spark: SparkSession, root: str) -> int | None:
     """Run the deferred compaction check (update_index calls this AFTER
-    the doc_map swap, so the rebuilt base derives from the NEW content)."""
+    its meta commit, so the rebuilt base derives from the NEW content)."""
     from ck_spark.index.manifest import Manifest
 
     m = _read_trigram_marker(root)
@@ -1001,56 +1000,6 @@ def compact_trigram_index(spark: SparkSession, root: str) -> int:
     invalidate_trigram_marker(root)
     shutil.rmtree(os.path.join(root, TRIGRAM_DIR), ignore_errors=True)
     return build_trigram_index(spark, None, root)
-
-
-def refresh_trigram_segments(
-    spark: SparkSession, root: str, segs: list[int]
-) -> int:
-    """Crash-REPAIR refresh: re-derive the given segments' trigram
-    partitions wholesale from doc_map (repair doesn't know which docs
-    changed, only which segments the interrupted update touched). The
-    seg dirs are dropped first so vanished buckets cannot survive stale;
-    this also folds any delta rows in those segments back into base."""
-    import os
-    import shutil
-
-    from ck_spark.index.manifest import Manifest
-
-    meta = Manifest(root).load_meta()
-    term_buckets = int(meta["term_buckets"])
-    out_dir = os.path.join(root, TRIGRAM_DIR)
-    old = _read_trigram_marker(root)
-    n_apps = int(old.get("n_apps", 0))
-    invalidate_trigram_marker(root)
-    for s in segs:
-        shutil.rmtree(os.path.join(out_dir, f"seg={s}"), ignore_errors=True)
-        # fold these segments' delta rows into the rebuilt base too — the
-        # wholesale re-derive below covers their docs
-        ddir = _trigram_delta_dir(root)
-        if os.path.isdir(ddir):
-            for app in os.listdir(ddir):
-                shutil.rmtree(os.path.join(ddir, app, f"seg={s}"),
-                              ignore_errors=True)
-    from ck_spark.index.lsm import live_doc_map
-
-    docs = (
-        live_doc_map(spark, root, meta)
-        .where(F.col("seg").isin(list(segs)))
-        .select("doc_id", F.col("seg").cast("int").alias("seg"), "content")
-    )
-    if not docs.isEmpty():
-        _encode_and_write_grams(spark, docs, term_buckets, out_dir,
-                                n_segments=int(meta.get("n_segments") or 1))
-    rows = int(_read_trigram_table(spark, root, n_apps=n_apps).count())
-    # stats must be re-derived over the FULL union (remaining delta apps
-    # included — the marker is invalidated right now, so pass n_apps):
-    # the repaired segments may carry grams the build-time stats never
-    # saw, and the EMPTY triage verdict is only sound against stats that
-    # cover every live row, which also lets delta_docs reset to 0
-    _write_gram_stats(spark, root, n_apps=n_apps)
-    _write_trigram_marker(out_dir, rows, term_buckets, delta_docs=0,
-                          n_apps=n_apps)
-    return rows
 
 
 # ---------------------------------------------------------------------------
@@ -1194,7 +1143,7 @@ class TrigramIndex:
         segment for almost no extra pruning). Zoekt ships the same
         heuristic (rarest ngrams per substring).
 
-        Delta soundness: stats are rebuilt at build/compact/repair but NOT
+        Delta soundness: stats are rebuilt at build/compact but NOT
         at delta appends, so with pending deltas (marker delta_docs > 0) a
         gram missing from stats may still exist in the delta — its df is
         then estimated as delta_docs (an upper bound), never declared

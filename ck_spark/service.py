@@ -164,16 +164,21 @@ class CkService:
                                        "build_ms", "status", "lineage")}
                 for r in recs
             ],
-            "update_in_progress": man.load_marker("update_inprogress") is not None,
+            # the brackets an update can leave open: a compaction swap
+            # and the content-store pointer commit after the meta commit
+            "update_in_progress": any(
+                man.load_marker(m) is not None
+                for m in ("compact_inprogress", "cs_refresh_pending")
+            ),
         }
 
     def reindex(self, corpus: DataFrame | None = None,
                 full_snapshot: bool = False) -> dict:
         """Tool: reindex — incremental upsert of the given corpus batch
         (or the service's corpus) into the index. A trigram candidate
-        index beside the root is refreshed segment-granularly by
-        update_index itself (stored-content indexes); position-less
-        legacy layouts have it dropped there instead — either way regex
+        index beside the root gets the fresh docs' grams appended by
+        update_index itself (stored-content indexes); indexes without
+        stored content have it dropped there instead — either way regex
         results can never go silently stale."""
         src = corpus if corpus is not None else self.corpus
         if src is None:

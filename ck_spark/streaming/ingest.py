@@ -5,12 +5,12 @@ The reference has no streaming surface — its "incremental" story is the
 hash-gated batch re-index (ck-index/src/lib.rs:841-906, SURVEY §1.3). At
 100 TB the natural generalization is a streaming source (new/changed
 files landing in object storage or a CDC feed) micro-batched into the
-same segment-granular upsert path:
+same LSM upsert path:
 
   readStream(corpus schema) → foreachBatch(update_index(full_snapshot=False))
 
-Each micro-batch re-tokenizes only its own docs; unchanged docs are
-carried over from the stored pairs partitions. Exactly-once across
+Each micro-batch re-tokenizes only its own docs into a new delta
+generation; unchanged docs are never rewritten. Exactly-once across
 restarts comes from the checkpointLocation + the idempotence of the
 upsert (same sha256 ⇒ no-op), mirroring how the batch build is resumable
 from its manifest.

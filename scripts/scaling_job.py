@@ -76,8 +76,8 @@ def main() -> None:
         # dominates at narrow parallelism) — the default 128m coalescing
         # is kept; the sub-4x doc_map scaling is attributed by
         # --stage-metrics instead (executor run-vs-cpu gap).
-        # NOTE: driver memory is set by the LAUNCHER (scripts/scaling.py /
-        # scaling_harvest.py pass --driver-memory 2g*cores): memory scales
+        # NOTE: driver memory is set by the LAUNCHER (scripts/scaling.py
+        # passes --driver-memory 2g*cores): memory scales
         # WITH the level, as on a real cluster where N executors bring
         # N x memory. An in-process config here would be ignored.
         .config("spark.ui.enabled", "true" if "--stage-metrics" in sys.argv

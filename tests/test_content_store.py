@@ -232,25 +232,30 @@ def test_missing_marker_falls_back_everywhere(spark, stored):
 
 
 def test_repair_restores_content_store(spark, tmp_path):
-    """Crash mid-refresh (marker gone, one segment's blobs/pointers
-    deleted, update-in-progress bracket set): repair_index must re-derive
-    the flagged segments and restore a marker whose fetches are exact."""
+    """Crash between an update's meta commit and its pointer-table commit
+    (cs_refresh_pending set, store marker gone, one segment's blobs and
+    another's pointers lost): repair_index must re-derive the flagged
+    segments from the live view — the new generation included — and
+    restore a marker whose fetches are exact."""
     import os
     import shutil
 
-    from ck_spark.index.builder import build_index, repair_index
+    from ck_spark.index.builder import build_index, repair_index, update_index
+    from ck_spark.index.lsm import live_doc_map
     from ck_spark.index.manifest import Manifest
 
     pdf = generate_corpus(60, seed=11)
-    corpus = spark.createDataFrame(pdf)
     root = str(tmp_path / "idx")
-    build_index(spark, corpus, root, mode="code", n_segments=4,
-                term_buckets=8, resume=False)
+    build_index(spark, spark.createDataFrame(pdf), root, mode="code",
+                n_segments=4, term_buckets=8, resume=False)
     build_content_store(spark, root)
+    pdf2 = pdf.copy()
+    pdf2.loc[pdf2.index[:6], "content"] += "\nqqzz_fresh_after_commit\n"
+    update_index(spark, spark.createDataFrame(pdf2), root)  # delta gen 1
 
     # simulate the crash window: bracket set, marker dropped, seg 0 and 1
     # partially refreshed (blob dir gone for 0, ptr dir gone for 1)
-    Manifest(root).save_marker("update_inprogress", {"segs": [0, 1], "ts": 0})
+    Manifest(root).save_marker("cs_refresh_pending", {"segs": [0, 1]})
     invalidate_content_store_marker(root)
     shutil.rmtree(os.path.join(root, "content_store", "blobs", "seg=0"),
                   ignore_errors=True)
@@ -258,14 +263,16 @@ def test_repair_restores_content_store(spark, tmp_path):
                   ignore_errors=True)
 
     assert repair_index(spark, root) is True
+    assert Manifest(root).load_marker("cs_refresh_pending") is None
     assert content_store_exists(root)
-    dm = spark.read.parquet(root + "/doc_map")
+    dm = live_doc_map(spark, root)
     pairs = dm.select("seg", "doc_id").collect()
     store = ContentStore.load(spark, root)
     got = store.fetch_pred([r["seg"] for r in pairs],
                            [r["doc_id"] for r in pairs])
     cols = ["doc_id", "repo", "path", "lang", "content"]
     assert _rows(got, cols) == _rows(dm.select(*cols), cols)
+    assert sum("qqzz_fresh_after_commit" in r[-1] for r in _rows(got, cols)) == 6
 
 
 def test_fresh_build_invalidates_stale_store(spark, tmp_path):

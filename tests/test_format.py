@@ -1,17 +1,9 @@
-"""Table-format strategy seam (index/format.py): the rewrite/compaction
-path drives the swap ONLY through the SegmentStore interface, so the
-Iceberg path (overwritePartitions commit) is a constructor argument, not
-a rewrite. A fake store records the call protocol.
-
-The protocol tests pass strategy="rewrite" explicitly: the default
-update strategy is the LSM delta append (index/lsm.py — no segment swap,
-its atomicity is the meta pointer commit), while the store seam is
-exercised by rewrite updates and by compaction (test_compaction_protocol
-below)."""
+"""Table-format seam (index/format.py): compaction drives the doc_map
+swap ONLY through the SegmentStore interface. A recording store checks
+the call protocol; a crashing store checks that the next update heals
+through the same interface."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 
@@ -48,32 +40,10 @@ class RecordingStore(SegmentStore):
         return self.inner.cleanup(staging)
 
 
-def test_update_goes_through_store_protocol(spark, tmp_path):
-    root = str(tmp_path / "idx")
-    pdf = generate_corpus(60, seed=4)
-    build_index(spark, spark.createDataFrame(pdf), root, mode="code",
-                n_segments=2, term_buckets=4, build_groups=1)
-    pdf2 = pdf.copy()
-    pdf2.loc[pdf2.index[:5], "content"] = "changed content zebra"
-    store = RecordingStore()
-    stats = update_index(spark, spark.createDataFrame(pdf2), root, store=store,
-                         strategy="rewrite")
-    assert stats["modified"] == 5
-    # protocol: stage -> (marker) -> swap -> cleanup; no heal on clean path
-    assert store.calls[0] == "stage"
-    assert store.calls[1].startswith("swap:")
-    assert store.calls[2] == "cleanup"
-    assert "heal" not in store.calls
-    # results identical to a plain-store update path
-    idx = BM25Index.load(spark, root)
-    assert idx.search("zebra", k=10).count() == 5
-
-
 def test_compaction_goes_through_store_protocol(spark, tmp_path):
-    """compact_index (the LSM fold — builder.compact_index) is the
-    production consumer of the store seam now that delta is the default
-    update strategy: folding generations back into the base must stage →
-    swap → cleanup through the SegmentStore, never raw renames."""
+    """compact_index (the LSM fold) is the consumer of the store seam:
+    folding generations back into the base must stage → swap → cleanup
+    through the SegmentStore, never raw renames."""
     from ck_spark.index.builder import compact_index
 
     root = str(tmp_path / "idxc")
@@ -97,173 +67,52 @@ def test_compaction_goes_through_store_protocol(spark, tmp_path):
     assert idx.search("zebra", k=10).count() == 5
 
 
-def test_iceberg_store_requires_catalog(spark):
-    from ck_spark.index.format import IcebergStore
-
-    with pytest.raises(RuntimeError, match="Iceberg catalog"):
-        IcebergStore(spark, "cat.db.doc_map")
-
-
 def test_fake_commit_store_marker_and_heal(spark, tmp_path):
-    """A store whose swap 'crashes' mid-protocol: the marker stays, and the
-    next update heals through the SAME interface before proceeding."""
+    """A store whose swap 'crashes' mid-compaction: the compact marker
+    stays, and the next update heals through the SAME interface (rolling
+    the staged fold forward) before appending its own generation."""
+    from ck_spark.index import lsm
+    from ck_spark.index.builder import compact_index
+    from ck_spark.index.manifest import Manifest
+
     root = str(tmp_path / "idx2")
     pdf = generate_corpus(50, seed=5)
     build_index(spark, spark.createDataFrame(pdf), root, mode="code",
                 n_segments=2, term_buckets=4, build_groups=1)
+    pdf2 = pdf.copy()
+    pdf2.loc[pdf2.index[:3], "content"] = "crashy update marker"
+    update_index(spark, spark.createDataFrame(pdf2), root)  # delta gen 1
 
     class CrashingStore(RecordingStore):
         def swap(self, doc_map_dir, segs, staging):
             self.calls.append("swap-crash")
             raise RuntimeError("simulated crash mid-swap")
 
-    pdf2 = pdf.copy()
-    pdf2.loc[pdf2.index[:3], "content"] = "crashy update marker"
     crash = CrashingStore()
     with pytest.raises(RuntimeError, match="simulated crash"):
-        update_index(spark, spark.createDataFrame(pdf2), root, store=crash,
-                     strategy="rewrite")
-    from ck_spark.index.manifest import Manifest
+        compact_index(spark, root, store=crash)
+    assert crash.calls == ["stage", "swap-crash"]
+    assert Manifest(root).load_marker("compact_inprogress") is not None
 
-    assert Manifest(root).load_marker("update_inprogress") is not None
-
-    # the next update heals first (heal call observed), then completes
+    # the next update heals first (heal call observed), then appends
+    pdf3 = pdf2.copy()
+    pdf3.loc[pdf3.index[10:12], "content"] = "healed zebraheal content"
     store = RecordingStore()
-    stats = update_index(spark, spark.createDataFrame(pdf2), root, store=store,
-                         strategy="rewrite")
-    assert store.calls[0] == "heal"
-    assert stats["modified"] == 3 or stats["unchanged"] >= 47
-    assert Manifest(root).load_marker("update_inprogress") is None
+    stats = update_index(spark, spark.createDataFrame(pdf3), root, store=store)
+    assert store.calls == ["heal", "cleanup"]
+    assert stats["repaired"] is True and stats["modified"] == 2
+    assert Manifest(root).load_marker("compact_inprogress") is None
+    assert lsm.live_gens(Manifest(root).load_meta()) == [stats["gen"]]
     idx = BM25Index.load(spark, root)
     assert idx.search("crashy", k=10).count() == 3
-
-
-class FakeIcebergStore(SegmentStore):
-    """Contract fake for IcebergStore (index/format.py:119): stage holds
-    the replacement DataFrame lazily; swap is ONE atomic snapshot commit
-    (emulated: materialize the full next table version beside the live
-    one, then a single directory flip — readers see old or new, never a
-    mix); heal/cleanup are no-ops because an uncommitted swap never
-    happened. This tests the documented heal-is-noop convergence claim
-    of the Iceberg mapping without an Iceberg runtime."""
-
-    name = "fake-iceberg"
-
-    def __init__(self):
-        self._pending = None
-        self.calls: list[str] = []
-
-    def stage(self, df, root, n_segments):
-        self.calls.append("stage")
-        self._pending = df
-        return "iceberg:fake.doc_map"
-
-    def swap(self, doc_map_dir, segs, staging):
-        import shutil
-
-        self.calls.append(f"commit:{sorted(segs)}")
-        assert self._pending is not None, "stage() must run before swap()"
-        nxt = doc_map_dir + ".next"
-        shutil.rmtree(nxt, ignore_errors=True)
-        # next snapshot = untouched partitions + staged replacements
-        os.makedirs(nxt)
-        for d in os.listdir(doc_map_dir):
-            if d.startswith("seg=") and int(d.split("=")[1]) not in segs:
-                shutil.copytree(os.path.join(doc_map_dir, d), os.path.join(nxt, d))
-        tmp_stage = doc_map_dir + ".stagewrite"
-        self._pending.write.mode("overwrite").partitionBy("seg").parquet(tmp_stage)
-        for d in os.listdir(tmp_stage):
-            if d.startswith("seg="):
-                os.rename(os.path.join(tmp_stage, d), os.path.join(nxt, d))
-        shutil.rmtree(tmp_stage, ignore_errors=True)
-        # THE atomic commit point (Iceberg: one metadata pointer CAS)
-        old = doc_map_dir + ".old"
-        os.rename(doc_map_dir, old)
-        os.rename(nxt, doc_map_dir)
-        shutil.rmtree(old, ignore_errors=True)
-        self._pending = None
-
-    def heal(self, doc_map_dir, segs, staging):
-        self.calls.append("heal-noop")  # snapshot isolation: nothing to do
-
-    def cleanup(self, staging):
-        self.calls.append("cleanup-noop")
-
-
-def test_fake_iceberg_clean_update_matches_parquet_store(spark, tmp_path):
-    """The same update through the snapshot-commit protocol must yield a
-    search-identical index to the rename-aside parquet protocol."""
-    pdf = generate_corpus(60, seed=6)
-    pdf2 = pdf.copy()
-    pdf2.loc[pdf2.index[:4], "content"] = "iceberg snapshot zebracommitx"
-    roots = {}
-    for name, store in (("pq", ParquetDirStore()), ("ice", FakeIcebergStore())):
-        root = str(tmp_path / name)
-        build_index(spark, spark.createDataFrame(pdf), root, mode="code",
-                    n_segments=2, term_buckets=4, build_groups=1)
-        stats = update_index(spark, spark.createDataFrame(pdf2), root,
-                             store=store, strategy="rewrite")
-        assert stats["modified"] == 4
-        roots[name] = root
-    res = {
-        n: sorted(
-            (r["path"], round(r["score"], 9))
-            for r in BM25Index.load(spark, roots[n])
-            .search("zebracommitx", k=10, with_paths=True).collect()
-        )
-        for n in roots
-    }
-    assert res["pq"] == res["ice"] and len(res["pq"]) == 4
-
-
-def test_fake_iceberg_uncommitted_swap_never_happened(spark, tmp_path):
-    """Crash BEFORE the snapshot commit: the table must be bit-identical
-    to the pre-update state (no partial partitions — the core Iceberg
-    guarantee), heal must be a no-op, and rerunning the update through
-    the same store converges to the updated index."""
-    import hashlib
-
-    root = str(tmp_path / "ice2")
-    pdf = generate_corpus(50, seed=8)
-    build_index(spark, spark.createDataFrame(pdf), root, mode="code",
+    assert idx.search("zebraheal", k=10).count() == 2
+    fresh = str(tmp_path / "fresh")
+    build_index(spark, spark.createDataFrame(pdf3), fresh, mode="code",
                 n_segments=2, term_buckets=4, build_groups=1)
-    dm = os.path.join(root, "doc_map")
 
-    def table_fingerprint():
-        h = hashlib.sha256()
-        for base, _, files in sorted(os.walk(dm)):
-            for f in sorted(files):
-                p = os.path.join(base, f)
-                h.update(os.path.relpath(p, dm).encode())
-                with open(p, "rb") as fh:
-                    h.update(fh.read())
-        return h.hexdigest()
+    def top(r):
+        return [(x["doc_id"], x["score"]) for x in
+                BM25Index.load(spark, r).search("crashy zebraheal def", k=20)
+                .collect()]
 
-    before = table_fingerprint()
-
-    class CrashBeforeCommit(FakeIcebergStore):
-        def swap(self, doc_map_dir, segs, staging):
-            self.calls.append("crash-pre-commit")
-            raise RuntimeError("crash before snapshot commit")
-
-    pdf2 = pdf.copy()
-    pdf2.loc[pdf2.index[:3], "content"] = "postcrashmarkerx content"
-    with pytest.raises(RuntimeError, match="before snapshot"):
-        update_index(spark, spark.createDataFrame(pdf2), root,
-                     store=CrashBeforeCommit(), strategy="rewrite")
-    # uncommitted swap never happened: table bytes untouched
-    assert table_fingerprint() == before
-
-    from ck_spark.index.manifest import Manifest
-
-    assert Manifest(root).load_marker("update_inprogress") is not None
-    store = FakeIcebergStore()
-    stats = update_index(spark, spark.createDataFrame(pdf2), root, store=store,
-                         strategy="rewrite")
-    # heal ran as a no-op through the seam, then the commit applied
-    assert store.calls[0] == "heal-noop"
-    assert any(c.startswith("commit:") for c in store.calls)
-    assert stats["modified"] == 3
-    assert Manifest(root).load_marker("update_inprogress") is None
-    idx = BM25Index.load(spark, root)
-    assert idx.search("postcrashmarkerx", k=10).count() == 3
+    assert top(root) == top(fresh)

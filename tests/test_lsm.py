@@ -1,4 +1,4 @@
-"""LSM delta-generation update path (index/lsm.py; builder strategy='delta').
+"""LSM delta-generation update path (index/lsm.py; builder.update_index).
 
 The contract under test: an updated index is RESULT-IDENTICAL to a
 from-scratch build over the changed corpus — ranks, scores, enrichment,
@@ -258,22 +258,34 @@ def test_removal_only_update(spark, tmp_path):
     assert mi["input_snapshot"] == mf["input_snapshot"]
 
 
-def test_rewrite_strategy_auto_compacts(spark, tmp_path):
-    """strategy='rewrite' on an index carrying generations folds them
-    first, then applies the swap-path update — results still identical."""
-    base = generate_corpus(100, seed=31)
+def test_corpus_stats_follows_the_meta_commit(spark, tmp_path, monkeypatch):
+    """corpus_stats mirrors the committed meta: an update whose meta
+    commit fails must leave it at the prior values, and the next
+    successful update brings it to the new ones."""
+    base = generate_corpus(60, seed=17)
     root = str(tmp_path / "idx")
     build_index(spark, spark.createDataFrame(base), root, mode="code",
-                n_segments=3, term_buckets=8, build_groups=1)
-    c1 = _edit(base, 1)
-    update_index(spark, spark.createDataFrame(c1), root)  # delta gen 1
-    c2 = _edit(c1, 2)
-    stats = update_index(spark, spark.createDataFrame(c2), root,
-                         strategy="rewrite")
-    assert "gen" not in stats
-    meta = Manifest(root).load_meta()
-    assert meta.get("gens", []) == []
-    fresh = str(tmp_path / "fresh")
-    build_index(spark, spark.createDataFrame(c2), fresh, mode="code",
-                n_segments=3, term_buckets=8, build_groups=1)
-    assert _all_results(spark, root) == _all_results(spark, fresh)
+                n_segments=2, term_buckets=4, build_groups=1)
+    corpus_stats = os.path.join(root, "corpus_stats")
+
+    def stats_match_meta():
+        row = spark.read.parquet(corpus_stats).collect()[0]
+        meta = Manifest(root).load_meta()
+        return (row["n_docs"], row["avgdl"], row["total_tokens"]) == (
+            meta["n_docs"], meta["avgdl"], meta["total_tokens"])
+
+    assert stats_match_meta()
+    changed = _edit(base, 1)  # +2 -2 ~4: token totals move
+
+    def failing_commit(self, meta):
+        raise OSError("simulated crash at the meta commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(Manifest, "save_meta", failing_commit)
+        with pytest.raises(OSError, match="meta commit"):
+            update_index(spark, spark.createDataFrame(changed), root)
+    assert Manifest(root).load_meta().get("gens", []) == []
+    assert stats_match_meta()
+
+    stats = update_index(spark, spark.createDataFrame(changed), root)
+    assert stats["gen"] and stats_match_meta()

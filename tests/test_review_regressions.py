@@ -90,9 +90,10 @@ def test_grep_context_window_exact(spark):
 
 
 def test_rewrite_update_refreshes_total_tokens(spark, tmp_path):
-    """A rewrite-strategy update must refresh meta['total_tokens']:
-    a later delta update trusts that value arithmetically, so a stale one
-    silently corrupts avgdl (and every BM25 score after)."""
+    """Compaction — the one path that rewrites the whole base — must
+    refresh meta['total_tokens']: a later delta update trusts that value
+    arithmetically, so a stale one silently corrupts avgdl (and every
+    BM25 score after)."""
     from ck_spark.index import build_index
     from ck_spark.index.builder import update_index
     from ck_spark.index.manifest import Manifest
@@ -105,19 +106,20 @@ def test_rewrite_update_refreshes_total_tokens(spark, tmp_path):
     meta0 = Manifest(root).load_meta()
     assert meta0.get("total_tokens"), "build must persist total_tokens"
 
-    # rewrite update that changes token totals (longer docs + an add)
+    # delta update that changes token totals (longer docs + an add); it
+    # supersedes every doc, so the tombstone share makes it compact
     rows2 = [r + " extra tokens appended here" for r in rows] + [
         "brand new document gamma delta"
     ]
-    update_index(spark, spark.createDataFrame(_corpus(rows2)), root,
-                 strategy="rewrite")
+    stats = update_index(spark, spark.createDataFrame(_corpus(rows2)), root)
+    assert stats.get("compacted") is True
     meta1 = Manifest(root).load_meta()
+    assert meta1["gens"] == []
     assert meta1["total_tokens"] != meta0["total_tokens"]
 
     # delta update on top: avgdl must equal a from-scratch build's
     rows3 = rows2 + ["another fresh doc epsilon zeta eta"]
-    update_index(spark, spark.createDataFrame(_corpus(rows3)), root,
-                 strategy="delta")
+    update_index(spark, spark.createDataFrame(_corpus(rows3)), root)
     fresh_root = str(tmp_path / "fresh")
     build_index(spark, spark.createDataFrame(_corpus(rows3)), fresh_root,
                 mode="code", n_segments=2, term_buckets=4)
@@ -184,8 +186,7 @@ def test_reindex_with_corpus_bootstraps_fresh_root(spark, tmp_path):
 
 def test_load_warns_on_compact_marker(spark, tmp_path):
     """BM25Index.load(repair=False) must warn on a compact_inprogress
-    marker exactly as it does for update_inprogress — mid-compaction
-    base postings are stale in the same way."""
+    marker — mid-compaction base postings may be stale."""
     import warnings
 
     from ck_spark.index import build_index

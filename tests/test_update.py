@@ -136,84 +136,144 @@ def test_rebuild_changed_corpus_no_stale_postings(spark, tmp_path):
     assert res and all(r["doc_id"] in dm_ids for r in res)
 
 
+def _crash_inside_compaction(spark, root):
+    """Leave `root` as a compaction that crashed right after its marker
+    write (builder.compact_index): the folded live view fully staged, the
+    compact_inprogress marker recorded, nothing swapped yet. Returns the
+    index paths and the staging dir."""
+    from ck_spark.index import lsm
+    from ck_spark.index.builder import IndexPaths, doc_map_cols
+    from ck_spark.index.format import ParquetDirStore
+    from ck_spark.index.manifest import Manifest
+
+    man = Manifest(root)
+    meta = man.load_meta()
+    assert lsm.live_gens(meta), "needs delta generations to fold"
+    live = lsm.live_doc_map(spark, root, meta)
+    tmp = ParquetDirStore().stage(
+        live.select(*doc_map_cols(bool(meta.get("store_content")))),
+        root, int(meta["n_segments"]),
+    )
+    man.save_marker("compact_inprogress", {"tmp": tmp, "ts": 0})
+    return IndexPaths(root), tmp
+
+
+def _marked(base, rows, marker):
+    changed = base.copy()
+    changed.loc[changed.index[rows], "content"] += f"\n# {marker}\n"
+    return changed
+
+
 def test_interrupted_update_is_repaired_on_load(spark, tmp_path):
-    """Crash window: doc_map swapped but postings not yet re-encoded. The
-    in-progress marker must trigger a repair on the next load/update, even
-    when a rerun's sha diff sees no changes."""
+    """Crash window inside an update's compaction: doc_map swapped and the
+    generations retired, but one segment's postings wiped and never
+    re-encoded. The compact_inprogress marker must trigger a repair on
+    the next load/update, even when a rerun's sha diff sees no changes."""
     import shutil as _sh
 
-    from ck_spark.index.builder import IndexPaths
+    from ck_spark.index import lsm
+    from ck_spark.index.format import ParquetDirStore
     from ck_spark.index.manifest import Manifest
 
     root = str(tmp_path / "crash")
     base = generate_corpus(80, seed=3)
     build_index(spark, spark.createDataFrame(base), root, mode="code",
                 n_segments=4, term_buckets=4, build_groups=2)
-    ref = _results(BM25Index.load(spark, root), ["parse buffer", "def"])
+    c1 = _marked(base, [1, 2, 3], "first catalyst edit")
+    update_index(spark, spark.createDataFrame(c1), root)  # delta gen 1
+    ref = _results(BM25Index.load(spark, root), ["parse buffer", "def", "catalyst"])
 
-    # simulate the crash state: marker present, one affected seg's postings
-    # wiped (as if the rmtree ran but the re-encode never did)
-    paths = IndexPaths(root)
-    Manifest(root).save_marker("update_inprogress", {"segs": [0, 1], "ts": 0})
+    paths, tmp = _crash_inside_compaction(spark, root)
+    ParquetDirStore().swap(paths.doc_map, list(range(4)), tmp)
+    man = Manifest(root)
+    meta = man.load_meta()
+    meta.update({"gens": [], "n_tombstones": 0})
+    man.save_meta(meta)
     _sh.rmtree(os.path.join(paths.postings, "seg=1"), ignore_errors=True)
 
     idx = BM25Index.load(spark, root, repair=True)  # owner-context repair
-    assert Manifest(root).load_marker("update_inprogress") is None
-    got = _results(idx, ["parse buffer", "def"])
-    assert got == ref
+    assert man.load_marker("compact_inprogress") is None
+    assert _results(idx, ["parse buffer", "def", "catalyst"]) == ref
 
     # and a no-change update on a crashed index repairs too
-    Manifest(root).save_marker("update_inprogress", {"segs": [2], "ts": 0})
-    _sh.rmtree(os.path.join(paths.postings, "seg=2"), ignore_errors=True)
-    stats = update_index(spark, spark.createDataFrame(base), root)
+    c2 = _marked(c1, [40, 41], "second catalyst edit")
+    update_index(spark, spark.createDataFrame(c2), root)  # delta gen 1 again
+    ref2 = _results(BM25Index.load(spark, root), ["parse buffer", "def", "catalyst"])
+    _crash_inside_compaction(spark, root)
+    stats = update_index(spark, spark.createDataFrame(c2), root)
     assert stats["repaired"] is True
     assert stats["affected_segments"] == []
-    assert _results(BM25Index.load(spark, root), ["parse buffer", "def"]) == ref
+    assert lsm.live_gens(man.load_meta()) == []
+    assert _results(BM25Index.load(spark, root),
+                    ["parse buffer", "def", "catalyst"]) == ref2
 
 
 def test_interrupted_swap_windows_are_recovered(spark, tmp_path):
-    """The rename-aside swap protocol: every crash point leaves a segment's
-    doc_map in exactly one of real / tmp-cand / .old, and repair restores a
-    consistent index from any of them (review finding: the old
-    rmtree-then-rename could permanently lose a segment)."""
+    """The rename-aside swap protocol under compaction: every crash point
+    leaves a segment's doc_map in exactly one of real / staged cand /
+    aside, and repair rolls the fold forward from any of them (review
+    finding: the old rmtree-then-rename could permanently lose a
+    segment)."""
     import shutil as _sh
 
-    from ck_spark.index.builder import IndexPaths
+    from ck_spark.index import lsm
     from ck_spark.index.format import _aside
     from ck_spark.index.manifest import Manifest
 
     base = generate_corpus(80, seed=9)
-    ref_results = None
-    for window in ("aside", "tmp"):
+    template = str(tmp_path / "template")
+    build_index(spark, spark.createDataFrame(base), template, mode="code",
+                n_segments=4, term_buckets=4, build_groups=2)
+    changed = _marked(base, [2, 30, 61], "swap window catalyst")
+    update_index(spark, spark.createDataFrame(changed), template)
+    ref = _results(BM25Index.load(spark, template), ["parse buffer", "def", "catalyst"])
+    for window in ("tmp", "aside", "tail"):
         root = str(tmp_path / f"swapcrash_{window}")
-        build_index(spark, spark.createDataFrame(base), root, mode="code",
-                    n_segments=4, term_buckets=4, build_groups=2)
-        idx = BM25Index.load(spark, root)
-        ref = _results(idx, ["parse buffer", "def"])
-        if ref_results is None:
-            ref_results = ref
-        paths = IndexPaths(root)
+        _sh.copytree(template, root)
+        paths, tmp_dm = _crash_inside_compaction(spark, root)
         real = os.path.join(paths.doc_map, "seg=1")
-        tmp_dm = os.path.join(root, "_tmp_doc_map")
-        man = Manifest(root)
+        cand = os.path.join(tmp_dm, "seg=1")
         if window == "aside":
             # crash between rename(real, aside) and rename(cand, real):
             # real missing, the _-prefixed aside (invisible to partition
-            # discovery) holds the pre-update data
+            # discovery) holds the pre-compaction data
             os.rename(real, _aside(paths.doc_map, 1))
-        else:
-            # crash before the swap started: cand still in tmp, real is
-            # pre-update — repair must roll the swap FORWARD
-            os.makedirs(tmp_dm, exist_ok=True)
-            _sh.copytree(real, os.path.join(tmp_dm, "seg=1"))
-        man.save_marker("update_inprogress",
-                        {"segs": [1], "tmp": tmp_dm, "ts": 0})
+        elif window == "tail":
+            # crash after rename(cand, real) but before the aside's rmtree
+            os.rename(real, _aside(paths.doc_map, 1))
+            os.rename(cand, real)
+        # "tmp": crash before the swap started — the staged fold must be
+        # rolled FORWARD
         healed = BM25Index.load(spark, root, repair=True)
-        assert Manifest(root).load_marker("update_inprogress") is None
+        assert Manifest(root).load_marker("compact_inprogress") is None
+        assert lsm.live_gens(Manifest(root).load_meta()) == []
         assert os.path.isdir(real)
         assert not os.path.exists(_aside(paths.doc_map, 1))
         assert not os.path.exists(tmp_dm)
-        assert _results(healed, ["parse buffer", "def"]) == ref
+        assert _results(healed, ["parse buffer", "def", "catalyst"]) == ref
+
+
+def test_leftover_rewrite_marker_is_refused(spark, tmp_path):
+    """An update_inprogress marker can only come from a crashed
+    segment-rewrite update of older code, which nothing can finish any
+    more: repair, update and an owner load refuse it and point at
+    build_index instead of healing to a wrong index."""
+    from ck_spark.index.builder import repair_index
+    from ck_spark.index.manifest import Manifest
+
+    root = str(tmp_path / "old_marker")
+    base = generate_corpus(30, seed=5)
+    build_index(spark, spark.createDataFrame(base), root, mode="code",
+                n_segments=2, term_buckets=4, build_groups=1)
+    Manifest(root).save_marker("update_inprogress", {"segs": [0, 1], "ts": 0})
+    for attempt in (
+        lambda: repair_index(spark, root),
+        lambda: update_index(spark, spark.createDataFrame(base), root),
+        lambda: BM25Index.load(spark, root, repair=True),
+    ):
+        with pytest.raises(ValueError, match="rebuild with build_index"):
+            attempt()
+    assert Manifest(root).load_marker("update_inprogress") is not None
 
 
 def test_rebuild_same_content_different_snapshot_keeps_postings(spark, tmp_path):
