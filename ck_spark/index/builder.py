@@ -31,11 +31,24 @@ delta generation; superseded versions become tombstone rows; global
 stats (N, avgdl, df) are maintained arithmetically exactly, so
 incremental and from-scratch builds are rank- and score-identical —
 asserted in tests. One atomic meta write commits a generation.
+An update stages its generation in one of two tiers and commits it
+through one shared function (_commit_generation): under the
+LOCAL_UPDATE_* caps (input docs and bytes, live doc_map rows, term
+dictionary size) the driver tier (_stage_local) runs ONE Spark job — the
+collect of the input with its JVM-computed ids and hashes — and does the
+diff, tokenize, postings encode, term-dictionary merge, trigram append
+and content-store delta with pyarrow and the Arrow/numpy kernels the
+Spark tier runs inside its tasks; above them the Spark tier
+(_stage_spark) runs them as distributed jobs. The driver tier was
+faster at every measured size (up to 30k changed docs, and a 1.1M-doc,
+1.1M-term index), so the caps bound its driver memory rather than mark
+a crossover (see LOCAL_UPDATE_MAX_DOCS).
 Compaction (compact_index) folds generations back into the base through
-the SegmentStore stage/swap protocol (index/format.py), bracketed by a
-compact-in-progress marker that repair_index rolls forward. This is the
-scale analogue of ck's manifest-gated incremental re-index
-(ck-index/src/lib.rs:841-906).
+the SegmentStore stage/swap protocol (index/format.py): the staged fold
+is verified against the arithmetic fingerprint before anything is
+swapped, then a compact-in-progress marker brackets the swap and
+repair_index rolls it forward. This is the scale analogue of ck's
+manifest-gated incremental re-index (ck-index/src/lib.rs:841-906).
 
 Because different segments may be (re)encoded under different avgdl
 values, every posting row records avgdl_enc; the WAND scorer scales
@@ -99,6 +112,17 @@ DOC_MAP_COLS = [
 
 def doc_map_cols(store_content: bool) -> list[str]:
     return DOC_MAP_COLS + ["content"] if store_content else list(DOC_MAP_COLS)
+
+
+def doc_map_schema(store_content: bool) -> str:
+    """DDL of the doc_map table (seg included: the partition column), for
+    the pyarrow readers and writers of the driver tiers."""
+    return (
+        "doc_id long, repo string, path string, commit string, lang string, "
+        "content_sha256 string, is_binary boolean, doc_len int, seg int, "
+        "tfm map<string,int>, posm map<string,array<int>>"
+        + (", content string" if store_content else "")
+    )
 
 
 def snapshot_sha_expr(corpus: DataFrame):
@@ -302,18 +326,16 @@ class _scan_splits:
         return False
 
 
-def _summarize_and_write_stats(
-    spark: SparkSession, paths: IndexPaths, build_groups: int = 0
-) -> tuple[int, int, str, int, float, int] | tuple:
-    """ONE doc_map scan for both the identity summary (row count,
-    collision check, corpus fingerprint) and the BM25 corpus stats
-    (n_docs/avgdl/total_tokens over non-binary docs); the 1-row
-    corpus_stats table is then written driver-side. Collapsing the two
-    aggregation jobs matters for scaling efficiency: fixed per-job
-    dispatch is the part of the build that does NOT shrink with more
-    executors. Returns (n, nd, snapshot, n_docs, avgdl, total_tokens).
+def _summarize_doc_map(dm: DataFrame, build_groups: int = 0) -> dict:
+    """ONE doc_map scan for both the identity summary (row count n,
+    distinct ids nd, corpus fingerprint `snapshot`) and the BM25 corpus
+    stats (n_docs/avgdl/total_tokens over non-binary docs; avgdl None
+    when no doc is indexed). Collapsing the two aggregation jobs matters
+    for scaling efficiency: fixed per-job dispatch is the part of the
+    build that does NOT shrink with more executors. A plain dict, so
+    compaction can record it in its marker.
 
-    build_groups > 0 appends a 7th element: per-group non-binary token
+    build_groups > 0 adds "group_tokens": per-group non-binary token
     sums (group g = segs with seg % build_groups == g). group_tokens[g]
     > 0 is the exact non-emptiness witness for group g's exploded pairs
     frame (a doc yields posm rows iff doc_len > 0), which lets the
@@ -327,8 +349,7 @@ def _summarize_and_write_stats(
         for g in range(build_groups)
     ]
     row = (
-        spark.read.parquet(paths.doc_map)
-        .agg(
+        dm.agg(
             F.count("*").alias("n"),
             F.countDistinct("doc_id").alias("nd"),
             F.bit_xor(F.xxhash64("repo", "path", "commit", "content_sha256")).alias("h"),
@@ -339,29 +360,44 @@ def _summarize_and_write_stats(
         )
         .collect()[0]
     )
-    _write_corpus_stats(spark, paths, int(row["n_docs"]), row["avgdl"],
-                        int(row["total_tokens"] or 0))
-    out = (int(row["n"]), int(row["nd"]), f"n{row['n']}-h{row['h']}",
-           int(row["n_docs"]), float(row["avgdl"] or 0.0),
-           int(row["total_tokens"] or 0))
+    out = {
+        "n": int(row["n"]), "nd": int(row["nd"]),
+        "snapshot": f"n{row['n']}-h{row['h']}",
+        "n_docs": int(row["n_docs"]),
+        "avgdl": None if row["avgdl"] is None else float(row["avgdl"]),
+        "total_tokens": int(row["total_tokens"] or 0),
+    }
     if build_groups > 0:
-        return out + ([int(row[f"gt{g}"] or 0) for g in range(build_groups)],)
+        out["group_tokens"] = [int(row[f"gt{g}"] or 0) for g in range(build_groups)]
     return out
 
 
-def _write_corpus_stats(spark: SparkSession, paths: IndexPaths, n_docs: int,
-                        avgdl: float | None, total_tokens: int) -> None:
-    """The 1-row corpus_stats side table (avgdl None: no indexed doc)."""
-    # range(1).select(lit(...)) — NOT spark.createDataFrame(python rows):
-    # a python-object local relation parallelizes into defaultParallelism
-    # tasks, each spinning a Python worker — measured 4+ s for ONE row,
-    # paid on every build/update; the JVM literal row is ~0.2 s
-    spark.range(1).select(
-        F.lit(n_docs).cast("long").alias("n_docs"),
-        (F.lit(float(avgdl)) if avgdl is not None
-         else F.lit(None).cast("double")).alias("avgdl"),
-        F.lit(total_tokens).cast("long").alias("total_tokens"),
-    ).coalesce(1).write.mode("overwrite").parquet(paths.corpus_stats)
+CORPUS_STATS_SCHEMA = "n_docs long, avgdl double, total_tokens long"
+
+
+def _write_corpus_stats(paths: IndexPaths, n_docs: int, avgdl: float | None,
+                        total_tokens: int) -> None:
+    """The 1-row corpus_stats side table (avgdl None: no indexed doc),
+    written on the driver with pyarrow — a Spark write of one row costs
+    a job (~0.2 s). The file is staged under a hidden name and renamed
+    over the table's one file, so a reader never sees two rows or
+    none."""
+    import pyarrow as pa
+
+    from ck_spark.plans.schemas import write_parquet
+
+    tmp = write_parquet(pa.table({
+        "n_docs": pa.array([n_docs], pa.int64()),
+        "avgdl": pa.array([avgdl], pa.float64()),
+        "total_tokens": pa.array([total_tokens], pa.int64()),
+    }), os.path.join(paths.corpus_stats, "_staging"), CORPUS_STATS_SCHEMA)
+    final = os.path.join(paths.corpus_stats, "part-00000.zstd.parquet")
+    os.replace(tmp, final)
+    shutil.rmtree(os.path.dirname(tmp))
+    for name in os.listdir(paths.corpus_stats):
+        if os.path.join(paths.corpus_stats, name) != final:
+            # a Spark-written table's part, .crc and _SUCCESS files
+            os.remove(os.path.join(paths.corpus_stats, name))
 
 
 def _pairs_df(docs: DataFrame, term_buckets: int) -> DataFrame:
@@ -695,7 +731,7 @@ def repair_index(spark: SparkSession, out_dir: str,
             store = ParquetDirStore()
         _finish_compact(
             spark, out_dir, store, man, man.load_meta(), cmarker["tmp"],
-            heal=True,
+            heal=True, summary=cmarker.get("summary"),
         )
         ran = True
     return ran
@@ -788,8 +824,13 @@ def build_index(
                 .partitionBy("seg")
                 .parquet(paths.doc_map)
             )
-    n, nd, snapshot, n_docs_nb, avgdl, total_tokens, group_tokens = \
-        _summarize_and_write_stats(spark, paths, build_groups=build_groups)
+    summary = _summarize_doc_map(spark.read.parquet(paths.doc_map),
+                                 build_groups=build_groups)
+    _write_corpus_stats(paths, summary["n_docs"], summary["avgdl"],
+                        summary["total_tokens"])
+    n, nd, snapshot = summary["n"], summary["nd"], summary["snapshot"]
+    avgdl = float(summary["avgdl"] or 0.0)
+    group_tokens = summary["group_tokens"]
     if n != nd:
         raise RuntimeError(
             f"doc_id collision: {n} rows but {nd} distinct ids — "
@@ -920,10 +961,10 @@ def build_index(
             "b": b,
             "block_size": block_size,
             "avgdl": avgdl,
-            "n_docs": n_docs_nb,
+            "n_docs": summary["n_docs"],
             "n_terms": int(nterms) if nterms is not None else None,
             "input_snapshot": snapshot,
-            "total_tokens": total_tokens,
+            "total_tokens": summary["total_tokens"],
         }
     )
     return paths
@@ -959,6 +1000,11 @@ def update_index(
     A crashed compaction or content-store commit is healed first
     (repair_index).
 
+    A small update (input, live doc set and term dictionary under the
+    LOCAL_UPDATE_* caps) runs on the driver in ONE Spark job, the collect
+    of its input; a larger one runs as distributed Spark jobs. Both tiers
+    write the same generation and share one commit (_update_delta).
+
     Returns UpdateStats-style counters (SURVEY §2.4 A6):
     {added, removed, modified, unchanged, affected_segments, build_ms,
     repaired, gen?, compacted?}.
@@ -986,6 +1032,174 @@ def update_index(
     )
 
 
+# ---- the driver-local write tier -------------------------------------------
+# An update runs on the driver — Arrow/numpy kernels the Spark tier runs
+# inside its tasks, ONE Spark job (the collect of its input) — when its
+# input, the stored doc_map rows its diff reads and the term dictionary
+# it merges are all under these caps; each cap is one predicate below.
+# The caps are NOT a measured wall-time crossover: none was found. On a
+# warm local[4] session (4-vCPU host; CHANGES.md has the table) the
+# driver tier staged faster at every point measured — upserts of 15 to
+# 30k docs on a 40k-doc, 4-segment index (30k docs: 11.0 s against
+# 25.0 s) and of 15 to 15k docs on a 1.1M-doc, 1.1M-term, 8-segment
+# index (15k docs: 8.5 s against 30.8 s). They are a driver-memory
+# bound: the driver's python process grew ~73 MB per MB of input
+# content (0.74 GB at 10.3 MB, 1.51 GB at 20.7 MB) and ~0.6 GB for the
+# diff read and dictionary merge of the 1.1M-row, 1.1M-term index, so
+# at the caps the driver tier holds ~1.2 GB for its input plus ~0.6 GB
+# for the index; above them the Spark tier keeps the work off the
+# driver. Unmeasured past 30k input docs and 1.1M rows or terms.
+LOCAL_UPDATE_MAX_DOCS = 20_000
+# input content bytes: the plan's size estimate before the collect, the
+# collected content bytes after it
+LOCAL_UPDATE_MAX_BYTES = 16 << 20
+# stored doc_map rows (live rows, binary docs included, plus tombstoned
+# versions): the driver diff reads every one's (doc_id, content_sha256)
+# — hash-spread ids defeat row-group pruning, so its cost grows with
+# the index, not the delta
+LOCAL_UPDATE_MAX_LIVE_ROWS = 1_000_000
+# the term dictionary the driver reads, merges and rewrites whole
+LOCAL_UPDATE_MAX_TERMS = 1_000_000
+
+
+def _live_rows_fit(meta: dict) -> bool:
+    """The stored doc_map rows the driver diff reads — every live row,
+    binary docs included (the row count of the arithmetic fingerprint),
+    plus the tombstoned versions — are under the cap."""
+    from ck_spark.index import lsm
+
+    try:
+        n_rows = lsm.parse_snapshot(meta.get("input_snapshot"))[0]
+    except ValueError:
+        return False
+    return n_rows + int(meta.get("n_tombstones") or 0) <= LOCAL_UPDATE_MAX_LIVE_ROWS
+
+
+def _terms_fit(meta: dict) -> bool:
+    """The term dictionary is under the cap (unknown size does not fit)."""
+    n_terms = meta.get("n_terms")
+    return n_terms is not None and int(n_terms) <= LOCAL_UPDATE_MAX_TERMS
+
+
+def _input_plan_fits(corpus: DataFrame) -> bool:
+    """The optimizer's statistics of the input — no Spark job — are under
+    the caps: its size estimate (bytes on disk for a file scan, unbounded
+    for an RDD) and, where the plan knows it (local relations), its row
+    count. A cheap pre-check that keeps an input known to be large off
+    the collect; it is not a bound — a compressed file can pass it with
+    any amount of content — so _collect_input bounds what it moves."""
+    stats = corpus._jdf.queryExecution().optimizedPlan().stats()
+    if int(str(stats.sizeInBytes())) > LOCAL_UPDATE_MAX_BYTES:
+        return False
+    rows = stats.rowCount()
+    return not rows.isDefined() or int(str(rows.get())) <= LOCAL_UPDATE_MAX_DOCS
+
+
+def _input_fits(inp) -> bool:
+    """The collected input (at most LOCAL_UPDATE_MAX_DOCS + 1 rows) is
+    under the doc and content-byte caps."""
+    import pyarrow.compute as pc
+
+    if inp.num_rows > LOCAL_UPDATE_MAX_DOCS:
+        return False
+    nbytes = pc.sum(pc.binary_length(inp.column("content"))).as_py() or 0
+    return nbytes <= LOCAL_UPDATE_MAX_BYTES
+
+
+# content crosses the collect in chunks of at most this many bytes, one
+# row each, so a row limit bounds the bytes moved (_collect_input)
+_COLLECT_CHUNK = 1024
+
+
+def _collect_limit() -> int:
+    """Chunk rows of an input at the doc and byte caps: each doc ships
+    max(1, ceil(bytes / chunk)) chunks, at most one doc + bytes / chunk."""
+    return LOCAL_UPDATE_MAX_DOCS + LOCAL_UPDATE_MAX_BYTES // _COLLECT_CHUNK + 1
+
+
+def _collect_input(corpus: DataFrame, n_segments: int):
+    """The driver tier's ONE Spark job: the input as an Arrow table, with
+    every id and fingerprint projected in the JVM by the expressions the
+    Spark tier uses — doc_id, seg, the diff sha (trusted column or
+    sha2), the doc_map sha2 and the row hash of the xor fingerprint.
+
+    The content is exploded into _COLLECT_CHUNK-byte chunks, one row
+    each, under a limit of _collect_limit() rows, so the collect moves
+    at most about LOCAL_UPDATE_MAX_DOCS * _COLLECT_CHUNK +
+    LOCAL_UPDATE_MAX_BYTES content bytes (plus the other columns once
+    per chunk) however small the input is on disk; the driver joins the
+    chunks back. None when the input reaches the limit (over a cap)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    chunk = _COLLECT_CHUNK
+    limit = _collect_limit()
+    sha = F.sha2("content", 256)
+    body = F.col("content").cast("binary")
+    n_chunks = F.greatest(F.ceil(F.octet_length(body) / chunk), F.lit(1))
+    chunks = F.when(body.isNull(), F.array(F.lit(None).cast("binary"))).otherwise(
+        F.transform(F.sequence(F.lit(0), n_chunks.cast("int") - 1),
+                    lambda i: body.substr(i * chunk + 1, F.lit(chunk))))
+    t = (
+        corpus.withColumn("doc_id", doc_id_expr())
+        .select(
+            "doc_id",
+            seg_expr(n_segments).alias("seg"),
+            snapshot_sha_expr(corpus).alias("new_sha"),
+            sha.alias("content_sha256"),
+            F.xxhash64("repo", "path", "commit", sha).alias("row_hash"),
+            F.contains("content", F.lit("\x00")).alias("is_binary"),
+            "repo", "path", "commit", "lang",
+            F.posexplode(chunks).alias("pos", "chunk"),
+        )
+        .limit(limit)
+        .toArrow()
+    )
+    if t.num_rows >= limit:
+        return None
+    starts = np.flatnonzero(t.column("pos").to_numpy() == 0)
+    offsets = pa.array(np.append(starts, t.num_rows), pa.int32())
+    content = pc.binary_join(
+        pa.ListArray.from_arrays(offsets, t.column("chunk").combine_chunks()), b"")
+    heads = t.drop_columns(["pos", "chunk"]).take(pa.array(starts))
+    return heads.append_column("content", content.view(pa.string()))
+
+
+class _StageClock:
+    """Per-stage wall clock, returned as stats["stage_ms"]: at small
+    deltas the breakdown (not the data volume) explains the latency; at
+    scale it shows which stage grew. Both tiers mark the same four
+    stages: diff, tombstones_and_fresh_doc_map, postings_terms_trigram_cs
+    and commit."""
+
+    def __init__(self):
+        self.t0 = self._t = time.time()
+        self.ms: dict[str, int] = {}
+
+    def mark(self, name: str) -> None:
+        now = time.time()
+        self.ms[name] = self.ms.get(name, 0) + int((now - self._t) * 1000)
+        self._t = now
+
+
+@dataclass
+class _Generation:
+    """A staged (written, not yet committed) LSM generation — what either
+    tier hands the shared commit."""
+
+    gen: int
+    stats: dict        # diff counts, repaired, gen, affected_segments
+    affected: list
+    n_fresh: int
+    ndist: int         # distinct fresh doc ids (collision check)
+    dead: dict         # n_dead, dead_nb, dead_dl, dead_xor
+    new: dict          # n_new, new_nb, new_dl, new_xor
+    totals: dict       # n_docs, avgdl, total_tokens, input_snapshot
+    n_terms: int
+    tri_refresh: bool
+    cs_stage: object   # content_store stage result (None / COMPACT / tuple)
+
+
 def _update_delta(
     spark: SparkSession,
     corpus: DataFrame,
@@ -996,7 +1210,7 @@ def _update_delta(
     meta: dict,
     repaired: bool,
 ) -> dict:
-    """The LSM append path of update_index (index/lsm.py).
+    """The LSM append path of update_index (index/lsm.py), in two tiers.
 
     Write volume ∝ the change: one new generation's doc_map + postings
     for the added/modified docs, tombstone rows for the superseded/
@@ -1005,36 +1219,435 @@ def _update_delta(
     is touched. Global stats are maintained arithmetically exactly —
     total_tokens is an exact integer, so avgdl' = total'/n_docs' is the
     same float64 a full rebuild computes, and the manifest fingerprint
-    updates by XOR self-inversion (lsm.merge_snapshot). The single
-    commit point is the atomic meta write adding the generation to
+    updates by XOR self-inversion (lsm.merge_snapshot).
+
+    Tiers: when the live doc set (_live_rows_fit), the term dictionary
+    (_terms_fit) and the input (_input_plan_fits before its collect,
+    _input_fits after) are under the LOCAL_UPDATE_* caps, the driver tier
+    (_stage_local) computes the diff, tombstones, fresh doc_map,
+    postings, term-dictionary merge, trigram append and content-store
+    delta with pyarrow and the Arrow/numpy kernels of the Spark tier's
+    tasks, in ONE Spark job; otherwise the Spark tier (_stage_spark) runs
+    them as distributed jobs. Both write the same generation directories
+    and hand them to ONE commit (_commit_generation), whose single commit
+    point is the atomic meta write adding the generation to
     meta['gens'].
 
     doc_id collisions: the base build aborts on countDistinct(doc_id)
     mismatch; here a colliding NEW key is indistinguishable from a
     modification of the colliding doc (the diff is id-keyed), so the
-    within-batch check below is the detection surface — at 2^62 id space
-    the cross-batch risk is the same ~n²/2^63 the reference accepts."""
+    within-batch check of the commit is the detection surface — at 2^62
+    id space the cross-batch risk is the same ~n²/2^63 the reference
+    accepts."""
     from ck_spark.index import lsm
 
-    paths = IndexPaths(out_dir)
+    clock = _StageClock()
+    gen = lsm.next_gen(meta)
+    stats: dict = {"repaired": repaired}
+    inp = None
+    if _live_rows_fit(meta) and _terms_fit(meta) and _input_plan_fits(corpus):
+        inp = _collect_input(corpus, int(meta["n_segments"]))
+        if inp is not None and not _input_fits(inp):
+            inp = None
+    if inp is not None:
+        g = _stage_local(spark, inp, out_dir, full_snapshot, meta, gen,
+                         clock, stats)
+    else:
+        g = _stage_spark(spark, corpus, out_dir, full_snapshot, meta, gen,
+                         clock, stats)
+    if g is None:  # nothing changed: no generation
+        stats["affected_segments"] = []
+        stats["build_ms"] = int((time.time() - clock.t0) * 1000)
+        return stats
+    return _commit_generation(spark, out_dir, store, man, meta, g, clock)
+
+
+def _arith_stats(out_dir: str, meta: dict, dead: dict, new: dict) -> dict:
+    """The exact arithmetic stats of the new generation (index/lsm.py
+    module docstring): n_docs, total_tokens, avgdl, input_snapshot."""
+    from ck_spark.index import lsm
+
+    n_docs_nb = int(meta["n_docs"]) - dead["dead_nb"] + new["new_nb"]
+    total_old = meta.get("total_tokens")
+    if total_old is None:
+        # pre-LSM meta: one narrow doc_len read upgrades it (then never
+        # again)
+        import pyarrow.compute as pc
+
+        t = lsm.live_rows(out_dir, {**meta, "gens": []},
+                          ["doc_len", "is_binary"])
+        total_old = pc.sum(pc.filter(t.column("doc_len"),
+                                     pc.invert(t.column("is_binary")))).as_py() or 0
+    total_tokens = int(total_old) - dead["dead_dl"] + new["new_dl"]
+    return {
+        "n_docs": n_docs_nb,
+        "avgdl": (total_tokens / n_docs_nb) if n_docs_nb > 0 else 0.0,
+        "total_tokens": total_tokens,
+        "input_snapshot": lsm.merge_snapshot(
+            meta["input_snapshot"], dead["n_dead"], dead["dead_xor"],
+            new["n_new"], new["new_xor"],
+        ),
+    }
+
+
+def _trigram_refresh(out_dir: str, store_content: bool) -> bool:
+    """True if the update must append to a trigram index. An index
+    without stored content cannot keep one current: it is dropped."""
+    from ck_spark.query.trigram import TRIGRAM_DIR
+
+    tri_dir = os.path.join(out_dir, TRIGRAM_DIR)
+    if os.path.exists(tri_dir) and not store_content:
+        shutil.rmtree(tri_dir, ignore_errors=True)
+    return os.path.exists(tri_dir) and store_content
+
+
+def _commit_generation(spark: SparkSession, out_dir: str,
+                       store: "SegmentStore", man: Manifest, meta: dict,
+                       g: _Generation, clock: _StageClock) -> dict:
+    """THE commit of a staged generation, shared by both tiers: the
+    within-batch collision check, the cs_refresh_pending bracket, the one
+    atomic meta write that makes the generation live, corpus_stats, the
+    trigram and content-store commits, the manifest record and the
+    compaction trigger."""
+    from ck_spark.index import lsm
+    from ck_spark.index.content_store import (
+        COMPACT, build_content_store, commit_content_store_delta,
+    )
+    from ck_spark.query.trigram import maybe_compact_trigram
+
+    stats = g.stats
+    if g.n_fresh > 0 and g.new["n_new"] != g.ndist:
+        # nothing is committed yet (the meta write below is the single
+        # commit point); drop the staged generation dirs — any remainder
+        # is orphan-GC'd by the next update
+        shutil.rmtree(lsm.delta_doc_map_dir(out_dir, g.gen), ignore_errors=True)
+        shutil.rmtree(lsm.delta_postings_dir(out_dir, g.gen), ignore_errors=True)
+        raise RuntimeError(
+            "doc_id collision inside the update batch — rehash with a salt"
+        )
+    if g.cs_stage is not None:
+        # bracket the pointer-table commit: it lands AFTER the meta commit
+        # below, so a crash between the two would otherwise leave the new
+        # generation's docs permanently missing from the pointer table
+        # (readers are safe meanwhile — the store's completion marker is
+        # already invalidated, so fetches use the parquet live view);
+        # repair_index re-derives the flagged segments and clears this.
+        man.save_marker("cs_refresh_pending", {"segs": g.affected})
+
+    # ---- THE commit point: one atomic meta write makes gen live
+    meta.update({
+        "gens": lsm.live_gens(meta) + [g.gen],
+        **g.totals,
+        "n_terms": g.n_terms,
+        "term_stats_dir": os.path.relpath(
+            lsm.term_stats_gen_dir(out_dir, g.gen), out_dir),
+        "n_tombstones": int(meta.get("n_tombstones") or 0) + g.dead["n_dead"],
+    })
+    man.save_meta(meta)
+    # the corpus_stats side table mirrors the COMMITTED meta, so it is
+    # written only after the commit: a crash before it leaves the table
+    # at the prior generation's values, equal to the prior meta
+    n_docs = g.totals["n_docs"]
+    _write_corpus_stats(IndexPaths(out_dir), n_docs,
+                        g.totals["avgdl"] if n_docs > 0 else None,
+                        g.totals["total_tokens"])
+
+    if g.tri_refresh:
+        maybe_compact_trigram(spark, out_dir)
+    if g.cs_stage == COMPACT:
+        build_content_store(spark, out_dir)
+        man.clear_marker("cs_refresh_pending")
+    elif g.cs_stage is not None:
+        commit_content_store_delta(
+            spark, out_dir, g.affected, *g.cs_stage,
+            n_change=stats["added"] - stats["removed"],
+        )
+        man.clear_marker("cs_refresh_pending")
+
+    clock.mark("commit")
+    stats["stage_ms"] = clock.ms
+    stats["build_ms"] = int((time.time() - clock.t0) * 1000)
+    man.complete(
+        "update", int(time.time()), g.totals["input_snapshot"],
+        stats["added"] + stats["modified"], g.n_terms, stats["build_ms"],
+        lineage=f"delta gen={g.gen} +{stats['added']} ~{stats['modified']} "
+                f"-{stats['removed']}",
+    )
+    # the Spark tier's diff staging outlived its use
+    shutil.rmtree(lsm.diff_staging_dir(out_dir, g.gen), ignore_errors=True)
+    if lsm.needs_compaction(meta):
+        compact_index(spark, out_dir, store=store)
+        stats["compacted"] = True
+    return stats
+
+
+def _row_hash(repo, path, commit, sha) -> int:
+    """xxhash64(repo, path, commit, content_sha256) as Spark computes it:
+    each non-null column's UTF-8 bytes hashed with the previous hash as
+    the seed (42 first), signed. Parity with F.xxhash64 is asserted in
+    tests/test_update_local_tier.py."""
+    from ck_spark.codec import xxhash64
+
+    h = 42
+    for v in (repo, path, commit, sha):
+        if v is not None:
+            h = xxhash64(v.encode("utf-8"), h)
+    return h - (1 << 64) if h >= (1 << 63) else h
+
+
+def _xor(values) -> int:
+    """bit_xor of signed 64-bit values (0 for none, as the Spark tier's
+    `or 0` reads an empty bit_xor)."""
+    return int(np.bitwise_xor.reduce(np.asarray(values, dtype=np.int64))) \
+        if len(values) else 0
+
+
+def _tokenized(contents, is_binary: np.ndarray, mode: str) -> tuple:
+    """(posm, tfm, doc_len) Arrow arrays for fresh docs — the driver twin
+    of _with_doc_columns' tokenize: positions_map_arrow, binary docs null
+    maps and doc_len 0, tf = the number of positions."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from ck_spark.tokenizer import positions_map_arrow
+
+    # binary docs tokenize as empty, so their null maps own no entries
+    posm = positions_map_arrow(
+        pc.if_else(pa.array(is_binary), pa.scalar("", pa.string()), contents),
+        mode)
+    offs = posm.offsets.to_numpy()
+    tfs = pc.list_value_length(posm.items).to_numpy().astype(np.int32)
+    cum = np.concatenate([[0], np.cumsum(tfs, dtype=np.int64)])
+    doc_len = (cum[offs[1:]] - cum[offs[:-1]]).astype(np.int32)
+    null_offs = pa.array(offs.astype(np.int32), mask=np.r_[is_binary, False])
+    return (pa.MapArray.from_arrays(null_offs, posm.keys, posm.items),
+            pa.MapArray.from_arrays(null_offs, posm.keys, pa.array(tfs)),
+            doc_len)
+
+
+def _map_entries(maps) -> tuple:
+    """(keys, values) of every map of a MapArray, flattened, honouring a
+    slice offset (null maps own no entries in these arrays)."""
+    offs = maps.offsets
+    lo, hi = offs[0].as_py(), offs[-1].as_py()
+    return maps.keys.slice(lo, hi - lo), maps.items.slice(lo, hi - lo)
+
+
+def _map_keys(maps) -> np.ndarray:
+    return _map_entries(maps)[0].to_numpy(zero_copy_only=False)
+
+
+def _dead_terms(out_dir: str, dead, mode: str) -> np.ndarray:
+    """Each dead non-binary version's distinct terms, concatenated (one
+    entry per (doc, term)): re-tokenized from the content store's point
+    reads when it exists, else the stored tfm keys — the same sources
+    the Spark tier reads."""
+    import pyarrow as pa
+
+    from ck_spark.index.content_store import content_store_exists, fetch_local
+    from ck_spark.tokenizer import positions_map_arrow
+
+    nb = dead.filter(pa.array(~dead.column("is_binary").to_numpy(
+        zero_copy_only=False)))
+    if nb.num_rows == 0:
+        return np.empty(0, dtype=object)
+    if "tfm" in nb.column_names:
+        return _map_keys(nb.column("tfm").combine_chunks())
+    assert content_store_exists(out_dir)
+    old = fetch_local(out_dir, nb.column("seg").to_pylist(),
+                      nb.column("doc_id").to_pylist())
+    return _map_keys(positions_map_arrow(pa.array(old["content"], pa.string()),
+                                         mode))
+
+
+def _stage_local(spark: SparkSession, inp, out_dir: str, full_snapshot: bool,
+                 meta: dict, gen: int, clock: _StageClock,
+                 stats: dict) -> "_Generation | None":
+    """The driver tier: stage generation `gen` from the collected input
+    `inp` (_collect_input) with pyarrow and the Spark tier's kernels —
+    no Spark job. Writes the same files as _stage_spark, one per
+    partition directory. Returns None when nothing changed."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from ck_spark.codec import xxhash64_signed
+    from ck_spark.index import lsm
+    from ck_spark.index.content_store import (
+        content_store_exists, stage_content_store_delta,
+    )
+    from ck_spark.plans.schemas import (
+        arrow_dataset, write_parquet, write_partitioned,
+    )
+    from ck_spark.query.trigram import refresh_trigram_append
+
+    store_content = bool(meta.get("store_content", False))
+    term_buckets = int(meta["term_buckets"])
+
+    # ---- diff: the input against the live view's (doc_id, sha) — every
+    # live row for a full snapshot, the input's ids for an upsert batch
+    ids = inp.column("doc_id").to_numpy()
+    old = lsm.live_rows(out_dir, meta, ["content_sha256", "seg"],
+                        None if full_snapshot else ids)
+    d = pd.DataFrame({
+        "doc_id": ids, "new_sha": inp.column("new_sha").to_pandas(),
+        "seg": inp.column("seg").to_numpy(),
+    }).merge(
+        pd.DataFrame({
+            "doc_id": old.column("doc_id").to_numpy(),
+            "old_sha": old.column("content_sha256").to_pandas(),
+            "old_seg": old.column("seg").to_numpy(),
+        }),
+        on="doc_id", how="outer" if full_snapshot else "left",
+    )
+    has_old = d["old_sha"].notna().to_numpy()
+    has_new = d["new_sha"].notna().to_numpy()
+    same = has_old & has_new & (d["old_sha"] == d["new_sha"]).to_numpy()
+    differ = has_old & has_new & ~same
+    changed = ~has_old | ~has_new | differ
+    stats.update(added=int((~has_old).sum()), removed=int((~has_new).sum()),
+                 modified=int(differ.sum()), unchanged=int(same.sum()))
+    clock.mark("diff")
+    if not changed.any():
+        return None
+    stats["gen"] = gen
+    seg = d["seg"].fillna(d["old_seg"]).to_numpy().astype(np.int64)
+    affected = sorted({int(s) for s in seg[changed]})
+    stats["affected_segments"] = affected
+    dead_ids = d["doc_id"].to_numpy()[changed & has_old]
+    fresh_ids = d["doc_id"].to_numpy()[changed & has_new]
+
+    # ---- dead versions: tombstones and the exact stat corrections
+    dead = lsm.live_rows(
+        out_dir, meta,
+        ["seg", "repo", "path", "commit", "content_sha256", "is_binary",
+         "doc_len"] + ([] if content_store_exists(out_dir) else ["tfm"]),
+        dead_ids,
+    )
+    dnb = ~dead.column("is_binary").to_numpy(zero_copy_only=False)
+    dead_stats = {
+        "n_dead": dead.num_rows,
+        "dead_nb": int(dnb.sum()),
+        "dead_dl": int(dead.column("doc_len").to_numpy()[dnb].sum()),
+        "dead_xor": _xor([_row_hash(*r) for r in zip(
+            *(dead.column(c).to_pylist()
+              for c in ("repo", "path", "commit", "content_sha256")))]),
+    }
+    if dead.num_rows:
+        write_parquet(dead.select(["gen", "seg", "doc_id"]),
+                      lsm.tombstones_dir(out_dir, gen), lsm._TOMBSTONE_SCHEMA,
+                      ("created",), stats_cols=("gen", "seg", "doc_id"))
+
+    # ---- fresh docs: tokenize ONLY them, write the generation's doc_map
+    fresh = inp.filter(pa.array(np.isin(ids, fresh_ids)))
+    n_fresh = stats["added"] + stats["modified"]
+    is_bin = pc.fill_null(fresh.column("is_binary"), False).to_numpy()
+    posm, tfm, doc_len = _tokenized(fresh.column("content"), is_bin,
+                                    meta["tokenizer_mode"])
+    dm = fresh.select(["doc_id", "repo", "path", "commit", "lang",
+                       "content_sha256", "seg", "content"])
+    dm = (dm.append_column("is_binary", pa.array(is_bin))
+          .append_column("doc_len", pa.array(doc_len))
+          .append_column("tfm", tfm).append_column("posm", posm))
+    gen_dm_dir = lsm.delta_doc_map_dir(out_dir, gen)
+    # the generation dir must exist even when empty: live_doc_map reads
+    # the delta parent with an explicit schema, which tolerates empty
+    # dirs but not missing ones
+    os.makedirs(gen_dm_dir, exist_ok=True)
+    write_partitioned(dm, gen_dm_dir, doc_map_schema(store_content), ("seg",),
+                      ("doc_id",))
+    nb = ~is_bin
+    new_stats = {
+        "n_new": fresh.num_rows,
+        "new_nb": int(nb.sum()),
+        "new_dl": int(doc_len[nb].sum()),
+        "new_xor": _xor(fresh.column("row_hash").to_numpy()),
+    }
+    clock.mark("tombstones_and_fresh_doc_map")
+    totals = _arith_stats(out_dir, meta, dead_stats, new_stats)
+
+    # ---- term dictionary: the Spark tier's signed-count merge; an old
+    # term keeps its stored bucket, a new one gets pmod(xxhash64(term))
+    nb_idx = np.flatnonzero(nb)
+    posm_nb = posm.take(pa.array(nb_idx))
+    terms, poss = _map_entries(posm_nb)
+    terms = terms.to_numpy(zero_copy_only=False).astype(str)
+    dead_terms = _dead_terms(out_dir, dead, meta["tokenizer_mode"]).astype(str)
+    delta = pd.Series(np.r_[np.ones(terms.size, np.int64),
+                            -np.ones(dead_terms.size, np.int64)]).groupby(
+        np.r_[terms, dead_terms]).sum()
+    ts = arrow_dataset(lsm.term_stats_path(out_dir, meta),
+                       TERM_STATS_SCHEMA).to_table().to_pandas().set_index("term")
+    merged = pd.DataFrame({"df": ts["df"].add(delta, fill_value=0)})
+    merged["n_segments"] = ts["n_segments"].reindex(merged.index).fillna(1)
+    merged["bucket"] = ts["bucket"].reindex(merged.index)
+    new_terms = merged.index[merged["bucket"].isna()]
+    merged.loc[new_terms, "bucket"] = [xxhash64_signed(t) % term_buckets
+                                       for t in new_terms]
+    merged = merged[merged["df"] > 0].sort_values(["bucket"], kind="stable")
+    write_parquet(pa.table({
+        "bucket": pa.array(merged["bucket"].to_numpy(np.int32)),
+        "term": pa.array(merged.index.to_numpy(), pa.string()),
+        "df": pa.array(merged["df"].to_numpy(np.int64)),
+        "n_segments": pa.array(merged["n_segments"].to_numpy(np.int64)),
+    }), lsm.term_stats_gen_dir(out_dir, gen), TERM_STATS_SCHEMA,
+        stats_cols=("bucket", "term"))
+
+    # ---- postings of the non-binary fresh docs under the NEW avgdl
+    # (every fresh term is in the merged dictionary: df' >= its new docs)
+    gen_post_dir = lsm.delta_postings_dir(out_dir, gen)
+    os.makedirs(gen_post_dir, exist_ok=True)
+    if terms.size:
+        di = nb_idx[np.repeat(np.arange(nb_idx.size),
+                              np.diff(posm_nb.offsets.to_numpy()))]
+        pairs = pa.table({
+            "doc_id": pa.array(fresh.column("doc_id").to_numpy()[di]),
+            "seg": pa.array(fresh.column("seg").to_numpy()[di]),
+            "dl": pa.array(doc_len[di]),
+            "term": pa.array(terms, pa.string()),
+            "poss": poss,
+            "tf": pc.list_value_length(poss),
+            "bucket": pa.array(merged["bucket"].reindex(terms).to_numpy(np.int32)),
+        })
+        enc = pa.Table.from_batches(list(_make_partition_encoder(
+            totals["avgdl"], float(meta["k1"]), float(meta["b"]),
+            int(meta["block_size"]))(iter(pairs.to_batches()))))
+        part = ("seg", "bucket") if lsm.delta_bucket_dirs(out_dir, meta) \
+            else ("seg",)
+        write_partitioned(enc, gen_post_dir, POSTINGS_SCHEMA + ", seg int, bucket int",
+                          part, ("bucket", "term"))
+
+    # ---- derived-store delta hooks (each with its own crash fallback)
+    tri_refresh = _trigram_refresh(out_dir, store_content)
+    fresh_pdf = dm.select(["seg", "doc_id", "repo", "path", "lang", "content",
+                           "is_binary"]).to_pandas()
+    if tri_refresh and n_fresh > 0:
+        refresh_trigram_append(spark, out_dir, fresh_pdf[nb][["doc_id", "seg", "content"]],
+                               n_fresh=n_fresh, allow_compact=False)
+    cs_stage = stage_content_store_delta(
+        spark, out_dir, affected, fresh_pdf,
+        np.union1d(dead_ids, fresh_ids), n_fresh,
+    )
+    clock.mark("postings_terms_trigram_cs")
+    return _Generation(
+        gen=gen, stats=stats, affected=affected, n_fresh=n_fresh,
+        ndist=int(np.unique(fresh.column("doc_id").to_numpy()).size),
+        dead=dead_stats, new=new_stats, totals=totals, n_terms=len(merged),
+        tri_refresh=tri_refresh, cs_stage=cs_stage,
+    )
+
+
+def _stage_spark(spark: SparkSession, corpus: DataFrame, out_dir: str,
+                 full_snapshot: bool, meta: dict, gen: int,
+                 clock: _StageClock, stats: dict) -> "_Generation | None":
+    """The Spark tier: stage generation `gen` as distributed jobs — a
+    fixed chain of small jobs at delta scale, parallel at corpus scale.
+    Returns None when nothing changed."""
+    from ck_spark.index import lsm
+
     store_content = bool(meta.get("store_content", False))
     n_segments = int(meta["n_segments"])
     mode = meta["tokenizer_mode"]
     term_buckets = int(meta["term_buckets"])
-    t_start = time.time()
-    gen = lsm.next_gen(meta)
-
-    # per-stage wall clock, returned as stats["stage_ms"] — the update is
-    # a fixed chain of ~10 small jobs, so at small deltas the breakdown
-    # (not the data volume) is what explains the latency; at scale it
-    # shows which stage grew
-    _stage_ms: dict[str, int] = {}
-    _t_stage = [time.time()]
-
-    def _mark(name: str) -> None:
-        now = time.time()
-        _stage_ms[name] = _stage_ms.get(name, 0) + int((now - _t_stage[0]) * 1000)
-        _t_stage[0] = now
 
     live = lsm.live_doc_map(spark, out_dir, meta)
     live_g = live if "gen" in live.columns else live.withColumn("gen", F.lit(0))
@@ -1110,14 +1723,12 @@ def _update_delta(
         .parquet(diff_dir)
     )
     counts = obs_diff.get
-    _mark("diff")
-    stats = {k: int(counts[k] or 0) for k in ("added", "removed", "modified", "unchanged")}
-    stats["repaired"] = repaired
+    clock.mark("diff")
+    stats.update({k: int(counts[k] or 0)
+                  for k in ("added", "removed", "modified", "unchanged")})
     if stats["added"] + stats["removed"] + stats["modified"] == 0:
         shutil.rmtree(diff_dir, ignore_errors=True)
-        stats["affected_segments"] = []
-        stats["build_ms"] = int((time.time() - t_start) * 1000)
-        return stats
+        return None
     stats["gen"] = gen
 
     changed = spark.read.parquet(diff_dir)
@@ -1154,7 +1765,7 @@ def _update_delta(
             .write.mode("overwrite")
             .parquet(lsm.tombstones_dir(out_dir, gen))
         )
-        return dict(obs_dead.get)
+        return {k: int(v or 0) for k, v in obs_dead.get.items()}
     # term-stats correction needs each dead NONBINARY doc's distinct term
     # set. map_keys(tfm) from doc_map point-scatters into the tfm column:
     # hash-spread ids touch every row group, so a 1% update reads ~the
@@ -1237,7 +1848,7 @@ def _update_delta(
             .partitionBy("seg")
             .parquet(gen_dm_dir)
         )
-        return dict(obs_new.get)
+        return {k: int(v or 0) for k, v in obs_new.get.items()}
 
     # tombstone write and fresh tokenize+write are independent small jobs
     # on a fixed-dispatch-heavy chain: run them concurrently (guide §2.6 —
@@ -1252,29 +1863,8 @@ def _update_delta(
         dead_stats = _f_dead.result()
         new_stats = _f_new.result()
 
-    _mark("tombstones_and_fresh_doc_map")
-
-    # ---- exact arithmetic stats (see module docstring of index/lsm.py)
-    n_docs_nb = int(meta["n_docs"]) - int(dead_stats["dead_nb"] or 0) + int(
-        new_stats["new_nb"] or 0
-    )
-    total_old = meta.get("total_tokens")
-    if total_old is None:
-        # pre-LSM meta: one narrow doc_len scan upgrades it (then never again)
-        total_old = int(
-            spark.read.parquet(paths.doc_map)
-            .agg(F.sum(F.when(nb, F.col("doc_len")))).collect()[0][0] or 0
-        )
-    total_tokens = (
-        int(total_old) - int(dead_stats["dead_dl"] or 0)
-        + int(new_stats["new_dl"] or 0)
-    )
-    avgdl = (total_tokens / n_docs_nb) if n_docs_nb > 0 else 0.0
-    snapshot = lsm.merge_snapshot(
-        meta["input_snapshot"],
-        int(dead_stats["n_dead"] or 0), int(dead_stats["dead_xor"] or 0),
-        int(new_stats["n_new"] or 0), int(new_stats["new_xor"] or 0),
-    )
+    clock.mark("tombstones_and_fresh_doc_map")
+    totals = _arith_stats(out_dir, meta, dead_stats, new_stats)
 
     # ---- new generation's postings, encoded under the NEW avgdl (the
     # per-row avgdl_enc + WAND bound scaling keep older generations sound)
@@ -1289,7 +1879,7 @@ def _update_delta(
             # generation; bounded above by the geometry rule (memory: one
             # group's rows per task) for corpus-scale deltas
             _encode_and_write_postings(
-                spark, pairs, gen_post_dir, avgdl,
+                spark, pairs, gen_post_dir, totals["avgdl"],
                 float(meta["k1"]), float(meta["b"]), int(meta["block_size"]),
                 n_groups=min(max(len(affected), 1) * term_buckets,
                              max(16, n_fresh // 64 + 1)),
@@ -1350,14 +1940,9 @@ def _update_delta(
         return int(obs_ts.get["rows"])
 
     # ---- derived-store delta hooks (each with its own crash fallback)
-    from ck_spark.query.trigram import (
-        TRIGRAM_DIR, maybe_compact_trigram, refresh_trigram_append,
-    )
+    from ck_spark.query.trigram import refresh_trigram_append
 
-    _tri_dir = os.path.join(out_dir, TRIGRAM_DIR)
-    tri_refresh = os.path.exists(_tri_dir) and store_content
-    if os.path.exists(_tri_dir) and not store_content:
-        shutil.rmtree(_tri_dir, ignore_errors=True)
+    tri_refresh = _trigram_refresh(out_dir, store_content)
 
     def _run_trigram() -> None:
         if tri_refresh and n_fresh > 0:
@@ -1369,22 +1954,15 @@ def _update_delta(
                 spark, out_dir,
                 docs_delta.where(nb).select(
                     "doc_id", F.col("seg").cast("int").alias("seg"), "content"
-                ) if store_content else
-                corpus.withColumn("doc_id", doc_id_expr())
-                .join(F.broadcast(fresh_ids), "doc_id", "left_semi")
-                .withColumn("seg", seg_expr(n_segments))
-                .select("doc_id", "seg", "content"),
-                n_fresh=stats["added"] + stats["modified"],
+                ),
+                n_fresh=n_fresh,
                 allow_compact=False,
             )
         # removal-only updates (n_fresh == 0) need NO trigram mutation: the
         # index is an over-approximation and dead docs drop out of the live
         # doc_map that the candidate fetch joins — the marker stays valid
 
-    from ck_spark.index.content_store import (
-        COMPACT, build_content_store, commit_content_store_delta,
-        stage_content_store_delta,
-    )
+    from ck_spark.index.content_store import stage_content_store_delta
 
     # the blob append needs (seg, doc_id, repo, path, lang, content,
     # is_binary) for the fresh docs — with stored content the written
@@ -1403,15 +1981,14 @@ def _update_delta(
     def _run_cs_stage():
         return stage_content_store_delta(
             spark, out_dir, affected, fresh_light,
-            dead_ids.unionByName(fresh_ids).distinct(),
-            stats["added"] + stats["modified"],
+            dead_ids.unionByName(fresh_ids).distinct(), n_fresh,
         )
 
     def _run_collision_check() -> int:
         # within-batch collision check (countDistinct is not allowed
         # inside observed metrics) — one narrow doc_id-only scan of the
         # small generation, rides the concurrent phase; its verdict is
-        # consumed BEFORE the meta commit below
+        # consumed by the commit, BEFORE the meta write
         if n_fresh == 0:
             return 0
         return int(
@@ -1437,83 +2014,26 @@ def _update_delta(
         _f_tri.result()
         cs_stage = _f_cs.result()
         ndist = _f_nd.result()
-    _mark("postings_terms_trigram_cs")
-    if n_fresh > 0 and int(new_stats["n_new"]) != int(ndist):
-        # nothing is committed yet (the meta write below is the single
-        # commit point); drop the staged generation dirs — any remainder
-        # is orphan-GC'd by the next update
-        shutil.rmtree(gen_dm_dir, ignore_errors=True)
-        shutil.rmtree(gen_post_dir, ignore_errors=True)
-        raise RuntimeError(
-            "doc_id collision inside the update batch — rehash with a salt"
-        )
-    if cs_stage is not None:
-        # bracket the pointer-table commit: it lands AFTER the meta commit
-        # below, so a crash between the two would otherwise leave the new
-        # generation's docs permanently missing from the pointer table
-        # (readers are safe meanwhile — the store's completion marker is
-        # already invalidated, so fetches use the parquet live view);
-        # repair_index re-derives the flagged segments and clears this.
-        man.save_marker("cs_refresh_pending", {"segs": affected})
-
-    # ---- THE commit point: one atomic meta write makes gen live
-    meta.update({
-        "gens": lsm.live_gens(meta) + [gen],
-        "n_docs": n_docs_nb,
-        "avgdl": avgdl,
-        "total_tokens": total_tokens,
-        "input_snapshot": snapshot,
-        "n_terms": n_terms,
-        "term_stats_dir": os.path.relpath(ts_dir, out_dir),
-        "n_tombstones": int(meta.get("n_tombstones") or 0)
-        + int(dead_stats["n_dead"] or 0),
-    })
-    man.save_meta(meta)
-    # the corpus_stats side table mirrors the COMMITTED meta, so it is
-    # written only after the commit: a crash before it leaves the table
-    # at the prior generation's values, equal to the prior meta
-    _write_corpus_stats(spark, paths, n_docs_nb,
-                        avgdl if n_docs_nb > 0 else None, total_tokens)
-
-    if tri_refresh:
-        maybe_compact_trigram(spark, out_dir)
-    if cs_stage == COMPACT:
-        build_content_store(spark, out_dir)
-        man.clear_marker("cs_refresh_pending")
-    elif cs_stage is not None:
-        commit_content_store_delta(
-            spark, out_dir, affected, *cs_stage,
-            n_change=stats["added"] - stats["removed"],
-        )
-        man.clear_marker("cs_refresh_pending")
-
-    _mark("commit")
-    stats["stage_ms"] = _stage_ms
-    stats["build_ms"] = int((time.time() - t_start) * 1000)
-    man.complete(
-        "update", int(time.time()), snapshot,
-        stats["added"] + stats["modified"], n_terms, stats["build_ms"],
-        lineage=f"delta gen={gen} +{stats['added']} ~{stats['modified']} "
-                f"-{stats['removed']}",
+    clock.mark("postings_terms_trigram_cs")
+    return _Generation(
+        gen=gen, stats=stats, affected=affected, n_fresh=n_fresh,
+        ndist=ndist, dead=dead_stats, new=new_stats, totals=totals,
+        n_terms=n_terms, tri_refresh=tri_refresh, cs_stage=cs_stage,
     )
-    shutil.rmtree(diff_dir, ignore_errors=True)  # staging outlived its use
-    if lsm.needs_compaction(meta):
-        compact_index(spark, out_dir, store=store)
-        stats["compacted"] = True
-    return stats
 
 
 def compact_index(spark: SparkSession, out_dir: str,
                   store: "SegmentStore | None" = None) -> bool:
     """Fold every LSM delta generation back into the base (generation 0)
     — the Lucene merge analogue, and the amortized cost the delta path
-    defers. The folded doc_map stages COMPLETELY before the
-    compact-in-progress marker is written, so the rename-aside heal
-    always rolls FORWARD: a crash anywhere in the window converges to
-    the compacted index on the next repair. Verifies the arithmetic
-    stats against a full recompute (the fingerprint must match — a
-    mismatch means an exactness bug and raises). Returns True if a
-    compaction ran."""
+    defers. The folded doc_map stages COMPLETELY and is verified before
+    the compact-in-progress marker is written: its row count, distinct
+    ids and fingerprint must match the arithmetic stats (a mismatch
+    means an exactness bug — the staged fold is dropped, the index keeps
+    its generations, and this raises). So the rename-aside heal always
+    rolls FORWARD a verified fold: a crash anywhere in the window
+    converges to the compacted index on the next repair. Returns True if
+    a compaction ran."""
     if store is None:
         from ck_spark.index.format import ParquetDirStore
 
@@ -1528,17 +2048,44 @@ def compact_index(spark: SparkSession, out_dir: str,
     live = lsm.live_doc_map(spark, out_dir, meta)
     cols = doc_map_cols(bool(meta.get("store_content", False)))
     tmp = store.stage(live.select(*cols), paths.root, int(meta["n_segments"]))
-    man.save_marker("compact_inprogress", {"tmp": tmp, "ts": time.time()})
-    _finish_compact(spark, out_dir, store, man, meta, tmp, heal=False)
+    summary = _summarize_doc_map(spark.read.parquet(tmp))
+    try:
+        _verify_fold(summary, meta.get("input_snapshot"))
+    except RuntimeError:
+        store.cleanup(tmp)
+        raise
+    man.save_marker("compact_inprogress",
+                    {"tmp": tmp, "ts": time.time(), "summary": summary})
+    _finish_compact(spark, out_dir, store, man, meta, tmp, heal=False,
+                    summary=summary)
     return True
 
 
+def _verify_fold(summary: dict, arith_snapshot: str | None) -> None:
+    """A folded doc_map must hold distinct ids and the fingerprint the
+    updates maintained arithmetically."""
+    if summary["n"] != summary["nd"]:
+        raise RuntimeError(
+            f"doc_id collision surfaced by compaction: {summary['n']} rows, "
+            f"{summary['nd']} ids"
+        )
+    if arith_snapshot is not None and summary["snapshot"] != arith_snapshot:
+        raise RuntimeError(
+            "LSM arithmetic-stats drift: compacted fingerprint "
+            f"{summary['snapshot']} != maintained {arith_snapshot} — "
+            "exactness bug"
+        )
+
+
 def _finish_compact(spark: SparkSession, out_dir: str, store: "SegmentStore",
-                    man: Manifest, meta: dict, tmp: str, heal: bool) -> None:
-    """Swap (or heal) the folded base in, then restore the gen-less
-    single-table layout: postings re-encoded from the new base, term
-    dictionary recomputed to the base path, deltas GC'd. Shared by
-    compact_index and repair_index (crash recovery)."""
+                    man: Manifest, meta: dict, tmp: str, heal: bool,
+                    summary: dict | None = None) -> None:
+    """Swap (or heal) the verified folded base in, then restore the
+    gen-less single-table layout: postings re-encoded from the new base,
+    term dictionary recomputed to the base path, deltas GC'd. Shared by
+    compact_index and repair_index (crash recovery). `summary` is the
+    staged fold's, verified before the marker was written; a marker
+    without one (older code) is summarized and verified after the heal."""
     from ck_spark.index import lsm
 
     paths = IndexPaths(out_dir)
@@ -1548,27 +2095,21 @@ def _finish_compact(spark: SparkSession, out_dir: str, store: "SegmentStore",
     else:
         store.swap(paths.doc_map, all_segs, tmp)
     store.cleanup(tmp)
+    if summary is None:
+        summary = _summarize_doc_map(spark.read.parquet(paths.doc_map))
+        _verify_fold(summary, meta.get("input_snapshot"))
     # base now IS the live view: retire generations/tombstones FIRST so no
     # reader anti-joins an old gen-0 tombstone against a freshly folded
     # row (queries inside the remaining window are bracketed by the
     # compact-in-progress marker, which load warns on)
-    arith_snapshot = meta.get("input_snapshot")
     meta.update({"gens": [], "n_tombstones": 0})
     man.save_meta(meta)
-    n, nd, snapshot, n_docs_nb, avgdl, total_tokens = \
-        _summarize_and_write_stats(spark, paths)
-    if n != nd:
-        raise RuntimeError(
-            f"doc_id collision surfaced by compaction: {n} rows, {nd} ids"
-        )
-    if arith_snapshot is not None and snapshot != arith_snapshot:
-        raise RuntimeError(
-            "LSM arithmetic-stats drift: compacted fingerprint "
-            f"{snapshot} != maintained {arith_snapshot} — exactness bug"
-        )
+    _write_corpus_stats(paths, summary["n_docs"], summary["avgdl"],
+                        summary["total_tokens"])
     for s in all_segs:
         shutil.rmtree(os.path.join(paths.postings, f"seg={s}"), ignore_errors=True)
     term_buckets = int(meta["term_buckets"])
+    avgdl = float(summary["avgdl"] or 0.0)
     _encode_and_write_postings(
         spark, _pairs_df(spark.read.parquet(paths.doc_map), term_buckets),
         paths.postings, avgdl,
@@ -1578,14 +2119,14 @@ def _finish_compact(spark: SparkSession, out_dir: str, store: "SegmentStore",
     )
     n_terms = _write_term_stats(spark, paths)
     meta.update({
-        "avgdl": avgdl, "n_docs": n_docs_nb, "n_terms": int(n_terms),
-        "input_snapshot": snapshot, "term_stats_dir": "term_stats",
-        "total_tokens": total_tokens,
+        "avgdl": avgdl, "n_docs": summary["n_docs"], "n_terms": int(n_terms),
+        "input_snapshot": summary["snapshot"], "term_stats_dir": "term_stats",
+        "total_tokens": summary["total_tokens"],
     })
     man.save_meta(meta)
     man.clear_marker("compact_inprogress")
     lsm.clear_deltas(out_dir)
     man.complete(
-        "compact", int(time.time()), snapshot, n, n_terms, 0,
-        lineage="lsm-compaction: generations folded into base",
+        "compact", int(time.time()), summary["snapshot"], summary["n"],
+        n_terms, 0, lineage="lsm-compaction: generations folded into base",
     )

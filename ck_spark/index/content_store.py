@@ -368,7 +368,9 @@ def stage_content_store_delta(
     happens here; the commit half is pure renames. Returns None (no
     store), COMPACT (caller must build_content_store AFTER the commit, so
     the rebuild sees the new live view), or (stage_dir, delta_docs) to
-    pass to commit_content_store_delta.
+    pass to commit_content_store_delta. ``fresh_docs`` as a pandas frame
+    (and ``changed_ids`` as an id array) is the driver write tier's call:
+    the same staging with pyarrow, no Spark job.
 
     Crash protocol: the marker is moved aside first — a crash anywhere
     between here and commit leaves readers on the parquet fallback and
@@ -381,23 +383,31 @@ def stage_content_store_delta(
     if not os.path.isdir(store):
         return None
     invalidate_content_store_marker(root)
+    for name in os.listdir(store):
+        if name.startswith("_ptr_stage_"):
+            # a crashed update's staging (single-writer discipline: any
+            # staging present at stage start is stale)
+            shutil.rmtree(os.path.join(store, name), ignore_errors=True)
     marker = _read_any_marker(root)
     n_total = max(int(Manifest(root).load_meta().get("n_docs") or 1), 1)
     delta_docs = int(marker.get("delta_docs", 0)) + int(n_fresh)
     if delta_docs > n_total * DELTA_COMPACT_FRACTION:
         return COMPACT
     blobs_dir = os.path.join(store, BLOBS_SUBDIR)
+    seg_list = [int(s) for s in segs]
+    stage = os.path.join(store, f"_ptr_stage_{uuid.uuid4().hex}")
+    if isinstance(fresh_docs, pd.DataFrame):
+        _stage_ptr_local(root, seg_list, fresh_docs, changed_ids, stage)
+        return stage, delta_docs
     fresh_ptr = fresh_docs.select(*_DM_COLS).mapInPandas(
         _blob_writer(blobs_dir), _PTR_TABLE_SCHEMA
     )
-    seg_list = [int(s) for s in segs]
     merged = (
         _ptr_df(spark, root)
         .where(F.col("seg").isin(seg_list))
         .join(changed_ids.select("doc_id"), "doc_id", "left_anti")
         .unionByName(fresh_ptr)
     )
-    stage = os.path.join(store, f"_ptr_stage_{uuid.uuid4().hex}")
     (
         merged.repartition("seg")
         .sortWithinPartitions("seg", "doc_id")
@@ -406,6 +416,35 @@ def stage_content_store_delta(
         .parquet(stage)
     )
     return stage, delta_docs
+
+
+# pointer rows per row group of a driver-written pointer file: ~100 B a
+# row, so the ~2 MB row groups of the Spark writer's parquet.block.size
+_PTR_GROUP_ROWS = 20_000
+
+
+def _stage_ptr_local(root: str, segs: list[int], fresh_docs: pd.DataFrame,
+                     changed_ids, stage: str) -> None:
+    """Driver twin of the Spark staging in stage_content_store_delta: the
+    same blob append (_blob_writer over the fresh rows) and pointer merge
+    (the segments' old rows minus the changed ids, plus the fresh ones),
+    written with pyarrow — one file per seg dir, doc_id-sorted."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+
+    from ck_spark.plans.schemas import arrow_dataset, write_partitioned
+
+    blobs_dir = os.path.join(_store_dir(root), BLOBS_SUBDIR)
+    fresh = pd.concat(list(_blob_writer(blobs_dir)(iter([fresh_docs[_DM_COLS]]))),
+                      ignore_index=True)
+    old = arrow_dataset(os.path.join(_store_dir(root), PTR_SUBDIR),
+                        _PTR_TABLE_SCHEMA, ("seg",)).to_table(
+        filter=pads.field("seg").isin(segs)
+        & ~pads.field("doc_id").isin(pa.array(np.asarray(changed_ids, dtype=np.int64))))
+    merged = pa.concat_tables(
+        [old, pa.Table.from_pandas(fresh, preserve_index=False).cast(old.schema)])
+    write_partitioned(merged, stage, _PTR_TABLE_SCHEMA, ("seg",), ("doc_id",),
+                      row_group_size=_PTR_GROUP_ROWS)
 
 
 def commit_content_store_delta(
@@ -564,53 +603,59 @@ class ContentStore:
     def fetch_pred_local(self, segs, doc_ids,
                          exclude_binary: bool = False
                          ) -> "pd.DataFrame | None":
-        """Driver-side point read (NO Spark job): pyarrow filters the
-        hive-partitioned pointer table, then ranged reads inflate the
-        blobs. Returns a pandas frame with FETCH_SCHEMA's columns, or
-        None when the set exceeds LOCAL_FETCH_MAX (use fetch_pred). On a
-        cluster the blobs sit on the shared store — the same ranged reads
-        through its fs client (pyarrow handles file/hdfs/s3 URIs)."""
-        import zlib
-
-        import pyarrow.dataset as pads
-
-        ids = sorted({int(i) for i in doc_ids})
-        if len(ids) > self.LOCAL_FETCH_MAX:
+        """Driver-side point read (NO Spark job, see fetch_local), or None
+        when the set exceeds LOCAL_FETCH_MAX (use fetch_pred)."""
+        if len({int(i) for i in doc_ids}) > self.LOCAL_FETCH_MAX:
             return None
-        # explicit schema, the same one _ptr_df reads with: pyarrow
-        # dataset discovery infers from ONE fragment, so on a
-        # pre-format-2 store that later received a packed delta append it
-        # could land on an old file without blk_off and silently hand
-        # every packed doc its whole multi-doc block as content
-        from ck_spark.plans.schemas import arrow_dataset
+        return fetch_local(self.root, segs, doc_ids, exclude_binary)
 
-        dset = arrow_dataset(os.path.join(_store_dir(self.root), PTR_SUBDIR),
-                             _PTR_TABLE_SCHEMA, ("seg",))
-        flt = (
-            pads.field("seg").isin([int(s) for s in set(segs)])
-            & pads.field("doc_id").isin(ids)
-        )
-        if exclude_binary:
-            flt = flt & ~pads.field("is_binary")
-        want = ["doc_id", "repo", "path", "lang", "file", "off", "clen",
-                "raw_len", "blk_off"]
-        tbl = dset.to_table(columns=want, filter=flt)
-        pdf = tbl.to_pandas().reset_index(drop=True)
-        boffs = pdf["blk_off"].fillna(0).astype("int64")
-        rlens = pdf["raw_len"].astype("int64")
-        contents = np.empty(len(pdf), dtype=object)
-        for fname, grp in pdf.groupby("file", sort=False):
-            grp = grp.sort_values(["off", "blk_off"])
-            with open(os.path.join(self.blobs_dir, fname), "rb") as fh:
-                last_off, block = -1, b""
-                for pos, off, clen in zip(grp.index, grp["off"], grp["clen"]):
-                    if int(off) != last_off:
-                        fh.seek(int(off))
-                        block = zlib.decompress(fh.read(int(clen)))
-                        last_off = int(off)
-                    s = int(boffs[pos])
-                    contents[pos] = block[s:s + int(rlens[pos])
-                                          ].decode("utf-8")
-        out = pdf[["doc_id", "repo", "path", "lang"]].copy()
-        out["content"] = contents
-        return out
+
+def fetch_local(root: str, segs, doc_ids,
+                exclude_binary: bool = False) -> pd.DataFrame:
+    """Driver-side point read (NO Spark job): pyarrow filters the
+    hive-partitioned pointer table, then ranged reads inflate the blobs.
+    Returns a pandas frame with FETCH_SCHEMA's columns. On a cluster the
+    blobs sit on the shared store — the same ranged reads through its fs
+    client (pyarrow handles file/hdfs/s3 URIs)."""
+    import zlib
+
+    import pyarrow.dataset as pads
+
+    from ck_spark.plans.schemas import arrow_dataset
+
+    ids = sorted({int(i) for i in doc_ids})
+    # explicit schema, the same one _ptr_df reads with: pyarrow
+    # dataset discovery infers from ONE fragment, so on a
+    # pre-format-2 store that later received a packed delta append it
+    # could land on an old file without blk_off and silently hand
+    # every packed doc its whole multi-doc block as content
+    dset = arrow_dataset(os.path.join(_store_dir(root), PTR_SUBDIR),
+                         _PTR_TABLE_SCHEMA, ("seg",))
+    flt = (
+        pads.field("seg").isin([int(s) for s in set(segs)])
+        & pads.field("doc_id").isin(ids)
+    )
+    if exclude_binary:
+        flt = flt & ~pads.field("is_binary")
+    want = ["doc_id", "repo", "path", "lang", "file", "off", "clen",
+            "raw_len", "blk_off"]
+    tbl = dset.to_table(columns=want, filter=flt)
+    pdf = tbl.to_pandas().reset_index(drop=True)
+    boffs = pdf["blk_off"].fillna(0).astype("int64")
+    rlens = pdf["raw_len"].astype("int64")
+    contents = np.empty(len(pdf), dtype=object)
+    blobs_dir = os.path.join(_store_dir(root), BLOBS_SUBDIR)
+    for fname, grp in pdf.groupby("file", sort=False):
+        grp = grp.sort_values(["off", "blk_off"])
+        with open(os.path.join(blobs_dir, fname), "rb") as fh:
+            last_off, block = -1, b""
+            for pos, off, clen in zip(grp.index, grp["off"], grp["clen"]):
+                if int(off) != last_off:
+                    fh.seek(int(off))
+                    block = zlib.decompress(fh.read(int(clen)))
+                    last_off = int(off)
+                s = int(boffs[pos])
+                contents[pos] = block[s:s + int(rlens[pos])].decode("utf-8")
+    out = pdf[["doc_id", "repo", "path", "lang"]].copy()
+    out["content"] = contents
+    return out

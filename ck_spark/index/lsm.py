@@ -33,7 +33,10 @@ Exactness (what a full recompute would give, without its cost):
                   fingerprint needs no full scan either)
 Dead docs' term sets come from their stored tfm maps, or, when the
 content store exists, from re-tokenizing their old content fetched by
-ranged blob reads (IO ∝ the change; builder._update_delta).
+ranged blob reads (IO ∝ the change; builder._update_delta). A small
+update computes all of this on the driver (builder's driver write tier)
+through the pyarrow twins below (live_rows, tombstone_sets); both tiers
+write the same generation layout.
 
 Visibility/commit: a generation is LIVE iff its number is in
 meta["gens"]; meta writes are atomic (tmp+rename), so a crash anywhere
@@ -211,6 +214,48 @@ def postings_datasets(root: str, meta: dict) -> list:
         if os.path.isdir(d):  # a pure-removal update writes no postings
             out.append((g, arrow_dataset(d, ddl, delta_part)))
     return out
+
+
+def doc_map_datasets(root: str, meta: dict) -> list:
+    """Driver-side twin of live_doc_map's inputs: (gen, dataset) for the
+    base (0) and every live delta generation, hive-partitioned over seg
+    and read with the doc_map's own schema."""
+    from ck_spark.index.builder import doc_map_schema
+    from ck_spark.plans.schemas import arrow_dataset
+
+    ddl = doc_map_schema(bool(meta.get("store_content", False)))
+    out = [(0, arrow_dataset(os.path.join(root, "doc_map"), ddl, ("seg",)))]
+    for g in live_gens(meta):
+        d = delta_doc_map_dir(root, g)
+        if os.path.isdir(d):
+            out.append((g, arrow_dataset(d, ddl, ("seg",))))
+    return out
+
+
+def live_rows(root: str, meta: dict, columns: list[str], doc_ids=None):
+    """Driver-side twin of live_doc_map for the driver write tier: the
+    live view's `columns` plus doc_id and `gen` (0 = base) as one Arrow
+    table, tombstoned versions dropped; with `doc_ids`, only rows whose
+    doc_id is in it."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+
+    flt = None if doc_ids is None else pads.field("doc_id").isin(
+        pa.array(np.asarray(doc_ids, dtype=np.int64)))
+    dead: dict[int, list] = {}
+    for (g, _seg), ids in tombstone_sets(root, meta).items():
+        dead.setdefault(g, []).append(ids)
+    cols = list(dict.fromkeys(["doc_id", *columns]))
+    parts = []
+    for g, ds in doc_map_datasets(root, meta):
+        t = ds.to_table(columns=cols, filter=flt)
+        if g in dead:
+            t = t.filter(pa.array(~np.isin(t.column("doc_id").to_numpy(),
+                                           np.concatenate(dead[g]))))
+        parts.append(t.append_column(
+            "gen", pa.array(np.full(t.num_rows, g, dtype=np.int32))))
+    return pa.concat_tables(parts)
 
 
 _TOMBSTONE_SCHEMA = "gen int, seg int, doc_id long, created int"

@@ -5,6 +5,7 @@ does this engine."""
 from __future__ import annotations
 
 import functools
+import os
 
 from pyspark.sql.types import (
     ArrayType,
@@ -123,6 +124,62 @@ def _arrow_schema(ddl: str):
     from pyspark.sql.pandas.types import to_arrow_schema
 
     return to_arrow_schema(StructType.fromDDL(ddl))
+
+
+def write_parquet(table, directory: str, ddl: str, partition_cols: tuple = (),
+                  stats_cols: tuple = (), **write_opts) -> str:
+    """Write ``table`` as ONE parquet file in ``directory`` — the
+    driver-side writer of the tables Spark also writes. The file carries
+    the Arrow schema of the DDL string ``ddl`` minus ``partition_cols``
+    (they are directory levels), zstd at parquet-mr's default level 3
+    (the session's codec) and no Arrow/pandas schema metadata, so Spark
+    and the pyarrow readers cannot tell it from a Spark-written file.
+    Min/max statistics are kept for ``stats_cols`` only, the columns
+    readers prune row groups by: pyarrow writes them into every page
+    header as well as the footer, and for wide columns (content, posting
+    blocks) they cost more bytes than the data. No dictionary pages:
+    parquet-mr drops a dictionary that does not pay, pyarrow keeps it,
+    and on these delta-sized files plain pages came out smaller (a
+    15-doc upsert's files: 10-20% fewer bytes). ``write_opts`` go to
+    pyarrow.parquet.write_table. Returns the file path."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = _arrow_schema(ddl)
+    schema = pa.schema([f for f in schema if f.name not in partition_cols])
+    os.makedirs(directory, exist_ok=True)
+    path = os.path.join(directory, f"part-00000-{uuid.uuid4()}.zstd.parquet")
+    pq.write_table(table.select(schema.names).cast(schema), path,
+                   compression="zstd", compression_level=3, store_schema=False,
+                   write_statistics=list(stats_cols), use_dictionary=False,
+                   **write_opts)
+    return path
+
+
+def write_partitioned(table, root: str, ddl: str, partition_cols: tuple,
+                      sort_by: tuple, **write_opts) -> None:
+    """Driver-side twin of Spark's ``sortWithinPartitions(...).write
+    .partitionBy(*partition_cols)`` for a small table: one file per hive
+    partition directory under ``root``, rows sorted by ``sort_by``, with
+    statistics on the sort columns."""
+    import numpy as np
+
+    n = table.num_rows
+    if n == 0:
+        return
+    table = table.sort_by([(c, "ascending") for c in (*partition_cols, *sort_by)])
+    keys = [table.column(c).to_numpy() for c in partition_cols]
+    starts = np.zeros(n, dtype=bool)
+    starts[0] = True
+    for k in keys:
+        starts[1:] |= k[1:] != k[:-1]
+    bounds = np.r_[np.flatnonzero(starts), n]
+    for s, e in zip(bounds[:-1], bounds[1:]):
+        part = [f"{c}={k[s]}" for c, k in zip(partition_cols, keys)]
+        write_parquet(table.slice(s, e - s), os.path.join(root, *part), ddl,
+                      partition_cols, sort_by, **write_opts)
 
 
 def arrow_dataset(path: str, ddl: str, partition_cols: tuple = ()):

@@ -150,14 +150,6 @@ def _node_dnf(nodes) -> list[set[str]]:
     return dnf
 
 
-def required_substrings(parsed) -> set[str]:
-    """Substrings required (lowercased) in ANY match of the parsed
-    sub-pattern regardless of which alternative matched — the
-    intersection of the DNF's clauses (back-compat conjunctive view)."""
-    dnf = _node_dnf(list(parsed))
-    return set.intersection(*dnf) if dnf else set()
-
-
 def _trigrams_of(strings) -> set[str]:
     """BYTE trigrams of each string's UTF-8 encoding, rendered latin-1
     (one char per byte — identical to the plain substring for ASCII).
@@ -760,6 +752,31 @@ def _encode_and_write_grams(
     return int(obs.get["rows"])
 
 
+def _write_grams_local(docs: pd.DataFrame, term_buckets: int,
+                       out_dir: str) -> int:
+    """Driver twin of _encode_and_write_grams(bucket_dirs=False) for a
+    small delta append: the same extraction and block-encode kernels
+    (_extract_pairs, _encode_pairs_chunk) over the (doc_id, seg, content)
+    rows, NUL-containing docs excluded, written as one file per seg dir
+    with bucket a sorted data column. Returns the written row count."""
+    import pyarrow as pa
+
+    from ck_spark.plans.schemas import write_partitioned
+
+    texts = docs["content"].fillna("")
+    keep = ~texts.str.contains("\x00", regex=False).to_numpy()
+    codes, didx = _extract_pairs(
+        [str(t).lower().encode("utf-8") for t in texts[keep]])
+    rows = _encode_pairs_chunk(
+        [codes], [didx], [docs["doc_id"].to_numpy(np.int64)[keep]],
+        [docs["seg"].to_numpy(np.int64)[keep]], term_buckets)
+    if rows.empty:
+        return 0
+    write_partitioned(pa.Table.from_pandas(rows, preserve_index=False), out_dir,
+                      _TRIGRAM_TABLE_SCHEMA, ("seg",), ("bucket", "ghash"))
+    return len(rows)
+
+
 GRAM_STATS_DIR = "_gram_stats"  # _-prefixed: invisible to partition discovery
 
 
@@ -920,6 +937,10 @@ def refresh_trigram_append(
     hash-scattered segments a per-segment rebuild would touch EVERY
     segment and cost a full rebuild, the trap this design dodges.
 
+    ``fresh_docs`` as a pandas frame of (doc_id, seg, content) is the
+    driver write tier's call: the same append through _write_grams_local,
+    no Spark job.
+
     Caller protocol (builder.update_index): marker invalidated at the
     start of the mutation window; crash => marker absent => full-scan
     fallback; a rerun may append the same delta twice, which is only more
@@ -935,7 +956,14 @@ def refresh_trigram_append(
     n_docs_total = max(int(meta.get("n_docs") or 1), 1)
     out_dir = os.path.join(root, TRIGRAM_DIR)
     old = _read_trigram_marker(root)
-    if old and old.get("gram_key") != GRAM_KEY:
+    if not old:
+        # no committed marker: an earlier refresh crashed inside its window
+        # (or the build never finished), and with it went the count of
+        # committed appends — appending now would publish an index that
+        # lacks them (missed matches). Leave it unmarked (the full-scan
+        # fallback); maybe_compact_trigram rebuilds it after the commit.
+        return 0
+    if old.get("gram_key") != GRAM_KEY:
         # base index keyed with a previous gram scheme: delta rows in the
         # current keying would never intersect — rebuild instead
         return compact_trigram_index(spark, root)
@@ -959,17 +987,22 @@ def refresh_trigram_append(
                                       ignore_errors=True)
                 except ValueError:
                     pass
-    docs = fresh_docs.select("doc_id", "seg", "content")
-    if n_fresh is None:
-        n_fresh = docs.count()
-    # Observation.get would hang on a plan that runs no tasks — guard the
-    # nothing-to-append case (update with only removals)
-    appended = 0 if n_fresh == 0 else _encode_and_write_grams(
-        spark, docs, term_buckets,
-        os.path.join(ddir, f"app={n_apps}"), bucket_dirs=False,
-        n_segments=int(meta.get("n_segments") or 1),
-        n_docs_hint=int(n_fresh),
-    )
+    app_dir = os.path.join(ddir, f"app={n_apps}")
+    if isinstance(fresh_docs, pd.DataFrame):
+        appended = _write_grams_local(fresh_docs, term_buckets, app_dir)
+        if n_fresh is None:
+            n_fresh = len(fresh_docs)
+    else:
+        docs = fresh_docs.select("doc_id", "seg", "content")
+        if n_fresh is None:
+            n_fresh = docs.count()
+        # Observation.get would hang on a plan that runs no tasks — guard
+        # the nothing-to-append case (update with only removals)
+        appended = 0 if n_fresh == 0 else _encode_and_write_grams(
+            spark, docs, term_buckets, app_dir, bucket_dirs=False,
+            n_segments=int(meta.get("n_segments") or 1),
+            n_docs_hint=int(n_fresh),
+        )
     rows = base_rows + appended
     delta_docs = old_delta + int(n_fresh)
     if allow_compact and delta_docs > n_docs_total * DELTA_COMPACT_FRACTION:
@@ -981,12 +1014,13 @@ def refresh_trigram_append(
 
 def maybe_compact_trigram(spark: SparkSession, root: str) -> int | None:
     """Run the deferred compaction check (update_index calls this AFTER
-    its meta commit, so the rebuilt base derives from the NEW content)."""
+    its meta commit, so the rebuilt base derives from the NEW content).
+    An unmarked index (a crashed earlier refresh) is rebuilt as well."""
     from ck_spark.index.manifest import Manifest
 
     m = _read_trigram_marker(root)
     n_docs_total = max(int(Manifest(root).load_meta().get("n_docs") or 1), 1)
-    if int(m.get("delta_docs", 0)) > n_docs_total * DELTA_COMPACT_FRACTION:
+    if not m or int(m.get("delta_docs", 0)) > n_docs_total * DELTA_COMPACT_FRACTION:
         return compact_trigram_index(spark, root)
     return None
 

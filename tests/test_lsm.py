@@ -68,11 +68,9 @@ def _edit(base: pd.DataFrame, round_no: int) -> pd.DataFrame:
     return pd.concat([changed, extra], ignore_index=True)
 
 
-@pytest.fixture(scope="module")
-def rooted(spark, tmp_path_factory):
+def _rooted(spark, tmp):
     """One base index + three successive delta updates; the same final
     corpus built fresh for comparison."""
-    tmp = tmp_path_factory.mktemp("lsm")
     base = generate_corpus(220, seed=7)
     inc_root = str(tmp / "inc")
     build_index(spark, spark.createDataFrame(base), inc_root, mode="code",
@@ -86,6 +84,32 @@ def rooted(spark, tmp_path_factory):
     build_index(spark, spark.createDataFrame(corpus), fresh_root, mode="code",
                 n_segments=5, term_buckets=8, build_groups=2)
     return inc_root, fresh_root, corpus, stats_log
+
+
+@pytest.fixture(scope="module")
+def rooted(spark, tmp_path_factory):
+    """Small updates: the driver write tier stages them."""
+    return _rooted(spark, tmp_path_factory.mktemp("lsm"))
+
+
+@pytest.fixture(scope="module")
+def rooted_spark(spark, tmp_path_factory):
+    """The same updates through the Spark tier (input cap 0)."""
+    from ck_spark.index import builder
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(builder, "LOCAL_UPDATE_MAX_DOCS", 0)
+        return _rooted(spark, tmp_path_factory.mktemp("lsm_spark"))
+
+
+def test_spark_tier_matches_fresh_build(spark, rooted_spark):
+    """The key cases below, on generations the Spark tier staged:
+    generations accumulate, answers and arithmetic stats equal a fresh
+    build, and compaction verifies and folds."""
+    test_delta_updates_accumulate_generations(spark, rooted_spark)
+    test_results_identical_to_fresh_build(spark, rooted_spark)
+    test_arithmetic_stats_exact(spark, rooted_spark)
+    test_compaction_folds_and_verifies(spark, rooted_spark)
 
 
 def test_delta_updates_accumulate_generations(spark, rooted):
@@ -243,6 +267,17 @@ def test_removal_only_update(spark, tmp_path):
     """A pure-removal delta writes an empty generation (tombstones only)
     — the empty doc_map/postings dirs must read cleanly and results must
     match a fresh build over the shrunk corpus."""
+    _removal_only_update(spark, tmp_path)
+
+
+def test_removal_only_update_spark_tier(spark, tmp_path, monkeypatch):
+    from ck_spark.index import builder
+
+    monkeypatch.setattr(builder, "LOCAL_UPDATE_MAX_DOCS", 0)
+    _removal_only_update(spark, tmp_path)
+
+
+def _removal_only_update(spark, tmp_path):
     base = generate_corpus(100, seed=23)
     root = str(tmp_path / "idx")
     build_index(spark, spark.createDataFrame(base), root, mode="code",
@@ -289,3 +324,42 @@ def test_corpus_stats_follows_the_meta_commit(spark, tmp_path, monkeypatch):
 
     stats = update_index(spark, spark.createDataFrame(changed), root)
     assert stats["gen"] and stats_match_meta()
+
+
+def test_compaction_drift_keeps_the_generations(spark, tmp_path):
+    """A fold whose fingerprint misses the maintained one (an exactness
+    bug, simulated by a falsified input_snapshot) fails safe: compaction
+    raises before anything is swapped, the staged fold is dropped, no
+    compact_inprogress marker is left, the generations stay live and
+    searchable, and repair has nothing to heal."""
+    base = generate_corpus(40, seed=13)
+    root = str(tmp_path / "drift")
+    build_index(spark, spark.createDataFrame(base), root, mode="code",
+                n_segments=2, term_buckets=4, build_groups=1)
+    batch = base.iloc[:2].copy()
+    new = generate_corpus(4, seed=14).iloc[:1].copy()
+    new["path"] = ["drift/new.py"]
+    batch = pd.concat([batch, new], ignore_index=True)
+    batch["content"] += "\n# zzdriftprobe\n"
+    update_index(spark, spark.createDataFrame(batch), root, full_snapshot=False)
+    man = Manifest(root)
+    meta = man.load_meta()
+    true_snapshot = meta["input_snapshot"]
+    meta["input_snapshot"] = "n1-h1"
+    man.save_meta(meta)
+
+    with pytest.raises(RuntimeError, match="drift"):
+        compact_index(spark, root)
+    assert man.load_meta()["gens"] == [1]
+    assert man.load_marker("compact_inprogress") is None
+    assert not os.path.exists(os.path.join(root, "_tmp_doc_map"))
+    assert repair_index(spark, root) is False
+    idx = BM25Index.load(spark, root)
+    assert len(idx.search("zzdriftprobe", k=10).collect()) == 3
+
+    meta["input_snapshot"] = true_snapshot
+    man.save_meta(meta)
+    assert compact_index(spark, root) is True
+    assert man.load_meta()["gens"] == []
+    idx = BM25Index.load(spark, root)
+    assert len(idx.search("zzdriftprobe", k=10).collect()) == 3

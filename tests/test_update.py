@@ -38,6 +38,19 @@ def corpora():
 
 
 def test_incremental_equals_fresh_build(spark, corpora, tmp_path):
+    _incremental_equals_fresh_build(spark, corpora, tmp_path)
+
+
+def test_incremental_equals_fresh_build_spark_tier(spark, corpora, tmp_path,
+                                                   monkeypatch):
+    """The same, staged by the Spark tier (input cap 0)."""
+    from ck_spark.index import builder
+
+    monkeypatch.setattr(builder, "LOCAL_UPDATE_MAX_DOCS", 0)
+    _incremental_equals_fresh_build(spark, corpora, tmp_path)
+
+
+def _incremental_equals_fresh_build(spark, corpora, tmp_path):
     base, changed = corpora
     inc_root = str(tmp_path / "inc")
     fresh_root = str(tmp_path / "fresh")
@@ -302,6 +315,19 @@ def test_update_trusted_sha_column_drives_the_diff(spark, tmp_path):
     a plain corpus gives, and a deliberately PERTURBED hash on an
     unchanged doc makes the diff re-ingest it (the column, not the
     content, decides)."""
+    _trusted_sha_column_drives_the_diff(spark, tmp_path)
+
+
+def test_update_trusted_sha_column_drives_the_diff_spark_tier(spark, tmp_path,
+                                                              monkeypatch):
+    """The same, staged by the Spark tier (input cap 0)."""
+    from ck_spark.index import builder
+
+    monkeypatch.setattr(builder, "LOCAL_UPDATE_MAX_DOCS", 0)
+    _trusted_sha_column_drives_the_diff(spark, tmp_path)
+
+
+def _trusted_sha_column_drives_the_diff(spark, tmp_path):
     import hashlib
 
     from ck_spark.corpus import generate_corpus
