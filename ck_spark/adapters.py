@@ -223,8 +223,11 @@ def search_documents_many(
     tie_buffer: int = 20,
     idx: BM25Index | None = None,
 ) -> DataFrame:
-    """Batched BM25 over documents: ONE search_many Spark job per fetch
-    round, with the same oracle-exact tie protocol as search_documents
+    """Batched BM25 over documents: one search_many call per fetch
+    round — scored on the driver with zero Spark jobs when the unscoped
+    batch's summed posting mass fits bm25.LOCAL_POSTINGS_MAX, else one
+    distributed plan — then one Spark join to the doc_map (below) and a
+    collect. The same oracle-exact tie protocol as search_documents is
     applied per query (fetch k+buffer; if a query's k-th score still
     ties its last fetched score, refetch with a 4x window).  Refetch
     rounds re-run ONLY the queries that reported a boundary tie, so a

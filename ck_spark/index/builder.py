@@ -1460,6 +1460,47 @@ def _dead_terms(out_dir: str, dead, mode: str) -> np.ndarray:
                                          mode))
 
 
+def _merge_term_stats(ts, delta: pd.Series, term_buckets: int) -> tuple:
+    """Add the signed per-term doc counts `delta` (indexed by term) to
+    the term dictionary `ts` (a TERM_STATS_SCHEMA Arrow table), keyed on
+    the delta's terms only: an old term's row is updated in place and
+    keeps its stored bucket, a new term gets n_segments 1 and
+    pmod(xxhash64(term)), and terms left at df <= 0 are dropped. The rows
+    come out sorted by (bucket, term). Returns (the merged table, the
+    delta terms' buckets as a Series indexed by term)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from ck_spark.codec import xxhash64_signed
+
+    term = ts.column("term").combine_chunks()
+    bucket = ts.column("bucket").to_numpy()
+    dterms = delta.index.to_numpy()
+    pos = pc.index_in(pa.array(dterms, pa.string()), value_set=term)
+    pos = pos.fill_null(-1).to_numpy()
+    hit = pos >= 0
+    dfs = delta.to_numpy()
+    df = ts.column("df").to_numpy().copy()
+    df[pos[hit]] += dfs[hit]
+    new_terms = dterms[~hit]
+    new_bucket = np.array([xxhash64_signed(t) % term_buckets for t in new_terms],
+                          np.int32)
+    merged = pa.table({
+        "bucket": pa.array(np.r_[bucket, new_bucket].astype(np.int32)),
+        "term": pa.concat_arrays([term, pa.array(new_terms, pa.string())]),
+        "df": pa.array(np.r_[df, dfs[~hit]]),
+        "n_segments": pa.array(np.r_[ts.column("n_segments").to_numpy(),
+                                     np.ones(new_terms.size, np.int64)]),
+    })
+    merged = merged.filter(pc.greater(merged.column("df"), 0))
+    merged = merged.take(pc.sort_indices(
+        merged, sort_keys=[("bucket", "ascending"), ("term", "ascending")]))
+    delta_bucket = np.empty(dterms.size, np.int32)
+    delta_bucket[hit] = bucket[pos[hit]]
+    delta_bucket[~hit] = new_bucket
+    return merged, pd.Series(delta_bucket, index=delta.index)
+
+
 def _stage_local(spark: SparkSession, inp, out_dir: str, full_snapshot: bool,
                  meta: dict, gen: int, clock: _StageClock,
                  stats: dict) -> "_Generation | None":
@@ -1470,7 +1511,6 @@ def _stage_local(spark: SparkSession, inp, out_dir: str, full_snapshot: bool,
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from ck_spark.codec import xxhash64_signed
     from ck_spark.index import lsm
     from ck_spark.index.content_store import (
         content_store_exists, stage_content_store_delta,
@@ -1565,8 +1605,7 @@ def _stage_local(spark: SparkSession, inp, out_dir: str, full_snapshot: bool,
     clock.mark("tombstones_and_fresh_doc_map")
     totals = _arith_stats(out_dir, meta, dead_stats, new_stats)
 
-    # ---- term dictionary: the Spark tier's signed-count merge; an old
-    # term keeps its stored bucket, a new one gets pmod(xxhash64(term))
+    # ---- term dictionary: the Spark tier's signed-count merge
     nb_idx = np.flatnonzero(nb)
     posm_nb = posm.take(pa.array(nb_idx))
     terms, poss = _map_entries(posm_nb)
@@ -1575,22 +1614,11 @@ def _stage_local(spark: SparkSession, inp, out_dir: str, full_snapshot: bool,
     delta = pd.Series(np.r_[np.ones(terms.size, np.int64),
                             -np.ones(dead_terms.size, np.int64)]).groupby(
         np.r_[terms, dead_terms]).sum()
-    ts = arrow_dataset(lsm.term_stats_path(out_dir, meta),
-                       TERM_STATS_SCHEMA).to_table().to_pandas().set_index("term")
-    merged = pd.DataFrame({"df": ts["df"].add(delta, fill_value=0)})
-    merged["n_segments"] = ts["n_segments"].reindex(merged.index).fillna(1)
-    merged["bucket"] = ts["bucket"].reindex(merged.index)
-    new_terms = merged.index[merged["bucket"].isna()]
-    merged.loc[new_terms, "bucket"] = [xxhash64_signed(t) % term_buckets
-                                       for t in new_terms]
-    merged = merged[merged["df"] > 0].sort_values(["bucket"], kind="stable")
-    write_parquet(pa.table({
-        "bucket": pa.array(merged["bucket"].to_numpy(np.int32)),
-        "term": pa.array(merged.index.to_numpy(), pa.string()),
-        "df": pa.array(merged["df"].to_numpy(np.int64)),
-        "n_segments": pa.array(merged["n_segments"].to_numpy(np.int64)),
-    }), lsm.term_stats_gen_dir(out_dir, gen), TERM_STATS_SCHEMA,
-        stats_cols=("bucket", "term"))
+    merged, delta_bucket = _merge_term_stats(
+        arrow_dataset(lsm.term_stats_path(out_dir, meta),
+                      TERM_STATS_SCHEMA).to_table(), delta, term_buckets)
+    write_parquet(merged, lsm.term_stats_gen_dir(out_dir, gen), TERM_STATS_SCHEMA,
+                  stats_cols=("bucket", "term"))
 
     # ---- postings of the non-binary fresh docs under the NEW avgdl
     # (every fresh term is in the merged dictionary: df' >= its new docs)
@@ -1606,7 +1634,7 @@ def _stage_local(spark: SparkSession, inp, out_dir: str, full_snapshot: bool,
             "term": pa.array(terms, pa.string()),
             "poss": poss,
             "tf": pc.list_value_length(poss),
-            "bucket": pa.array(merged["bucket"].reindex(terms).to_numpy(np.int32)),
+            "bucket": pa.array(delta_bucket.reindex(terms).to_numpy(np.int32)),
         })
         enc = pa.Table.from_batches(list(_make_partition_encoder(
             totals["avgdl"], float(meta["k1"]), float(meta["b"]),
@@ -1631,7 +1659,7 @@ def _stage_local(spark: SparkSession, inp, out_dir: str, full_snapshot: bool,
     return _Generation(
         gen=gen, stats=stats, affected=affected, n_fresh=n_fresh,
         ndist=int(np.unique(fresh.column("doc_id").to_numpy()).size),
-        dead=dead_stats, new=new_stats, totals=totals, n_terms=len(merged),
+        dead=dead_stats, new=new_stats, totals=totals, n_terms=merged.num_rows,
         tri_refresh=tri_refresh, cs_stage=cs_stage,
     )
 

@@ -12,18 +12,22 @@ ck-engine/src/lib.rs:729-845):
 
 Two read tiers run that pipeline with the same segment scorers:
 
-  driver-local  at most LOCAL_POSTINGS_MAX postings read (Σ df of the
-                scanned terms, known before any read, scaled for the
-                dead versions generations still hold), no path scope,
-                no path join: pyarrow reads the pruned postings of
-                every live generation, scoring runs per (gen, seg) with that
-                group's tombstones, and the merged top-k comes back as an
-                already-sorted local DataFrame — zero Spark jobs, and
-                fetch_search_results over it stays job-free too.
+  driver-local  at most LOCAL_POSTINGS_MAX postings (Σ df of the
+                scanned terms — summed over every query plan of a
+                search_many batch — known before any read, scaled for
+                the dead versions generations still hold), no path
+                scope, no path join: pyarrow reads the pruned postings
+                of every live generation, scoring runs per (gen, seg)
+                with that group's tombstones, and the merged top-k (per
+                query for a batch) comes back as an already-sorted local
+                DataFrame — zero Spark jobs, and fetch_search_results
+                over it stays job-free too.
   distributed   everything else: groupBy(seg).applyInPandas (a cogroup
                 with the tombstone / path-scope sets on LSM indexes) →
                 orderBy(score desc, doc_id).limit(k), Catalyst's
-                TakeOrderedAndProject distributed partial top-k merge.
+                TakeOrderedAndProject distributed partial top-k merge;
+                a batch cuts its per-query top-k with one row_number
+                window instead.
 
 Shuffle profile of the distributed tier: only the selected posting rows
 move (one row per (term, segment)), never the corpus. At 10^12 docs the
@@ -52,6 +56,7 @@ from ck_spark.query import scorer as _scorer
 from ck_spark.tokenizer import tokenize
 
 _RESULT_SCHEMA = "doc_id long, score double"
+_BATCH_SCHEMA = "query_id int, doc_id long, score double"
 
 # explicit postings projection: pos_blocks (the positions stream) is only
 # read by phrase queries — everything else prunes it at the parquet scan
@@ -72,7 +77,14 @@ _POSTING_COLS = [
 # postings (AND, 64 terms: 1.43 s against the driver's 1.52 s); at 0.98M
 # and below the driver was faster in both modes (AND 1.21 s vs 1.24 s,
 # OR 1.36 s vs 1.58 s). At local[2] the driver won at every mass up to
-# 1.08M. The cap sits at that crossover. grep_indexed's driver-side
+# 1.08M. The cap sits at that crossover. search_many compares the Σ of
+# its query plans' masses with the same cap; on the same index at
+# local[4] the batch tiers crossed between 7.0M and 12.0M (50 queries)
+# and between 7.4M and 14.4M (512 queries). For batches the cap is thus
+# safe in one direction only: it never sends a batch to the driver where
+# the driver loses, but batches of 1M-7M summed mass take the Spark tier
+# although the driver was faster there (1.41M: 0.83 s vs 1.41 s; 7.04M:
+# 2.01 s vs 2.92 s). grep_indexed's driver-side
 # candidate intersection uses the same cap on the kept grams' Σ df; it
 # was faster than the Spark tier at every mass measured, up to 2.26M ids.
 LOCAL_POSTINGS_MAX = 1_000_000
@@ -120,10 +132,6 @@ def _score_boolean_segment(by_term: dict, plan: dict, idfs: dict,
         )
     return _scorer.score_boolean(m, s, n, idfs, avgdl, k1, b, k, allowed,
                                  banned, cache=cache)
-
-
-_NO_ROWS = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                        "score": pd.Series(dtype="float64")})
 
 
 def _in_term_order(score_fn):
@@ -393,7 +401,8 @@ class BM25Index:
         every live generation (lsm.postings_datasets), groups them by
         (gen, seg) and calls the same `score_fn` with that group's
         tombstones (lsm.tombstone_sets) as the banned set. Returns the
-        concatenated per-segment top-k rows, unsorted."""
+        concatenated per-segment top-k rows, unsorted, or None when no
+        segment scored a row."""
         import pyarrow.dataset as pads
 
         from ck_spark.index import lsm
@@ -407,7 +416,7 @@ class BM25Index:
         datasets, tombs = self.__dict__["_local_postings"]
         score_fn = _in_term_order(score_fn)
         flt = pads.field("bucket").isin(buckets) & pads.field("term").isin(terms)
-        tops = [_NO_ROWS]
+        tops = []
         for gen, ds in datasets:
             pdf = ds.to_table(columns=["seg", *cols], filter=flt).to_pandas()
             for seg, grp in pdf.groupby("seg", sort=True):
@@ -416,25 +425,28 @@ class BM25Index:
                 # int64 ids it would round them through float64
                 if len(top):
                     tops.append(top)
-        return pd.concat(tops, ignore_index=True)
+        return pd.concat(tops, ignore_index=True) if tops else None
+
+    def _fits_local(self, n_postings: int) -> bool:
+        """The driver tier's read bound: `n_postings` (a live Σ df) at
+        most LOCAL_POSTINGS_MAX. Dead versions' postings still sit in
+        their generations until compaction and are read before the
+        tombstone ban drops them, so the read is estimated at the index's
+        dead-to-live ratio (meta n_tombstones / n_docs)."""
+        n_dead = int(self.meta.get("n_tombstones") or 0)
+        n_read = n_postings * (1 + n_dead / max(int(self.meta["n_docs"]), 1))
+        return n_read <= LOCAL_POSTINGS_MAX
 
     def _top_k(self, buckets: list[int], terms: list[str], cols: list[str],
                score_fn, n_postings: int, k: int, normalize: bool,
                threshold: float | None, with_paths: bool,
                allowed_df: DataFrame | None) -> DataFrame:
         """Score the postings of `terms` per segment and cut the global
-        top-k. Tier choice: at most LOCAL_POSTINGS_MAX postings read, no
-        path scope and no path join run on the driver (zero Spark jobs);
-        everything else is the distributed plan.
-
-        `n_postings` is the live Σ df. Dead versions' postings still sit
-        in their generations until compaction and are read before the
-        tombstone ban drops them, so the read is estimated at the index's
-        dead-to-live ratio (meta n_tombstones / n_docs)."""
-        n_dead = int(self.meta.get("n_tombstones") or 0)
-        n_read = n_postings * (1 + n_dead / max(int(self.meta["n_docs"]), 1))
+        top-k. Tier choice: a read that _fits_local, no path scope and no
+        path join run on the driver (zero Spark jobs); everything else is
+        the distributed plan."""
         if allowed_df is None and not with_paths \
-                and n_read <= LOCAL_POSTINGS_MAX:
+                and self._fits_local(n_postings):
             return self._finish_local(
                 self._seg_local(buckets, terms, cols, score_fn),
                 k, normalize, threshold,
@@ -668,7 +680,7 @@ class BM25Index:
         include_prefixes: list[str] | None = None,
         exclude_globs: list[str] | None = None,
     ) -> DataFrame:
-        """Answer a batch of (query, mode) pairs in ONE Spark job.
+        """Answer a batch of (query, mode) pairs.
 
         mode per query: 'or' | 'and' | 'syntax' (the full tantivy-
         QueryParser grammar incl. phrases and negative phrases — resolved
@@ -676,11 +688,19 @@ class BM25Index:
         include_prefixes/exclude_globs scope ALL queries via the exact
         cogrouped allowed-set mechanism.
 
-        All queries' posting rows are scanned together (single pruned read
-        over the union of buckets/terms), scored per segment per query, and
-        cut to per-query top-k with one window — amortizing job dispatch
-        across the whole query set. Returns (query_id, doc_id, score)
-        ordered by (query_id, score desc, doc_id)."""
+        All queries' posting rows are read together (one pruned read over
+        the union of buckets/terms) and scored per segment per query.
+        Tier rule: an unscoped batch whose posting mass — Σ over its
+        query plans of each plan's Σ df, scaled for dead versions as in
+        _top_k (_fits_local) — is at most LOCAL_POSTINGS_MAX is scored
+        on the driver (_seg_local) and cut to per-query top-k in pandas
+        (_finish_local): zero Spark jobs. Any other batch runs one
+        distributed plan that cuts the top-k with one row_number window,
+        amortizing job dispatch across the whole query set; on the
+        benchmark's 1000-doc, 4-segment index at local[2] its collect
+        runs 5 Spark jobs. Both tiers give bit-identical ids and scores.
+        Returns (query_id, doc_id, score) ordered by (query_id, score
+        desc, doc_id)."""
         import numpy as np
 
         from pyspark.sql.window import Window
@@ -690,7 +710,6 @@ class BM25Index:
         spark = self.spark
         mode_tok = self.meta["tokenizer_mode"]
         use_positions = bool(self.meta.get("with_positions"))
-        empty = _empty_df(spark, "query_id int, doc_id long, score double")
         qinfo = []
         all_terms: set[str] = set()
         for qid, (q, mode) in enumerate(queries):
@@ -709,13 +728,14 @@ class BM25Index:
             qinfo.append(info)
             all_terms.update(info["terms"])
         if not all_terms:
-            return empty
+            return _empty_df(spark, _BATCH_SCHEMA)
 
         ts = self.term_stats(sorted(all_terms))
         if ts.empty:
-            return empty
+            return _empty_df(spark, _BATCH_SCHEMA)
         idfs = self.idfs(sorted(all_terms), ts=ts)
         known = set(ts["term"])
+        df_of = dict(zip(ts["term"], ts["df"]))
 
         avgdl = float(self.meta["avgdl"])
         k1, b = float(self.meta["k1"]), float(self.meta["b"])
@@ -724,6 +744,7 @@ class BM25Index:
         plans = []
         scan_terms: set[str] = set()
         any_phrases = False
+        n_postings = 0  # Σ over plans of each plan's Σ df
         for info in qinfo:
             if info["mode"] == "syntax":
                 pq = info["pq"]
@@ -747,6 +768,7 @@ class BM25Index:
                     continue
                 any_phrases = any_phrases or bool(pq.phrases or neg_phr)
                 scan_terms |= terms
+                n_postings += sum(int(df_of[t]) for t in terms)
                 plans.append(plan)
             else:
                 found = [t for t in info["terms"] if t in known]
@@ -755,34 +777,24 @@ class BM25Index:
                 ):
                     continue
                 scan_terms |= set(found)
+                n_postings += sum(int(df_of[t]) for t in found)
                 plans.append({"qid": info["qid"], "terms": found,
                               "mode": info["mode"]})
         if not plans:
-            return empty
+            return _empty_df(spark, _BATCH_SCHEMA)
 
         buckets = sorted({
             int(b_) for t, b_ in zip(ts["term"], ts["bucket"]) if t in scan_terms
         })
         post_cols = _POSTING_COLS + (["pos_blocks"] if any_phrases else [])
-        # SQL-text IN for the term filter: Column.isin builds one py4j
-        # literal per term (~1 ms each — minutes at 10k-query batches);
-        # the parsed predicate is the same pushed In/InSet filter.
-        # Tokenizer output is [a-z0-9]+ but escape defensively.
-        terms_sql = ",".join(
-            "'" + t.replace("'", "''") + "'" for t in sorted(scan_terms)
-        )
-        post = (
-            self.postings_df
-            .where(F.col("bucket").isin(buckets))
-            .where(f"term IN ({terms_sql})")
-            .select(*self._group_cols(), *post_cols[1:])
-        )
+        local = not (include_prefixes or exclude_globs) \
+            and self._fits_local(n_postings)
 
         # ship large plan sets via a broadcast variable instead of the
         # task closure: every task deserializes the closure, so a 10k-query
         # batch's plans+idfs would otherwise be re-shipped per task
         # (VERDICT r3 ask #8)
-        if len(plans) >= 512:
+        if not local and len(plans) >= 512:
             _bc = spark.sparkContext.broadcast((plans, idfs))
             _plans_ref, _idfs_ref = None, None
         else:
@@ -854,7 +866,27 @@ class BM25Index:
                  "score": np.array(out_s, dtype=np.float64)}
             )
 
-        out_schema = "query_id int, doc_id long, score double"
+        if local:
+            return self._finish_local(
+                self._seg_local(buckets, sorted(scan_terms), post_cols[1:],
+                                score_segment),
+                k, key="query_id",
+            )
+
+        # SQL-text IN for the term filter: Column.isin builds one py4j
+        # literal per term (~1 ms each — minutes at 10k-query batches);
+        # the parsed predicate is the same pushed In/InSet filter.
+        # Tokenizer output is [a-z0-9]+ but escape defensively.
+        terms_sql = ",".join(
+            "'" + t.replace("'", "''") + "'" for t in sorted(scan_terms)
+        )
+        post = (
+            self.postings_df
+            .where(F.col("bucket").isin(buckets))
+            .where(f"term IN ({terms_sql})")
+            .select(*self._group_cols(), *post_cols[1:])
+        )
+
         allowed_df = None
         if include_prefixes or exclude_globs:
             from ck_spark.query.scope import path_scope_pred
@@ -865,7 +897,8 @@ class BM25Index:
                                        exclude_globs))
                 .select(*self._scope_cols())
             )
-        seg_top = self._seg_grouped(post, score_segment, out_schema, allowed_df)
+        seg_top = self._seg_grouped(post, score_segment, _BATCH_SCHEMA,
+                                    allowed_df)
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
         return (
             seg_top.withColumn("_rn", F.row_number().over(w))
@@ -920,11 +953,13 @@ class BM25Index:
         derive in pure driver arithmetic (seg = pmod(xxhash64(doc_id), S)
         — no doc_map scan). With a content store (index.content_store
         blobs) up to its LOCAL_FETCH_MAX the stored rows are read on the
-        driver (pyarrow pointer lookup + k ranged blob reads), the scores
-        and the result order are attached in pandas, and only the
-        preview/line projection runs, over an already-sorted local frame:
-        zero Spark jobs. Larger sets read the store distributed and join
-        the scores back. Without a store the fetch falls back to the
+        driver (pyarrow pointer lookup + k ranged blob reads), and the
+        scores, the preview/line projection (query/results.py's Python
+        twins of the Column rule) and the result order are computed in
+        pandas and returned as one Arrow-built local frame: zero Spark
+        jobs and no per-column py4j work. Larger sets read the store
+        distributed, join the scores back and project with the Column
+        expressions. Without a store the fetch falls back to the
         doc_map parquet with parsed `seg IN (...) AND doc_id IN (...)`
         literals: seg partition pruning still applies, but every row
         group containing a hit is read whole (k hash-spread ids can touch
@@ -946,33 +981,43 @@ class BM25Index:
         # the distributed path's relations stay SQL text, never per-value
         # py4j Column.isin literals (seconds at k~10^3)
         from ck_spark.functions.xxh import seg_of_doc_id
-        from ck_spark.index.content_store import FETCH_SCHEMA
 
         segs = sorted({seg_of_doc_id(i, n_seg) for i in ids})
         store = self.content_store
         local = store.fetch_pred_local(segs, ids) if store is not None else None
         if local is not None:
-            local["score"] = local["doc_id"].map(scores)
-            base = self.spark.createDataFrame(
-                local.sort_values(["score", "doc_id"], ascending=[False, True],
-                                  kind="stable", ignore_index=True),
-                FETCH_SCHEMA + ", score double",
+            from ck_spark.query.results import preview_py, rust_lines_py
+
+            content = local["content"]
+            out = pd.DataFrame({
+                "doc_id": local["doc_id"], "repo": local["repo"],
+                "path": local["path"], "score": local["doc_id"].map(scores),
+                "preview": content.map(lambda s: preview_py(s, full_section)),
+                "byte_start": 0,
+                "byte_end": content.map(lambda s: len(s.encode("utf-8"))),
+                "line_start": 1,
+                "line_end": content.map(lambda s: len(rust_lines_py(s))),
+                "lang": local["lang"],
+            })
+            return self.spark.createDataFrame(
+                out.sort_values(["score", "doc_id"], ascending=[False, True],
+                                kind="stable", ignore_index=True),
+                self._SEARCH_RESULT_SCHEMA,
             )
+        score_rel = self.spark.sql(
+            "SELECT * FROM VALUES "
+            + ",".join(f"({i}L, CAST({scores[i]!r} AS DOUBLE))" for i in ids)
+            + " AS t(doc_id, score)"
+        )
+        if store is not None:
+            # blob point reads: bytes ∝ the k results
+            src = store.fetch_pred(segs, ids)
         else:
-            score_rel = self.spark.sql(
-                "SELECT * FROM VALUES "
-                + ",".join(f"({i}L, CAST({scores[i]!r} AS DOUBLE))" for i in ids)
-                + " AS t(doc_id, score)"
+            src = self.doc_map_df.where(
+                f"seg IN ({','.join(map(str, segs))}) AND "
+                f"doc_id IN ({','.join(map(str, ids))})"
             )
-            if store is not None:
-                # blob point reads: bytes ∝ the k results
-                src = store.fetch_pred(segs, ids)
-            else:
-                src = self.doc_map_df.where(
-                    f"seg IN ({','.join(map(str, segs))}) AND "
-                    f"doc_id IN ({','.join(map(str, ids))})"
-                )
-            base = src.join(F.broadcast(score_rel), "doc_id")
+        base = src.join(F.broadcast(score_rel), "doc_id")
         from ck_spark.query.results import preview_expr, rust_lines
 
         out = base.select(
@@ -984,26 +1029,33 @@ class BM25Index:
             F.size(rust_lines(F.col("content"))).alias("line_end"),
             "lang",
         )
-        if local is not None:
-            return out
         return out.orderBy(F.desc("score"), F.asc("doc_id"))
 
-    def _finish_local(self, top: pd.DataFrame, k: int, normalize: bool,
-                      threshold: float | None) -> DataFrame:
-        """_finish for driver-scored rows: the same global top-k order,
-        normalization and threshold in pandas. The rows come back already
-        sorted in an Arrow-built local DataFrame, which collects without a
-        Spark job (an orderBy().limit() over it would cost three)."""
-        top = top.sort_values(["score", "doc_id"], ascending=[False, True],
-                              kind="stable").head(max(int(k), 0))
-        if normalize and len(top):
-            top = top.assign(score=top["score"] / top["score"].max())
-        if threshold is not None:
-            top = top[top["score"] >= threshold]
-        if top.empty:  # an empty pandas frame skips the Arrow path
-            return _empty_df(self.spark, _RESULT_SCHEMA)
-        return self.spark.createDataFrame(top.reset_index(drop=True),
-                                          _RESULT_SCHEMA)
+    def _finish_local(self, top: pd.DataFrame | None, k: int,
+                      normalize: bool = False, threshold: float | None = None,
+                      key: str | None = None) -> DataFrame:
+        """_finish for driver-scored rows (None: no rows): the same
+        global top-k order, normalization and threshold in pandas. With
+        `key` ("query_id", search_many) the top-k is cut per key after a
+        sort by (key, score desc, doc_id) — the distributed tier's
+        row_number window order. The rows come back already sorted in an
+        Arrow-built local DataFrame, which collects without a Spark job
+        (an orderBy().limit() over it would cost three)."""
+        schema = _RESULT_SCHEMA if key is None else _BATCH_SCHEMA
+        if top is not None:
+            keys = [] if key is None else [key]
+            top = top.sort_values([*keys, "score", "doc_id"],
+                                  ascending=[True] * len(keys) + [False, True],
+                                  kind="stable")
+            k = max(int(k), 0)
+            top = top.head(k) if key is None else top.groupby(key).head(k)
+            if normalize and len(top):
+                top = top.assign(score=top["score"] / top["score"].max())
+            if threshold is not None:
+                top = top[top["score"] >= threshold]
+        if top is None or top.empty:  # an empty pandas frame skips Arrow
+            return _empty_df(self.spark, schema)
+        return self.spark.createDataFrame(top.reset_index(drop=True), schema)
 
     def _finish(self, df: DataFrame, k: int, normalize: bool,
                 threshold: float | None, with_paths: bool) -> DataFrame:

@@ -8,7 +8,8 @@ split on \\n, a trailing newline terminates the last line instead of
 opening an empty one, one \\r immediately before each \\n is stripped,
 and empty text has zero lines. These JVM-side expressions are that rule,
 used by the lexical fetch (query/bm25.py), the semantic enrichment
-(query/semantic.py) and the whole-file chunk view.
+(query/semantic.py) and the whole-file chunk view; the `_py` twins apply
+it to Python strings for the lexical fetch's driver-side projection.
 """
 
 from __future__ import annotations
@@ -47,3 +48,20 @@ def preview_expr(col: Column, full_section: bool = False) -> Column:
     if full_section:
         return col
     return F.array_join(F.slice(strip_cr(rust_lines(col)), 1, 3), "\n")
+
+
+def rust_lines_py(text: str) -> list[str]:
+    """rust_lines for one Python string: the same line bodies, \\r NOT
+    yet stripped (the driver-side projection of query/bm25.py)."""
+    if text == "":
+        return []
+    lines = text.split("\n")
+    return lines[:-1] if text.endswith("\n") else lines
+
+
+def preview_py(text: str, full_section: bool = False) -> str:
+    """preview_expr for one Python string."""
+    if full_section:
+        return text
+    return "\n".join(ln[:-1] if ln.endswith("\r") else ln
+                     for ln in rust_lines_py(text)[:3])

@@ -12,10 +12,16 @@ when it already holds that commit). One untimed warm-up run per side
 first fills each checkout's cached base index, so no timed ``setup_s``
 pays a build.
 
-Every run's JSON line goes to ``--out``. At the end it prints, per
-metric, both sides' median and interquartile range, the relative change
-of the medians and in how many pairs the change was better (direction
-from BENCHMARK.json), plus failed/attempted totals.
+Every run's result line, with its diagnostics line under ``diag``, goes
+to ``--out``. At the end it prints, per metric, both sides' median and
+interquartile range, the relative change of the medians and in how many
+pairs the change was better (direction from BENCHMARK.json), plus
+failed/attempted totals. The numeric diagnostics (per-operation medians
+such as ``search_p50_ms`` or ``batch_p50_ms``, and each window's steal)
+get the medians, IQRs and relative change of the same pairs, so a
+per-operation attribution comes from the same interleaved pairs as the
+end-to-end claim; they get no wins count, since some of them are counts
+or rates with no lower-is-better direction.
 """
 
 from __future__ import annotations
@@ -71,8 +77,8 @@ def benchmark_spec() -> dict:
 
 
 def run_once(checkout: str, workload: str, seed: int) -> dict:
-    """One untraced benchmark run; returns its final JSON line (or a
-    failure)."""
+    """One untraced benchmark run; returns its final JSON line with the
+    diagnostics line before it under "diag" (or a failure)."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(benchmark_spec()["run_seconds"]),
            "--trace", "0"]
@@ -80,7 +86,11 @@ def run_once(checkout: str, workload: str, seed: int) -> dict:
     lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
     if p.returncode != 0 or not lines:
         return {"error": f"exit {p.returncode}", "stderr": p.stderr[-2000:]}
-    return json.loads(lines[-1])
+    out = json.loads(lines[-1])
+    diag = [json.loads(ln) for ln in lines[:-1] if ln.startswith('{"diag"')]
+    if diag:
+        out["diag"] = diag[-1]["diag"]
+    return out
 
 
 def quartiles(xs: list[float]) -> tuple[float, float, float]:
@@ -88,6 +98,22 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
         return xs[0], xs[0], xs[0]
     q = statistics.quantiles(xs, n=4, method="inclusive")
     return q[0], statistics.median(xs), q[2]
+
+
+def compare(pairs: list[tuple[float, float]], name: str,
+            lower: bool | None) -> None:
+    """Print both sides' median [IQR] of (base, change) value pairs and
+    the relative change of the medians; when `lower` says which way is
+    better, also the pairs the change won."""
+    base, change = [a for a, _ in pairs], [b for _, b in pairs]
+    bq, cq = quartiles(base), quartiles(change)
+    rel = (cq[1] - bq[1]) / bq[1] if bq[1] else float("nan")
+    line = (f"{name:32s} base {bq[1]:12.4f} [{bq[0]:.4f}, {bq[2]:.4f}]  "
+            f"change {cq[1]:12.4f} [{cq[0]:.4f}, {cq[2]:.4f}]  {rel:+.1%}")
+    if lower is not None:
+        wins = sum((b < a) if lower else (b > a) for a, b in pairs)
+        line += f"  better in {wins}/{len(pairs)}"
+    print(line)
 
 
 def summarize(runs: list[dict]) -> None:
@@ -104,16 +130,19 @@ def summarize(runs: list[dict]) -> None:
                 for p in full]
         both = [(a["value"], b["value"]) for a, b in both
                 if a is not None and b is not None]
-        if not both:
-            continue
-        base, change = [a for a, _ in both], [b for _, b in both]
-        bq, cq = quartiles(base), quartiles(change)
-        lower = better.get(m, "lower") == "lower"
-        wins = sum((b < a) if lower else (b > a) for a, b in both)
-        rel = (cq[1] - bq[1]) / bq[1] if bq[1] else float("nan")
-        print(f"{m:32s} base {bq[1]:12.4f} [{bq[0]:.4f}, {bq[2]:.4f}]  "
-              f"change {cq[1]:12.4f} [{cq[0]:.4f}, {cq[2]:.4f}]  "
-              f"{rel:+.1%}  better in {wins}/{len(both)}")
+        if both:
+            compare(both, m, better.get(m, "lower") == "lower")
+    # diagnostics mix timings with counts and rates (turns, upserts,
+    # docs/s) whose better direction differs or is undefined: no wins
+    print("diagnostics (pairwise medians):")
+    diags = [(p["base"].get("diag", {}), p["change"].get("diag", {}))
+             for p in full]
+    for m in sorted({m for _, c in diags for m in c}):
+        both = [(a[m], b[m]) for a, b in diags
+                if isinstance(a.get(m), (int, float))
+                and isinstance(b.get(m), (int, float))]
+        if both:
+            compare(both, m, None)
     for side in ("base", "change"):
         res = [r["result"] for r in runs if r["side"] == side]
         failed = sum(int(x.get("failed", 0)) for x in res)

@@ -1,7 +1,8 @@
 """Query-throughput N-vs-4N scaling: a batch of deterministic BM25
-queries over a PREBUILT index via search_many (one Spark job for the
-whole batch — the dispatch floor amortizes across the set, so this
-measures executor-side query scaling, not per-job submission cost).
+queries over a PREBUILT index via search_many, pinned to its distributed
+tier (one plan for the whole batch — the dispatch floor amortizes across
+the set, so this measures executor-side query scaling, not per-job
+submission cost; a small batch would otherwise be scored on the driver).
 
 Usage:
   spark-submit --master local[8] --driver-memory 16g \
@@ -67,7 +68,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from ck_spark.query import BM25Index
+    from ck_spark.query import BM25Index, bm25
 
     idx = BM25Index.load(spark, args.index_root)
 
@@ -104,6 +105,7 @@ def main() -> None:
     # warmup: python workers + codegen + term-dict load
     idx.search_query(terms[0], k=5).collect()
 
+    bm25.LOCAL_POSTINGS_MAX = -1  # executor-side scaling: distributed tier
     t0 = time.time()
     rows = idx.search_many(queries, k=args.k).collect()
     wall = time.time() - t0

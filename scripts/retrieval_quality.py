@@ -15,8 +15,8 @@ and the gold answer is that document. This guards RANKING QUALITY
 regressions beyond the hash-identity contract: a scorer bug that kept
 hash-parity with a broken oracle would still crater Recall@10 here.
 
-All queries run through search_many — ONE Spark job for the whole query
-set (the batch path the 100 TB deployment would use).
+All queries run through one search_many call for the whole query set
+(the batch path the 100 TB deployment would use).
 
 Usage: python scripts/retrieval_quality.py [--n 100] [--docs 1500]
 Appends a per-round row to BENCH/RETRIEVAL.md and prints one JSON line.
@@ -302,7 +302,7 @@ def main() -> int:
         "(scripts/retrieval_quality.py — the SWE-bench-Lite analogue, "
         "reference benchmarks/swe-bench/README.md:11-21). Guards ranking "
         "quality beyond the hash-identity contract. All queries run as ONE "
-        "batched search_many job.\n\n"
+        "batched search_many call.\n\n"
         "| round | corpus | n | Recall@10 | MRR | batch wall (s) | per-query (ms) |\n"
         "|---|---|---|---|---|---|---|\n"
     )

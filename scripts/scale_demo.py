@@ -180,8 +180,15 @@ def main() -> None:
              ("merge split cache", "and"), ("read write", "or"),
              ("getUserName", "or"), ("hash table", "or"), ("span file ctx", "and"),
              ("stream search conf", "or"), ("cache rank", "or")]
-    w, c, ts, _ib = timed(lambda: idx.search_many(batch, k=10).collect())
-    latencies[f"batch of {len(batch)} (one job)"] = round(w, 2)
+    # the batch is pinned to the Spark tier: what it shows is one
+    # distributed plan amortizing the per-job dispatch over the set
+    from ck_spark.query import bm25
+    cap, bm25.LOCAL_POSTINGS_MAX = bm25.LOCAL_POSTINGS_MAX, -1
+    try:
+        w, c, ts, _ib = timed(lambda: idx.search_many(batch, k=10).collect())
+    finally:
+        bm25.LOCAL_POSTINGS_MAX = cap
+    latencies[f"batch of {len(batch)} (one search_many call, Spark tier)"] = round(w, 2)
     breakdown["batch"] = {
         "n_queries": len(batch), "wall_s": round(w, 3),
         "amortized_per_query_s": round(w / len(batch), 3),
@@ -597,9 +604,11 @@ fixed per-JOB cost is what search_many amortizes across a query batch.
                f"| {v['executor_crit_median_s']} | {v['dispatch_overhead_s']} |\n")
     bt = breakdown["batch"]
     md += (
-        f"\nBatched ({bt['n_queries']} queries, ONE job): {bt['wall_s']} s wall = "
+        f"\nBatched ({bt['n_queries']} queries, one search_many call on the "
+        f"Spark tier): {bt['wall_s']} s wall = "
         f"**{bt['amortized_per_query_s']} s/query amortized** — the per-job "
-        "dispatch cost is paid once for the whole set, which is how a "
+        "dispatch cost is paid once per job of the one plan, not per "
+        "query, which is how a "
         "production deployment meets a <0.5 s/query budget on Spark.\n"
         f"\nHost 1-min loadavg at measurement: {os.getloadavg()[0]:.1f}.\n"
     )

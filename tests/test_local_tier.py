@@ -1,8 +1,8 @@
-"""Driver-local read tier: small BM25 searches (query/bm25.py _seg_local),
-their result fetch and small trigram candidate sets
-(TrigramIndex.candidates_local) run on the driver without a Spark job,
-and answer bit-identically to the distributed tier — forced here by
-monkeypatching the cap constant to -1."""
+"""Driver-local read tier: small BM25 searches and search_many batches
+(query/bm25.py _seg_local), their result fetch and projection, and small
+trigram candidate sets (TrigramIndex.candidates_local) run on the driver
+without a Spark job, and answer bit-identically to the distributed tier
+— forced here by monkeypatching the cap constants."""
 
 import numpy as np
 import pandas as pd
@@ -132,6 +132,131 @@ def test_fetch_tiers_identical(spark, roots, monkeypatch, which):
     assert [r["doc_id"] for r in local] == [d for d, _ in _rows(top)]
 
 
+# every Rust str::lines() edge of the projection, one doc each
+_EDGE_DOCS = [
+    ("empty.txt", ""),
+    ("trailing_lf.txt", "needle one\n"),
+    ("crlf.txt", "needle one\r\ntwo\r\n"),
+    ("cr_cr_lf.txt", "needle a\r\r\nb"),
+    ("bare_cr.txt", "needle a\rb\r"),
+    ("many_lines.txt", "needle 1\n2\n3\n4\n5\n"),
+    ("utf8.txt", "needle héllo ✓\n日本語 𝄞\n"),
+]
+
+
+@pytest.fixture(scope="module")
+def edge_root(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("edge_fetch"))
+    corpus = spark.createDataFrame(
+        [("r", p, "c1", "text", c) for p, c in _EDGE_DOCS],
+        "repo string, path string, commit string, lang string, content string")
+    build_index(spark, corpus, root, mode="simple", n_segments=2,
+                term_buckets=4, build_groups=1)
+    build_content_store(spark, root)
+    return root
+
+
+@pytest.mark.parametrize("full_section", [False, True])
+def test_local_projection_equals_column_projection(spark, edge_root,
+                                                    monkeypatch, full_section):
+    """The driver fetch's pandas projection (preview, byte_end, line_end)
+    against the distributed fetch's Column expressions, on every doc —
+    the token-less empty one too, so the results frame comes from the
+    doc_map, with tied scores ordered by doc_id."""
+    idx = BM25Index.load(spark, edge_root)
+    ids = sorted(r["doc_id"] for r in idx.doc_map_df.select("doc_id").collect())
+    assert len(ids) == len(_EDGE_DOCS)
+    res = spark.createDataFrame(pd.DataFrame(
+        {"doc_id": ids, "score": [float(i % 3) for i in range(len(ids))]}))
+    local = idx.fetch_search_results(res, full_section).collect()
+    with monkeypatch.context() as m:
+        m.setattr(ContentStore, "LOCAL_FETCH_MAX", 0)
+        distributed = idx.fetch_search_results(res, full_section).collect()
+    assert local == distributed
+    by_path = {r["path"]: r for r in local}
+    content = dict(_EDGE_DOCS)
+    assert by_path["utf8.txt"]["byte_end"] == len(content["utf8.txt"].encode())
+    assert by_path["utf8.txt"]["byte_end"] > len(content["utf8.txt"])
+    assert (by_path["empty.txt"]["preview"], by_path["empty.txt"]["line_end"]) \
+        == ("", 0)
+    assert by_path["many_lines.txt"]["line_end"] == 5
+
+
+BATCH = [
+    ("parse buffer", "or"),
+    ("def return", "and"),
+    ("+parse buffer -merge", "syntax"),
+    ('"parse buffer" return', "syntax"),
+    ('parse -"merge split"', "syntax"),
+    ("duplicated content", "or"),  # two identical docs: a tie at k=1
+    ("parse zzqunknown", "and"),  # an unknown AND term matches nothing
+    ("parse zzqunknown", "or"),  # an unknown OR term is dropped
+    ("+zzqunknown parse", "syntax"),
+    ("zzqunknown", "or"),
+]
+
+
+def _batch_rows(df):
+    return [(r["query_id"], r["doc_id"], r["score"]) for r in df.collect()]
+
+
+@pytest.mark.parametrize("which", ["plain", "gens"])
+@pytest.mark.parametrize("k", [1, 12])
+def test_search_many_tiers_bit_identical(spark, roots, monkeypatch, which, k):
+    idx = BM25Index.load(spark, roots[which])
+    local, distributed = _both_tiers(
+        monkeypatch, lambda: _batch_rows(idx.search_many(BATCH, k=k)))
+    assert local == distributed  # ids, order and every score bit
+    hit = {q for q, _, _ in local}
+    assert hit == {0, 1, 2, 3, 4, 5, 7}
+    if k == 12:  # the k=1 run cuts inside this tie
+        dup = [s for q, _, s in local if q == 5]
+        assert len(dup) >= 2 and dup[0] == dup[1]
+
+
+@pytest.mark.parametrize("batch", [
+    [],
+    [("zzqunknown", "or"), ("zzqa zzqb", "and"), ('+zzqa "zzqb zzqc"', "syntax")],
+])
+def test_search_many_empty_and_all_unknown_batches(spark, roots, monkeypatch,
+                                                   batch):
+    idx = BM25Index.load(spark, roots["gens"])
+    local, distributed = _both_tiers(
+        monkeypatch, lambda: _batch_rows(idx.search_many(batch, k=5)))
+    assert local == distributed == []
+
+
+def test_batch_over_cap_or_scoped_takes_spark_tier(spark, roots, monkeypatch):
+    """The batch's mass is the Σ over its query plans of each plan's Σ
+    df: with every query under the cap but their sum over it, the batch
+    takes the Spark tier with the same answer; so does a path-scoped
+    batch, however small."""
+    idx = BM25Index.load(spark, roots["plain"])  # no dead versions to scale
+    batch = [("parse buffer", "or"), ("def return", "or")]
+    masses = [int(idx.term_stats(q.split())["df"].sum()) for q, _ in batch]
+    keys = []
+    orig = BM25Index._finish_local
+    monkeypatch.setattr(
+        BM25Index, "_finish_local",
+        lambda self, *a, **kw: keys.append(kw.get("key")) or orig(self, *a, **kw))
+    expected = _batch_rows(idx.search_many(batch, k=12))
+    assert keys == ["query_id"] and expected
+    for cap, tier in ((sum(masses), ["query_id"]), (sum(masses) - 1, [])):
+        assert max(masses) <= cap
+        monkeypatch.setattr(bm25, "LOCAL_POSTINGS_MAX", cap)
+        keys.clear()
+        assert _batch_rows(idx.search_many(batch, k=12)) == expected
+        assert keys == tier
+    monkeypatch.setattr(bm25, "LOCAL_POSTINGS_MAX", sum(masses))  # fits
+    top = idx.search("parse buffer", k=1, with_paths=True).first()["path"]
+    prefix = top.rsplit("/", 1)[0] + "/"
+    keys.clear()
+    scoped = _batch_rows(idx.search_many(batch, k=12, include_prefixes=[prefix]))
+    assert keys == []
+    single = _rows(idx.search("parse buffer", k=12, include_prefixes=[prefix]))
+    assert [(d, s) for q, d, s in scoped if q == 0] == single and single
+
+
 @pytest.mark.parametrize("which", ["plain", "gens"])
 @pytest.mark.parametrize("pattern", ["parse_buffer", "(parse|merge)_", "return"])
 def test_trigram_candidates_local_equal_distributed(spark, roots, which, pattern):
@@ -152,17 +277,21 @@ def test_trigram_candidates_local_equal_distributed(spark, roots, which, pattern
 
 
 def test_small_search_and_fetch_run_no_spark_job(spark, roots):
-    """A fresh handle's small search and its result fetch: zero jobs."""
+    """A fresh handle's small search, its result fetch and projection
+    (default and full_section) and a small batch: zero jobs."""
     sc = spark.sparkContext
     group = "ck-local-tier-test"
     idx = BM25Index.load(spark, roots["gens"])
     sc.setJobGroup(group, "driver-local read tier")
     try:
         hits = idx.search("parse buffer", k=10).collect()
-        fetched = idx.fetch_search_results(idx.search("parse buffer", k=10)).collect()
+        fetched = [idx.fetch_search_results(idx.search("parse buffer", k=10),
+                                            full_section=f).collect()
+                   for f in (False, True)]
+        batch = idx.search_many(BATCH, k=10).collect()
     finally:
         sc.setJobGroup("", "")
-    assert hits and len(fetched) == len(hits)
+    assert hits and all(len(f) == len(hits) for f in fetched) and batch
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 

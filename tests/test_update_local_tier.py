@@ -266,6 +266,62 @@ def test_row_hash_matches_spark_xxhash64(spark):
     assert [builder._row_hash(*r) for r in rows] == want
 
 
+def _merge_reference(ts, delta, term_buckets):
+    """The term-dictionary merge as a whole-dictionary pandas alignment:
+    df += delta, new terms get n_segments 1 and pmod(xxhash64(term)),
+    df <= 0 dropped, rows sorted by (bucket, term)."""
+    from ck_spark.codec import xxhash64_signed
+
+    old = ts.to_pandas().set_index("term")
+    out = pd.DataFrame({"df": old["df"].add(delta, fill_value=0)})
+    out["n_segments"] = old["n_segments"].reindex(out.index).fillna(1)
+    out["bucket"] = old["bucket"].reindex(out.index)
+    fresh = out["bucket"].isna()
+    out.loc[fresh, "bucket"] = [xxhash64_signed(t) % term_buckets
+                                for t in out.index[fresh]]
+    out = out[out["df"] > 0].reset_index(names="term")
+    out = out.astype({"bucket": "int32", "df": "int64", "n_segments": "int64"})
+    return out.sort_values(["bucket", "term"], ignore_index=True)[
+        ["bucket", "term", "df", "n_segments"]]
+
+
+@pytest.mark.parametrize("stored", ["spark_order", "sorted"])
+def test_term_stats_merge_matches_reference(spark, stored):
+    """The keyed merge: in-place df updates, new terms appended with
+    their hashed bucket, terms at df 0 dropped, rows sorted by (bucket,
+    term) whatever the stored order — row for row the whole-dictionary
+    reference, order included."""
+    import pyarrow as pa
+
+    from ck_spark.codec import xxhash64_signed
+
+    rng = np.random.default_rng(3)
+    terms = [f"w{i}" for i in rng.permutation(400)]
+    # stored buckets off by one from the hash: an old term must keep its
+    # stored bucket, only a new one is hashed
+    ts = pa.table({
+        "bucket": pa.array([(xxhash64_signed(t) + 1) % 8 for t in terms],
+                           pa.int32()),
+        "term": terms,
+        "df": pa.array(rng.integers(1, 4, 400), pa.int64()),
+        "n_segments": pa.array(rng.integers(1, 3, 400), pa.int64()),
+    })
+    if stored == "sorted":
+        ts = ts.sort_by([("bucket", "ascending"), ("term", "ascending")])
+    df = dict(zip(ts.column("term").to_pylist(), ts.column("df").to_pylist()))
+    gone = [t for t in terms[:60] if df[t] == 1][:10]
+    delta = pd.Series({**{t: 1 for t in terms[100:150]},
+                       **{t: -1 for t in gone},
+                       **{f"new{i}": 1 + i % 2 for i in range(30)}})
+    delta = delta.sort_index()
+    merged, buckets = builder._merge_term_stats(ts, delta, 8)
+    want = _merge_reference(ts, delta, 8)
+    pd.testing.assert_frame_equal(merged.to_pandas(), want)
+    assert not set(gone) & set(merged.column("term").to_pylist())
+    assert buckets.to_dict() == {
+        t: (xxhash64_signed(t) + (t in df)) % 8 for t in delta.index}
+
+
 def test_fallback_predicates(spark, monkeypatch):
     """Each fallback condition is one predicate over the caps."""
     # 90 stored rows, 40 of them binary docs (not in n_docs)
