@@ -597,7 +597,11 @@ class ContentStore:
     # driver adds no new scale class — it removes two Spark job dispatches
     # (~0.3-0.7 s each) from the latency path. Above the cap, distribute.
     # 4096 docs × ~few KB ≈ tens of MB driver-side, shipped back via ONE
-    # Arrow batch — well under any sane driver budget.
+    # Arrow batch — well under any sane driver budget. The same cap bounds
+    # the rows the driver-local regex verify splits and hands to the JVM
+    # (a pruned grep's point read, and a scan grep's whole live view),
+    # beside that verify's byte cap (query/trigram.py
+    # LOCAL_VERIFY_MAX_BYTES): on one thread its cost follows bytes.
     LOCAL_FETCH_MAX = 4096
 
     def fetch_pred_local(self, segs, doc_ids,

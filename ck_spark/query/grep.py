@@ -8,8 +8,16 @@ files-with/without-matches set ops (ck-cli/src/main.rs:2010-2019,
 1609-1631), and -A/-B/-C context extraction (ck-engine/src/lib.rs:1218-1229).
 
 Spark-first: posexplode(split(content)) + rlike keeps the whole scan in
-whole-stage codegen — no Python in the hot path. Line splitting honors
+whole-stage codegen, and no tier matches in Python. Line splitting honors
 \\n, \\r\\n and bare \\r like the reference's read_lines_with_endings.
+
+Driver tier (grep_local): when the content rows are already on the
+driver (a small trigram-pruned fetch or a small live view), the driver
+only splits them into lines (Arrow compute), in Spark's split rule and
+already in (path, line_no) order, and hands them over as one Arrow
+frame. The match is still the same Spark Column expressions (_verify),
+which Spark's ConvertToLocalRelation rule folds into the driver JVM:
+java.util.regex, no Spark job, and no sort.
 """
 
 from __future__ import annotations
@@ -17,7 +25,8 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _LINE_SPLIT = "\r\n|\r|\n"
@@ -75,6 +84,62 @@ def _lines(corpus: DataFrame) -> DataFrame:
     ).withColumn("line_no", F.col("pos") + 1).drop("pos")
 
 
+# the (repo, path, content) rows grep_local takes: typed, so an empty
+# fetch still has string columns for the Arrow string kernels
+DOCS_SCHEMA = pa.schema([("repo", pa.string()), ("path", pa.string()),
+                         ("content", pa.string())])
+
+
+def split_lines_local(docs: pa.Table) -> pa.Table:
+    """Driver twin of _lines for (repo, path, content) rows: Spark's
+    split(content, _LINE_SPLIT) rule (limit -1, trailing empty lines
+    kept, None content gives no lines), 1-based line_no, stable-sorted by
+    (path, line_no) — Arrow compares strings as UTF-8 bytes, like Spark,
+    and puts null paths first, like Spark's ascending sort.
+
+    The split is Arrow's literal one on "\\n" after every "\\r\\n" and
+    then every remaining "\\r" became "\\n": the same separators as the
+    regex's leftmost-first scan, because "\\r\\n" occurrences never
+    overlap."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    content = docs.column("content")
+    lists = pc.split_pattern(pc.replace_substring(
+        pc.replace_substring(content, "\r\n", "\n"), "\r", "\n"), "\n")
+    doc = pc.list_parent_indices(lists)
+    n = pc.list_value_length(lists).fill_null(0).to_numpy()
+    starts = np.repeat(np.cumsum(n) - n, n)
+    out = pa.table({
+        "repo": docs.column("repo").take(doc),
+        "path": docs.column("path").take(doc),
+        "line": pc.list_flatten(lists),
+        "line_no": pa.array(np.arange(len(starts)) - starts + 1, pa.int32()),
+    })
+    order = pc.sort_indices(
+        out, sort_keys=[("path", "ascending"), ("line_no", "ascending")],
+        null_placement="at_start",
+    )
+    return out.take(order)
+
+
+def _verify(lines: DataFrame, pattern: str, p: str, topk: int | None,
+            count_matches: bool, presorted: bool = False) -> DataFrame:
+    """The match, n_matches and top-k of both grep tiers over a
+    (repo, path, line, line_no) frame; ``presorted`` frames arrive in
+    (path, line_no) order and skip the global sort."""
+    out = lines if pattern == "" else lines.where(_match_pred("line", p))
+    if count_matches and pattern != "":
+        out = out.withColumn(
+            "n_matches", F.size(F.regexp_extract_all("line", F.lit(p), F.lit(0)))
+        )
+    if not presorted:
+        out = out.orderBy("path", "line_no")
+    if topk is not None:
+        out = out.limit(topk)
+    return out
+
+
 def grep(
     corpus: DataFrame,
     pattern: str,
@@ -88,19 +153,30 @@ def grep(
     deterministic grep-parity ordering (T1). Empty pattern matches every
     line once (grep compat, ck-engine/src/lib.rs:586-727)."""
     p = preprocess_pattern(pattern, fixed_string, whole_word, ignore_case)
-    lines = _lines(corpus)
-    if pattern == "":
-        out = lines
-    else:
-        out = lines.where(_match_pred("line", p))
-    if count_matches and pattern != "":
-        out = out.withColumn(
-            "n_matches", F.size(F.regexp_extract_all("line", F.lit(p), F.lit(0)))
-        )
-    out = out.orderBy("path", "line_no")
-    if topk is not None:
-        out = out.limit(topk)
-    return out
+    return _verify(_lines(corpus), pattern, p, topk, count_matches)
+
+
+def grep_local(
+    spark: SparkSession,
+    docs: pa.Table,
+    pattern: str,
+    fixed_string: bool = False,
+    whole_word: bool = False,
+    ignore_case: bool = False,
+    topk: int | None = None,
+    count_matches: bool = False,
+) -> DataFrame:
+    """grep() over (repo, path, content) rows already on the driver, with
+    the same rows in the same order: the lines arrive sorted in one Arrow
+    createDataFrame (a LocalRelation), and the filter, n_matches and
+    limit fold into it at optimisation time, so collecting the answer
+    runs no Spark job. The caller bounds the rows (they are held on the
+    driver twice: as Arrow lines and in the JVM)."""
+    p = preprocess_pattern(pattern, fixed_string, whole_word, ignore_case)
+    lines = spark.createDataFrame(
+        split_lines_local(docs), "repo string, path string, line string, line_no int"
+    )
+    return _verify(lines, pattern, p, topk, count_matches, presorted=True)
 
 
 def grep_spans(corpus: DataFrame, pattern: str, **kw) -> DataFrame:

@@ -34,6 +34,7 @@ import sys
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -394,6 +395,18 @@ SEMIJOIN_BROADCAST_MAX = 5_000_000
 # small, further gram decodes cost more than the false positives they
 # would remove (the regex verify removes them anyway)
 PRUNE_STOP = 2048
+
+# driver verify byte cap (query/grep.py grep_local): the driver splits
+# and matches content on one thread, the Spark verify on every core
+# after ~0.3 s of job dispatch, so the tiers cross at a content size,
+# whatever the doc count. Verify alone, rows already on the driver,
+# 4 perfbench templates, local[4]: 1000 docs / 0.67 MB driver 102 ms vs
+# Spark 281 ms; 2.73 MB 326 vs 312; 10.85 MB 1124 vs 723; 4096 docs /
+# 2.79 MB 330 vs 350; 11.12 MB 1175 vs 655. local[2]: 0.67 MB 104 vs
+# 271; 2.73 MB 293 vs 343; 11.12 MB 1087 vs 850. Content rows on the
+# driver past this cap (or past ContentStore.LOCAL_FETCH_MAX docs) are
+# verified in Spark.
+LOCAL_VERIFY_MAX_BYTES = 2 << 20
 
 # grams are BYTE trigrams of the UTF-8 encoding of lower(content), keyed
 # by their packed 3-byte code: ghash = b0<<16 | b1<<8 | b2 — a PERFECT
@@ -1078,6 +1091,10 @@ class TrigramIndex:
         self.term_buckets = int(self.meta["term_buckets"])
         self.store_content = bool(self.meta.get("store_content"))
         n_apps = int(marker.get("n_apps", 0))
+        # docs in committed delta appends that _gram_stats does not count
+        # yet: the stats' stale-low correction, from the same marker read
+        # as the postings below, so bounds and candidates share a snapshot
+        self.delta_docs = int(marker.get("delta_docs", 0))
         self.df = _read_trigram_table(spark, root, n_apps=n_apps)
         if cache:
             # hold the (compact, int-keyed) candidate index in executor
@@ -1193,7 +1210,7 @@ class TrigramIndex:
             # absence — keep ALL grams (the original exhaustive
             # intersection, still sound and still pruning)
             return list(dict.fromkeys(grams))
-        delta_docs = int(_read_trigram_marker(self.root).get("delta_docs", 0))
+        delta_docs = self.delta_docs
         ghashes = sorted({gram_hash(g) for g in grams})
         df_map: dict[int, int] = {}
         for h in ghashes:
@@ -1255,7 +1272,7 @@ class TrigramIndex:
         stats = self.gram_stats
         if not stats:
             return None
-        delta = int(_read_trigram_marker(self.root).get("delta_docs", 0))
+        delta = self.delta_docs
         vals = [stats.get(gram_hash(g), 0) + delta for g in grams]
         return min(vals) if vals else None
 
@@ -1267,7 +1284,7 @@ class TrigramIndex:
         stats = self.gram_stats
         if not stats:
             return None
-        delta = int(_read_trigram_marker(self.root).get("delta_docs", 0))
+        delta = self.delta_docs
         return sum(stats.get(h, 0) + delta for h in _clause_hashes(grams)[1])
 
     def grep(self, corpus: DataFrame | None = None, pattern: str | None = None, **kw):
@@ -1415,7 +1432,13 @@ def grep_indexed(
     corpus=None needs a stored-content (v6) index: the scan source is then
     doc_map's own content. If the trigram index is absent or incomplete
     (no completion marker — e.g. a crash mid-build) this falls back to the
-    full scan rather than silently missing matches."""
+    full scan rather than silently missing matches.
+
+    On a corpus the manifest proves binary-free, content rows read on the
+    driver within the content store's LOCAL_FETCH_MAX docs and
+    LOCAL_VERIFY_MAX_BYTES are verified there (grep.grep_local, no Spark
+    job): the candidates' point read, and, for a corpus=None scan, the
+    live view (its bytes estimated before the read)."""
     try:
         idx = TrigramIndex.load(spark, root)
     except FileNotFoundError:
@@ -1453,7 +1476,7 @@ def _grep_indexed_impl(
     count_matches: bool = False,
 ):
     from ck_spark.index.builder import doc_id_expr
-    from ck_spark.query.grep import grep, preprocess_pattern
+    from ck_spark.query.grep import grep, grep_local, preprocess_pattern
 
     use_stored = corpus is None
     if use_stored and not idx.store_content:
@@ -1462,6 +1485,10 @@ def _grep_indexed_impl(
             "store_content=True) index — pass the corpus DataFrame"
         )
     eff = preprocess_pattern(pattern, fixed_string, whole_word, ignore_case)
+    flags = dict(fixed_string=fixed_string, whole_word=whole_word,
+                 ignore_case=ignore_case, topk=topk,
+                 count_matches=count_matches)
+    may_binary = _may_have_binary_docs(idx.meta)
     clauses = trigram_dnf(eff)
     grams: list = []
     all_empty = False
@@ -1509,19 +1536,24 @@ def _grep_indexed_impl(
         # (never trigram-indexed) remain to check
         if use_stored or idx.store_content:
             dm = idx.doc_map_df
-            if not _may_have_binary_docs(idx.meta):
-                return grep(dm.limit(0), pattern, fixed_string,
-                            whole_word, ignore_case,
-                            topk=topk, count_matches=count_matches)
+            if not may_binary:
+                return grep(dm.limit(0), pattern, **flags)
             src = dm.where(F.col("is_binary"))
         else:
             src = corpus.where(F.contains("content", F.lit("\x00")))
-        return grep(src, pattern, fixed_string, whole_word, ignore_case,
-                    topk=topk, count_matches=count_matches)
+        return grep(src, pattern, **flags)
+    # driver tier: content rows of a corpus the manifest proves
+    # binary-free, read on the driver within ContentStore.LOCAL_FETCH_MAX
+    # docs and LOCAL_VERIFY_MAX_BYTES, are split there and verified in
+    # the driver JVM (grep_local), with the Spark tier's rows and order
+    # and no Spark job
     if not grams:
+        if use_stored and not may_binary:
+            live = _live_content_local(idx)
+            if live is not None:
+                return grep_local(idx.spark, live, pattern, **flags)
         src = idx.doc_map_df if use_stored else corpus
-        return grep(src, pattern, fixed_string, whole_word, ignore_case,
-                    topk=topk, count_matches=count_matches)
+        return grep(src, pattern, **flags)
     from ck_spark.query import bm25
 
     mass = idx.posting_mass(grams) if est_union is not None else None
@@ -1543,13 +1575,19 @@ def _grep_indexed_impl(
         # result is EXACTLY the full scan's (which has no binary filter);
         # the union branch is skipped when the manifest proves the corpus
         # has no binary docs (total rows == indexed non-binary n_docs).
-        dm = idx.doc_map_df
-        scoped = _fetch_candidates(dm, cands, store=idx.content_store,
-                                   est=est_union,
+        scoped = _fetch_candidates(lambda: idx.doc_map_df, cands,
+                                   store=idx.content_store, est=est_union,
                                    n_docs=int(idx.meta.get("n_docs") or 0))
-        if _may_have_binary_docs(idx.meta):
+        if isinstance(scoped, pa.Table):
+            if not may_binary and _content_bytes(scoped) \
+                    <= LOCAL_VERIFY_MAX_BYTES:
+                return grep_local(idx.spark, scoped, pattern, **flags)
+            scoped = idx.spark.createDataFrame(
+                scoped, "repo string, path string, content string")
+        if may_binary:
             scoped = scoped.unionByName(
-                dm.where(F.col("is_binary")).select("repo", "path", "content")
+                idx.doc_map_df.where(F.col("is_binary"))
+                .select("repo", "path", "content")
             )
     else:
         # no stored content: prune the caller's corpus by joining; AQE
@@ -1570,8 +1608,36 @@ def _grep_indexed_impl(
             corpus.where(F.contains("content", F.lit("\x00")))
             .select(*corpus.columns)
         )
-    return grep(scoped, pattern, fixed_string, whole_word, ignore_case,
-                topk=topk, count_matches=count_matches)
+    return grep(scoped, pattern, **flags)
+
+
+def _live_content_local(idx: TrigramIndex) -> "pa.Table | None":
+    """The handle's live view as (repo, path, content) Arrow rows read on
+    the driver (lsm.live_rows, tombstones applied), or None when the
+    stored rows it reads — live rows plus tombstoned versions — exceed
+    ContentStore.LOCAL_FETCH_MAX, or the live rows' content, estimated
+    from the content store's mean doc size, exceeds
+    LOCAL_VERIFY_MAX_BYTES (and None without a content store)."""
+    from ck_spark.index import lsm
+    from ck_spark.index.content_store import ContentStore
+
+    store = idx.content_store
+    try:
+        n_rows = lsm.parse_snapshot(idx.meta.get("input_snapshot"))[0]
+    except ValueError:
+        return None
+    if store is None or n_rows * store.avg_raw_len > LOCAL_VERIFY_MAX_BYTES \
+            or n_rows + int(idx.meta.get("n_tombstones") or 0) \
+            > ContentStore.LOCAL_FETCH_MAX:
+        return None
+    return lsm.live_rows(idx.root, idx.meta, ["repo", "path", "content"])
+
+
+def _content_bytes(docs: pa.Table) -> int:
+    """UTF-8 bytes of the rows' content (None content counts 0)."""
+    import pyarrow.compute as pc
+
+    return pc.sum(pc.binary_length(docs.column("content"))).as_py() or 0
 
 
 def _may_have_binary_docs(meta: dict) -> bool:
@@ -1589,12 +1655,16 @@ def _may_have_binary_docs(meta: dict) -> bool:
     return total != int(n_docs)
 
 
-def _fetch_candidates(dm: DataFrame, cands: "DataFrame | pd.DataFrame",
+def _fetch_candidates(doc_map, cands: "DataFrame | pd.DataFrame",
                       store=None, est: int | None = None,
-                      n_docs: int | None = None) -> DataFrame:
-    """Content rows for the candidate (seg, doc_id) set: a Spark frame,
-    or a pandas one already intersected on the driver
-    (TrigramIndex.candidates_local).
+                      n_docs: int | None = None) -> "DataFrame | pa.Table":
+    """Content rows for the candidate (seg, doc_id) set (a Spark frame,
+    or a pandas one already intersected on the driver,
+    TrigramIndex.candidates_local): an Arrow table of
+    query/grep.py DOCS_SCHEMA when the rows were read on the driver, a
+    Spark frame otherwise. ``doc_map`` returns the live doc_map frame;
+    it is called only by the tiers that read it (its first read runs a
+    schema-inference job).
 
     Binary (NUL-flagged) docs are excluded from EVERY tier: a doc
     rewritten to binary by an incremental update can linger in stale
@@ -1620,6 +1690,8 @@ def _fetch_candidates(dm: DataFrame, cands: "DataFrame | pd.DataFrame",
        the sequential columnar scan's, but the regex verify downstream
        runs over candidates only. est also skips the probe collect when
        it proves overflow, so the intersection job runs exactly once."""
+    from ck_spark.query.grep import DOCS_SCHEMA
+
     narrow = ["repo", "path", "content"]
     nb = ~F.col("is_binary")
     rows = None
@@ -1654,25 +1726,24 @@ def _fetch_candidates(dm: DataFrame, cands: "DataFrame | pd.DataFrame",
         # the bound can't prove the set broadcastable, the scan (which
         # never moves content) is the honest choice.
         if est is not None and est <= SEMIJOIN_BROADCAST_MAX:
-            return dm.where(nb).join(
+            return doc_map().where(nb).join(
                 F.broadcast(cands.select("doc_id")), "doc_id"
             ).select(*narrow)
-        return dm.where(nb).select(*narrow)
-    if not rows:
-        return dm.select(*narrow).limit(0)
+        return doc_map().where(nb).select(*narrow)
     segs = sorted({seg for seg, _ in rows})
     ids = sorted(doc_id for _, doc_id in rows)
     if store is not None:
         # small sets read driver-side (pyarrow + ranged reads — no ptr
-        # Spark job) and ship back via Arrow; the regex verify still runs
-        # distributed over the created frame
+        # Spark job); the caller verifies them on the driver or ships
+        # them back via Arrow
         local = store.fetch_pred_local(segs, ids, exclude_binary=True)
         if local is not None:
-            return dm.sparkSession.createDataFrame(
-                local[narrow], "repo string, path string, content string"
-            )
+            return pa.Table.from_pandas(local, schema=DOCS_SCHEMA,
+                                        preserve_index=False)
         return store.fetch_pred(segs, ids, exclude_binary=True
                                 ).select(*narrow)
+    if not rows:
+        return doc_map().select(*narrow).limit(0)
     # SQL-text IN lists, not Column.isin: building an In expression
     # over thousands of py4j literals costs seconds of pure driver
     # time (measured 4.1 s construct + 3.2 s run vs 0.6 + 0.5 for the
@@ -1682,4 +1753,4 @@ def _fetch_candidates(dm: DataFrame, cands: "DataFrame | pd.DataFrame",
         f"seg IN ({','.join(map(str, segs))}) AND "
         f"doc_id IN ({','.join(map(str, ids))}) AND NOT is_binary"
     )
-    return dm.where(pred).select(*narrow)
+    return doc_map().where(pred).select(*narrow)

@@ -228,3 +228,51 @@ def test_grep_results_feeds_jsonl(result_corpus):
         list(o) == ["path", "span", "language", "snippet", "score"] for o in objs
     )
     assert {o["language"] for o in objs} == {"python", "go", "rust"}
+
+
+# (path, content): every line-ending edge of Spark's split rule; U+2028
+# and U+0085 are line breaks to Python's str.splitlines but not to it.
+# The paths' code points order differently as UTF-16 (U+1D11E first) than
+# as UTF-8 bytes (U+FF5E first); Spark sorts by the bytes.
+_SPLIT_EDGES = [
+    ("a_empty", ""),
+    ("b_lf", "\n"),
+    ("c_trailing_lf", "one\ntwo\n"),
+    ("d_crlf", "one\r\ntwo"),
+    ("e_bare_cr", "one\rtwo\r"),
+    ("f_cr_crlf", "a\r\r\nb"),
+    ("g_lf_lf", "\n\n"),
+    ("h_u2028", "one\u2028two"),
+    ("i_nel", "one\u0085two"),
+    ("j_multibyte", "héllo ✓\n日本語 𝄞\r\nend"),
+    ("k_none", None),
+    ("p\uff5e", "full-width\nline"),
+    ("p\U0001d11e", "clef\nline"),
+    (None, "null path\nfirst"),
+]
+
+
+def test_split_lines_local_equals_spark_split(spark):
+    """The driver tier's line split (grep.split_lines_local) against
+    Spark's posexplode(split(content, _LINE_SPLIT)) in (path, line_no)
+    order: the same lines, line numbers and order, None content giving no
+    lines and a null path sorting first."""
+    import pyarrow as pa
+
+    from ck_spark.query.grep import _lines, split_lines_local
+
+    docs = pa.table({
+        "repo": ["r"] * len(_SPLIT_EDGES),
+        "path": [p for p, _ in _SPLIT_EDGES],
+        "content": [c for _, c in _SPLIT_EDGES],
+    })
+    want = [tuple(r) for r in _lines(spark.createDataFrame(
+        docs.to_pandas(), "repo string, path string, content string",
+    )).orderBy("path", "line_no").collect()]
+    got = [(r["repo"], r["path"], r["line"], r["line_no"])
+           for r in split_lines_local(docs).to_pylist()]
+    assert got == want
+    assert ("r", "f_cr_crlf", "", 2) in got and ("r", "b_lf", "", 2) in got
+    assert ("r", "h_u2028", "one\u2028two", 1) in got
+    assert all(p != "k_none" for _, p, _, _ in got)
+    assert got[0][1] is None

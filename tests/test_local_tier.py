@@ -370,3 +370,231 @@ def test_trigram_handle_tiers_share_one_snapshot(spark, roots, tmp_path):
 
     assert cands(old).empty
     assert not cands(TrigramIndex.load(spark, root)).empty
+
+
+# -- driver-local regex verify (query/grep.py grep_local) ---------------------
+
+
+def _text_corpus() -> pd.DataFrame:
+    """The roots' corpus without its one binary (NUL) doc, so the manifest
+    proves the corpus binary-free, which the driver verify requires."""
+    base = generate_corpus(240, seed=11)
+    return base[~base["content"].str.contains("\x00")].reset_index(drop=True)
+
+
+@pytest.fixture(scope="module")
+def text_roots(spark, tmp_path_factory):
+    """'plain' and 'gens' like `roots`, over the binary-free corpus."""
+    tmp = tmp_path_factory.mktemp("text_tier")
+    base = _text_corpus()
+    assert not base["path"].duplicated().any()  # (path, line_no) is a key
+    out = {}
+    for name in ("plain", "gens"):
+        root = str(tmp / name)
+        build_index(spark, spark.createDataFrame(base), root, n_segments=4,
+                    term_buckets=8, build_groups=2)
+        build_trigram_index(spark, None, root)
+        build_content_store(spark, root)
+        out[name] = root
+    for u in (1, 2):
+        update_index(spark, spark.createDataFrame(_upsert(base, u)),
+                     out["gens"], full_snapshot=False)
+    assert int(BM25Index.load(spark, out["gens"]).meta["n_tombstones"]) > 0
+    return out
+
+
+def _spy_grep_local(monkeypatch) -> list:
+    """Record each call of the driver verify; trigram imports it per call."""
+    from ck_spark.query import grep as grep_mod
+
+    calls: list = []
+    orig = grep_mod.grep_local
+    monkeypatch.setattr(grep_mod, "grep_local",
+                        lambda *a, **kw: calls.append(a[2]) or orig(*a, **kw))
+    return calls
+
+
+# grams in no doc: triage proves the base empty, and on an LSM root
+# (delta docs may hold any gram) the pruned grep gets no candidate
+NO_MATCH = "qqxqqz"
+
+# the perfbench turn templates (rare literal, identifier regex, rare
+# alternation, the SCAN-tier `def \w+\(`), every grep flag, the empty
+# pattern, and java.util.regex syntax: Python's re rejects \p{Lu} and
+# \Q..\E, so only the JVM can answer those two
+REGEX_CASES = [
+    ("zephyrblade", {"count_matches": True}),
+    (r"parse_span_\w+", {"count_matches": True}),
+    ("(gyroscope|palindrome)", {"count_matches": True}),
+    (r"def \w+\(", {"count_matches": True}),
+    (r"def \w+\(", {"topk": 7}),
+    ("(gyroscope|palindrome)", {"topk": 2, "count_matches": True}),
+    ("return", {"count_matches": False}),
+    ("parse_", {"fixed_string": True, "count_matches": True}),
+    ("(x)", {"fixed_string": True}),
+    ("PARSE", {"ignore_case": True, "count_matches": True}),
+    ("def", {"whole_word": True, "topk": 30}),
+    ("", {"count_matches": True}),
+    (r"\p{Lu}\w+", {"count_matches": True}),
+    (r"\Qreturn \E\w+", {"count_matches": True}),
+    (r"\w++\(", {"topk": 40}),
+]
+
+
+@pytest.mark.parametrize("which", ["plain", "gens"])
+@pytest.mark.parametrize("pattern,kw", REGEX_CASES)
+def test_grep_driver_tier_identical(spark, text_roots, monkeypatch, which,
+                                    pattern, kw):
+    """The driver verify answers with the Spark tier's rows in the Spark
+    tier's order, and with the scan grep's, on the base and on an LSM
+    root with tombstones."""
+    from ck_spark.query.grep import grep
+
+    tri = TrigramIndex.load(spark, text_roots[which])
+    calls = _spy_grep_local(monkeypatch)
+    local = tri.grep(None, pattern, **kw).collect()
+    assert calls == [pattern]
+    with monkeypatch.context() as m:
+        m.setattr(ContentStore, "LOCAL_FETCH_MAX", -1)
+        distributed = tri.grep(None, pattern, **kw).collect()
+    assert calls == [pattern]  # the Spark tier ran
+    scan = grep(tri.doc_map_df, pattern, **kw).collect()
+    assert local == distributed == scan
+    assert local
+
+
+def test_empty_candidate_set_is_verified_on_the_driver(spark, text_roots,
+                                                       monkeypatch):
+    """NO_MATCH on the LSM root reaches the pruned driver tier with zero
+    candidates (delta docs keep its grams in triage) and answers no rows,
+    like the Spark tier and the scan grep."""
+    from ck_spark.query.grep import grep
+    from ck_spark.query.trigram import trigram_dnf
+
+    tri = TrigramIndex.load(spark, text_roots["gens"])
+    (clause,) = trigram_dnf(NO_MATCH)
+    kept = tri.triage_grams(clause)
+    assert isinstance(kept, list) and tri.candidates_local(kept).empty
+    calls = _spy_grep_local(monkeypatch)
+    assert tri.grep(None, NO_MATCH, count_matches=True).collect() == []
+    assert calls == [NO_MATCH]
+    with monkeypatch.context() as m:
+        m.setattr(ContentStore, "LOCAL_FETCH_MAX", -1)
+        assert tri.grep(None, NO_MATCH, count_matches=True).collect() == []
+    assert calls == [NO_MATCH]  # the Spark tier ran
+    assert grep(tri.doc_map_df, NO_MATCH).collect() == []
+
+
+def test_spark_collected_candidates_verify_on_the_driver(spark, text_roots,
+                                                        monkeypatch):
+    """Candidates intersected in Spark and collected (the kept grams'
+    postings past the driver intersection's cap) are read and verified
+    on the driver too, with the same answer."""
+    from ck_spark.query import bm25
+
+    pattern = "(gyroscope|palindrome)"
+    tri = TrigramIndex.load(spark, text_roots["gens"])
+    want = tri.grep(None, pattern, count_matches=True).collect()
+    calls = _spy_grep_local(monkeypatch)
+    monkeypatch.setattr(bm25, "LOCAL_POSTINGS_MAX", -1)
+    monkeypatch.setattr(TrigramIndex, "candidates_local",
+                        lambda *a: pytest.fail("driver intersection"))
+    assert tri.grep(None, pattern, count_matches=True).collect() == want
+    assert calls == [pattern] and want
+
+
+@pytest.mark.parametrize("pattern", ["zephyrblade", r"def \w+\(", NO_MATCH])
+def test_small_grep_runs_no_spark_job(spark, text_roots, pattern):
+    """A fresh handle's pruned grep (driver candidates, driver point read),
+    its SCAN-tier grep (driver live view) and a grep with no candidate run
+    zero Spark jobs."""
+    sc = spark.sparkContext
+    group = f"ck-local-grep-{len(pattern)}"
+    tri = TrigramIndex.load(spark, text_roots["gens"])
+    sc.setJobGroup(group, "driver-local regex verify")
+    try:
+        rows = tri.grep(None, pattern, count_matches=True).collect()
+    finally:
+        sc.setJobGroup("", "")
+    assert bool(rows) == (pattern in ("zephyrblade", r"def \w+\("))
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.mark.parametrize("pattern", ["(gyroscope|palindrome)", r"def \w+\("])
+def test_binary_docs_take_the_spark_verify(spark, roots, monkeypatch, pattern):
+    """A corpus that may hold binary docs (the manifest cannot prove
+    otherwise) unions them back in Spark: no driver verify, scan answer."""
+    from ck_spark.query.grep import grep
+
+    tri = TrigramIndex.load(spark, roots["plain"])
+    calls = _spy_grep_local(monkeypatch)
+    got = tri.grep(None, pattern, count_matches=True).collect()
+    assert not calls
+    assert got == grep(tri.doc_map_df, pattern, count_matches=True).collect()
+
+
+@pytest.mark.parametrize("cap", ["docs", "bytes"])
+@pytest.mark.parametrize("pattern", ["(gyroscope|palindrome)", r"def \w+\("])
+def test_grep_over_a_cap_takes_the_spark_verify(spark, text_roots,
+                                                monkeypatch, pattern, cap):
+    """Content rows past ContentStore.LOCAL_FETCH_MAX docs or
+    LOCAL_VERIFY_MAX_BYTES are verified in Spark, with one answer. The
+    SCAN tier decides before any read: its docs are every stored row of
+    the live view, tombstoned versions too, and its bytes the live rows
+    × the content store's mean doc size; so at its figure it runs on the
+    driver, one under it in Spark. A pruned grep counts what it fetched."""
+    from ck_spark.index import lsm
+    from ck_spark.query import trigram as tri_mod
+
+    tri = TrigramIndex.load(spark, text_roots["gens"])
+    n_live = lsm.parse_snapshot(tri.meta["input_snapshot"])[0]
+    owner, name, at = (
+        (ContentStore, "LOCAL_FETCH_MAX",
+         n_live + int(tri.meta["n_tombstones"])) if cap == "docs" else
+        (tri_mod, "LOCAL_VERIFY_MAX_BYTES",
+         n_live * tri.content_store.avg_raw_len))
+    calls = _spy_grep_local(monkeypatch)
+    want = tri.grep(None, pattern, count_matches=True).collect()
+    assert calls and want
+    scan = pattern == r"def \w+\("
+    for value, driver in ((at, True), (at - 1, not scan), (0, False)):
+        calls.clear()
+        monkeypatch.setattr(owner, name, value)
+        assert tri.grep(None, pattern, count_matches=True).collect() == want
+        assert bool(calls) == driver
+
+
+def test_grep_reads_the_marker_once_per_handle(spark, text_roots, monkeypatch,
+                                               tmp_path):
+    """Triage, the candidate bound and the read mass use the delta_docs
+    the handle loaded with: a grep reads no marker file, and a handle
+    loaded before an update keeps its own snapshot's bounds."""
+    import shutil
+
+    from ck_spark.query import trigram as tri_mod
+    from ck_spark.query.grep import grep
+
+    root = str(tmp_path / "copy")
+    shutil.copytree(text_roots["plain"], root)
+    old = TrigramIndex.load(spark, root)
+    grams = required_trigrams("round 1: parse")
+
+    def bounds(tri):
+        return (tri.triage_grams(grams), tri.estimate_candidates(grams),
+                tri.posting_mass(grams))
+
+    before = bounds(old)
+    assert before[0] == "EMPTY"  # "round 1" occurs in no base doc
+    update_index(spark, spark.createDataFrame(_upsert(_text_corpus(), 1)),
+                 root, full_snapshot=False)
+    new = TrigramIndex.load(spark, root)
+    assert new.delta_docs > 0 == old.delta_docs
+    with monkeypatch.context() as m:
+        m.setattr(tri_mod, "_read_trigram_marker",
+                  lambda root: pytest.fail("marker re-read"))
+        assert bounds(old) == before
+        assert bounds(new) != before and bounds(new)[0] != "EMPTY"
+        for pattern in ("round 1: parse", "zephyrblade", r"def \w+\("):
+            old.grep(None, pattern).collect()
+            got = new.grep(None, pattern).collect()
+            assert got and got == grep(new.doc_map_df, pattern).collect()

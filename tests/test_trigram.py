@@ -366,7 +366,7 @@ def test_grep_indexed_overflow_distributed_blob_tier(spark, indexed,
     # pointer rows, not doc_map content
     tri = TrigramIndex.load(spark, root)
     cands = tri.candidates(trigram_dnf("def "))
-    fetched = tri_mod._fetch_candidates(tri.doc_map_df, cands,
+    fetched = tri_mod._fetch_candidates(lambda: tri.doc_map_df, cands,
                                         store=tri.content_store)
     assert fetched is not None
     assert sorted(fetched.columns) == ["content", "path", "repo"]
@@ -421,7 +421,7 @@ def test_grep_indexed_overflow_blob_tier_small_docs(spark, indexed,
     # content column) must not appear in the plan. n_docs is passed large
     # so the real est lands under PACKED_BLOB_FRACTION.
     fetched = tri_mod._fetch_candidates(
-        tri.doc_map_df, cands, store=tri.content_store, est=est,
+        lambda: tri.doc_map_df, cands, store=tri.content_store, est=est,
         n_docs=int(est / tri_mod.PACKED_BLOB_FRACTION) + 1,
     )
     plan = spark._jvm.PythonSQLUtils.explainString(
@@ -435,7 +435,7 @@ def test_grep_indexed_overflow_blob_tier_small_docs(spark, indexed,
     # sequential IO, candidate-only regex downstream): candidates must
     # BROADCAST — a shuffled join would move content bytes
     semi = tri_mod._fetch_candidates(
-        tri.doc_map_df, cands, store=tri.content_store, est=est,
+        lambda: tri.doc_map_df, cands, store=tri.content_store, est=est,
         n_docs=int(est / tri_mod.PACKED_BLOB_FRACTION) - 1,
     )
     splan = spark._jvm.PythonSQLUtils.explainString(
@@ -445,7 +445,7 @@ def test_grep_indexed_overflow_blob_tier_small_docs(spark, indexed,
     assert "content_store" not in splan.replace("\\", "/")
     # (c) without a provable bound the tier degrades to the plain scan —
     # content must never move through a shuffle
-    unk = tri_mod._fetch_candidates(tri.doc_map_df, cands,
+    unk = tri_mod._fetch_candidates(lambda: tri.doc_map_df, cands,
                                     store=tri.content_store, est=None)
     uplan = spark._jvm.PythonSQLUtils.explainString(
         unk._jdf.queryExecution(), "formatted"
@@ -473,7 +473,8 @@ def test_estimate_skips_probe_and_runs_intersection_once(spark, indexed,
     # est > cap routes straight to the distributed tier: no probe job
     monkeypatch.setattr(tri_mod, "CANDIDATE_COLLECT_MAX", 0)
     fetched = tri_mod._fetch_candidates(
-        tri.doc_map_df, tri.candidates([grams]), store=None, est=est or 1
+        lambda: tri.doc_map_df, tri.candidates([grams]), store=None,
+        est=est or 1,
     )
     plan = spark._jvm.PythonSQLUtils.explainString(
         fetched._jdf.queryExecution(), "formatted"
@@ -561,13 +562,16 @@ def test_triage_grams_selects_rarest_and_detects_absent(spark, indexed):
     # a gram that exists nowhere -> EMPTY (no doc can match)
     assert tri.triage_grams(["q\x01z"]) == "EMPTY"
     # pending delta: absence is no longer provable -> gram stays selected
+    # (a handle reads the marker once, at load: the loaded one keeps its
+    # snapshot, a handle loaded after the marker write sees the delta)
     import json, os
     from ck_spark.query.trigram import TRIGRAM_DIR, TRIGRAM_MARKER
     mpath = os.path.join(root, TRIGRAM_DIR, TRIGRAM_MARKER)
     m = json.load(open(mpath))
     try:
         json.dump({**m, "delta_docs": 5}, open(mpath, "w"))
-        out = tri.triage_grams(["q\x01z"])
+        assert tri.triage_grams(["q\x01z"]) == "EMPTY"
+        out = TrigramIndex.load(spark, root).triage_grams(["q\x01z"])
         assert out == ["q\x01z"]
     finally:
         json.dump(m, open(mpath, "w"))
