@@ -34,9 +34,10 @@ asserted in tests. One atomic meta write commits a generation.
 An update stages its generation in one of two tiers and commits it
 through one shared function (_commit_generation): under the
 LOCAL_UPDATE_* caps (input docs and bytes, live doc_map rows, term
-dictionary size) the driver tier (_stage_local) runs ONE Spark job — the
-collect of the input with its JVM-computed ids and hashes — and does the
-diff, tokenize, postings encode, term-dictionary merge, trigram append
+dictionary size) the driver tier (_stage_local) reads the input with its
+JVM-computed ids and hashes (_collect_input: no Spark job for a local
+relation or a bare local parquet scan, one for any other plan) and does
+the diff, tokenize, postings encode, term-dictionary merge, trigram append
 and content-store delta with pyarrow and the Arrow/numpy kernels the
 Spark tier runs inside its tasks; above them the Spark tier
 (_stage_spark) runs them as distributed jobs. The driver tier was
@@ -115,13 +116,15 @@ def doc_map_cols(store_content: bool) -> list[str]:
 
 
 def doc_map_schema(store_content: bool) -> str:
-    """DDL of the doc_map table (seg included: the partition column), for
-    the pyarrow readers and writers of the driver tiers."""
+    """DDL of the doc_map table in the order Spark infers it: the file
+    columns, then seg (the partition column) — for the Spark reads of
+    the live view (no schema-inference job) and the pyarrow readers and
+    writers of the driver tiers."""
     return (
         "doc_id long, repo string, path string, commit string, lang string, "
-        "content_sha256 string, is_binary boolean, doc_len int, seg int, "
+        "content_sha256 string, is_binary boolean, doc_len int, "
         "tfm map<string,int>, posm map<string,array<int>>"
-        + (", content string" if store_content else "")
+        + (", content string" if store_content else "") + ", seg int"
     )
 
 
@@ -1001,9 +1004,12 @@ def update_index(
     (repair_index).
 
     A small update (input, live doc set and term dictionary under the
-    LOCAL_UPDATE_* caps) runs on the driver in ONE Spark job, the collect
-    of its input; a larger one runs as distributed Spark jobs. Both tiers
-    write the same generation and share one commit (_update_delta).
+    LOCAL_UPDATE_* caps) runs on the driver: in no Spark job when its
+    input is a local relation (createDataFrame) or a bare scan of local
+    parquet files, in one (the chunked collect of its input) for any
+    other input plan; a larger one runs as distributed Spark jobs. Both
+    tiers write the same generation and share one commit
+    (_update_delta).
 
     Returns UpdateStats-style counters (SURVEY §2.4 A6):
     {added, removed, modified, unchanged, affected_segments, build_ms,
@@ -1034,9 +1040,11 @@ def update_index(
 
 # ---- the driver-local write tier -------------------------------------------
 # An update runs on the driver — Arrow/numpy kernels the Spark tier runs
-# inside its tasks, ONE Spark job (the collect of its input) — when its
-# input, the stored doc_map rows its diff reads and the term dictionary
-# it merges are all under these caps; each cap is one predicate below.
+# inside its tasks — when its input, the stored doc_map rows its diff
+# reads and the term dictionary it merges are all under these caps; each
+# cap is one predicate below. Its input read (_collect_input) runs no
+# Spark job for a local relation or a bare local parquet scan, and one
+# (the chunked collect) for any other plan.
 # The caps are NOT a measured wall-time crossover: none was found. On a
 # warm local[4] session (4-vCPU host; CHANGES.md has the table) the
 # driver tier staged faster at every point measured — upserts of 15 to
@@ -1050,8 +1058,10 @@ def update_index(
 # for the index; above them the Spark tier keeps the work off the
 # driver. Unmeasured past 30k input docs and 1.1M rows or terms.
 LOCAL_UPDATE_MAX_DOCS = 20_000
-# input content bytes: the plan's size estimate before the collect, the
-# collected content bytes after it
+# input content bytes: the plan's size estimate before the read; then
+# the parquet footers (direct read) or the per-doc byte counts (local
+# relation) before the content moves, or the chunk-row limit and the
+# collected bytes (chunked collect)
 LOCAL_UPDATE_MAX_BYTES = 16 << 20
 # stored doc_map rows (live rows, binary docs included, plus tombstoned
 # versions): the driver diff reads every one's (doc_id, content_sha256)
@@ -1083,11 +1093,13 @@ def _terms_fit(meta: dict) -> bool:
 
 def _input_plan_fits(corpus: DataFrame) -> bool:
     """The optimizer's statistics of the input — no Spark job — are under
-    the caps: its size estimate (bytes on disk for a file scan, unbounded
-    for an RDD) and, where the plan knows it (local relations), its row
-    count. A cheap pre-check that keeps an input known to be large off
-    the collect; it is not a bound — a compressed file can pass it with
-    any amount of content — so _collect_input bounds what it moves."""
+    the caps: its size estimate (bytes on disk for a file scan, a
+    per-row default for a local relation, unbounded for an RDD) and,
+    where the plan knows it, its row count (exact for a local relation).
+    A cheap pre-check that keeps an input known to be large off the
+    read; it is not a bound on content bytes — a compressed file or a
+    local relation can pass it with any amount — so _collect_input
+    bounds what each of its three input cases moves."""
     stats = corpus._jdf.queryExecution().optimizedPlan().stats()
     if int(str(stats.sizeInBytes())) > LOCAL_UPDATE_MAX_BYTES:
         return False
@@ -1106,9 +1118,16 @@ def _input_fits(inp) -> bool:
     return nbytes <= LOCAL_UPDATE_MAX_BYTES
 
 
-# content crosses the collect in chunks of at most this many bytes, one
-# row each, so a row limit bounds the bytes moved (_collect_input)
+# the input columns an update reads (a trusted content_sha256 rides along)
+_INPUT_COLS = ["repo", "path", "commit", "lang", "content"]
+# content crosses the chunked collect in chunks of at most this many
+# bytes, one row each, so a row limit bounds the bytes moved
 _COLLECT_CHUNK = 1024
+# parquet page encodings whose decoded bytes the footers bound
+# (_footers_fit): PLAIN values, dictionary indices and the
+# RLE/bit-packed levels
+_BOUNDED_ENCODINGS = {"PLAIN", "PLAIN_DICTIONARY", "RLE_DICTIONARY", "RLE",
+                      "BIT_PACKED"}
 
 
 def _collect_limit() -> int:
@@ -1117,41 +1136,185 @@ def _collect_limit() -> int:
     return LOCAL_UPDATE_MAX_DOCS + LOCAL_UPDATE_MAX_BYTES // _COLLECT_CHUNK + 1
 
 
-def _collect_input(corpus: DataFrame, n_segments: int):
-    """The driver tier's ONE Spark job: the input as an Arrow table, with
-    every id and fingerprint projected in the JVM by the expressions the
-    Spark tier uses — doc_id, seg, the diff sha (trusted column or
-    sha2), the doc_map sha2 and the row hash of the xor fingerprint.
+def _with_ids(corpus: DataFrame, n_segments: int, *cols) -> DataFrame:
+    """The input with every id and fingerprint the Spark tier computes,
+    by the same expressions — doc_id, seg, the diff sha (trusted column
+    or sha2), the doc_map sha2, the row hash of the xor fingerprint and
+    the NUL test — followed by `cols`."""
+    sha = F.sha2("content", 256)
+    return corpus.withColumn("doc_id", doc_id_expr()).select(
+        "doc_id",
+        seg_expr(n_segments).alias("seg"),
+        snapshot_sha_expr(corpus).alias("new_sha"),
+        sha.alias("content_sha256"),
+        F.xxhash64("repo", "path", "commit", sha).alias("row_hash"),
+        F.contains("content", F.lit("\x00")).alias("is_binary"),
+        *cols,
+    )
 
-    The content is exploded into _COLLECT_CHUNK-byte chunks, one row
-    each, under a limit of _collect_limit() rows, so the collect moves
-    at most about LOCAL_UPDATE_MAX_DOCS * _COLLECT_CHUNK +
-    LOCAL_UPDATE_MAX_BYTES content bytes (plus the other columns once
-    per chunk) however small the input is on disk; the driver joins the
-    chunks back. None when the input reaches the limit (over a cap)."""
+
+def _plan_kind(df: DataFrame):
+    """(class name, plan) of the optimized logical plan of `df`."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName(), plan
+
+
+def _collect_input(corpus: DataFrame, n_segments: int):
+    """The driver tier's input as an Arrow table: _with_ids' columns,
+    then repo, path, commit, lang and content. None when the input is
+    over a cap. Three cases, by the input's optimized plan:
+
+    - a LocalRelation (createDataFrame of pandas or Arrow):
+      _collect_local, ZERO Spark jobs;
+    - a bare scan of local parquet files whose footers bound what the
+      read decodes under the caps (_footers_fit; a landed batch, as
+      sources/corpus_io.read_corpus reads it): read with pyarrow
+      (_read_parquet_input), then _collect_local over the Arrow
+      LocalRelation, ZERO Spark jobs;
+    - anything else (a filter or projection the optimizer keeps, a
+      partitioned, bucketed or non-parquet source, a non-local
+      filesystem, an RDD, or a streaming micro-batch, which
+      streaming.ingest deduplicates): _collect_chunked, ONE Spark job."""
+    kind, plan = _plan_kind(corpus)
+    if kind == "LocalRelation":
+        return _collect_local(corpus, n_segments)
+    files = _bare_parquet_files(corpus, plan) if kind == "LogicalRelation" else None
+    names = _INPUT_COLS + [c for c in ["content_sha256"] if c in corpus.columns]
+    if files is not None and _footers_fit(files, names):
+        held = _read_parquet_input(files, names)
+        df = corpus.sparkSession.createDataFrame(held)
+        # over spark.sql.execution.arrow.localRelationThreshold the frame
+        # is an RDD scan, whose collect would be a job
+        if _plan_kind(df)[0] == "LocalRelation":
+            return _collect_local(df, n_segments, held)
+    return _collect_chunked(corpus, n_segments)
+
+
+def _collect_local(df: DataFrame, n_segments: int, held=None):
+    """_collect_input of a LocalRelation in ZERO Spark jobs: Spark's
+    ConvertToLocalRelation folds _with_ids into the relation in the
+    driver JVM, and collect() of a local relation runs no job (toArrow
+    would: it collects through a job). The ids and hashes come first,
+    with each doc's content bytes; the input columns follow only when
+    the docs and bytes are under the caps — from `held` (the Arrow
+    table `df` was made from) or a second collect."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    ids = _with_ids(df, n_segments, F.octet_length("content").alias("nbytes"))
+    rows = ids.collect()
+    if (len(rows) > LOCAL_UPDATE_MAX_DOCS
+            or sum(r.nbytes or 0 for r in rows) > LOCAL_UPDATE_MAX_BYTES):
+        return None
+    if held is None:
+        inputs = df.select(_INPUT_COLS)
+        held = _rows_table(inputs.collect(), to_arrow_schema(inputs.schema))
+    out = _rows_table(rows, to_arrow_schema(ids.schema)).drop_columns(["nbytes"])
+    for c in _INPUT_COLS:
+        out = out.append_column(c, held.column(c))
+    return out
+
+
+def _rows_table(rows: list, schema):
+    """collect()ed Rows as an Arrow table of `schema`."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    return pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema)
+
+
+def _bare_parquet_files(corpus: DataFrame, plan) -> list | None:
+    """The local paths of a LogicalRelation that is a bare parquet scan —
+    no partition columns, no buckets, only file: URIs — in Spark's own
+    listing (inputFiles: hidden and _ files, glob and path filters
+    applied as the scan applies them); else None — also for an empty
+    listing, whose schema comes from the plan alone."""
+    from urllib.parse import unquote, urlparse
+
+    rel = plan.relation()
+    if (rel.getClass().getSimpleName() != "HadoopFsRelation"
+            or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+            or not rel.partitionSchema().isEmpty()
+            or rel.bucketSpec().isDefined()):
+        return None
+    uris = corpus.inputFiles()
+    if not uris or not all(u.startswith("file:") for u in uris):
+        return None
+    return [unquote(urlparse(u).path) for u in uris]
+
+
+def _footers_fit(files: list, names: list) -> bool:
+    """The parquet footers alone, before any page is read, bound what
+    reading `names` of `files` decodes under the caps: every file has
+    every column as a string, stored in PLAIN or dictionary pages; at
+    most LOCAL_UPDATE_MAX_DOCS rows in all; and per column at most
+    LOCAL_UPDATE_MAX_BYTES by this bound — a column chunk's uncompressed
+    page bytes bound its PLAIN values, and a value taken from its
+    dictionary is no longer than the whole chunk, so a chunk with
+    dictionary pages counts its uncompressed bytes once per value. That
+    bound grows with the square of a dictionary-encoded batch (pyarrow's
+    default for strings): a batch of ~0.7 KB docs passes it up to about
+    150 docs; a larger one takes the chunked collect, whose bytes are
+    counted exactly."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n_rows, nbytes = 0, dict.fromkeys(names, 0)
+    for f in files:
+        md = pq.read_metadata(f)
+        schema = md.schema.to_arrow_schema()
+        if not all(c in schema.names
+                   and schema.field(c).type in (pa.string(), pa.large_string())
+                   for c in names):
+            return False
+        leaf = {md.schema.column(i).path: i for i in range(md.num_columns)}
+        n_rows += md.num_rows
+        for g in range(md.num_row_groups):
+            for c in names:
+                col = md.row_group(g).column(leaf[c])
+                if not set(col.encodings) <= _BOUNDED_ENCODINGS:
+                    return False
+                per_value = any(e.endswith("_DICTIONARY") for e in col.encodings)
+                nbytes[c] += col.total_uncompressed_size * (col.num_values if per_value else 1)
+    return n_rows <= LOCAL_UPDATE_MAX_DOCS and max(nbytes.values()) <= LOCAL_UPDATE_MAX_BYTES
+
+
+def _read_parquet_input(files: list, names: list):
+    """The `names` columns of `files` (which _footers_fit admitted) as
+    one Arrow table of strings."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pa.schema([(c, pa.string()) for c in names])
+    parts = []
+    for f in files:
+        with pq.ParquetFile(f) as pf:
+            parts.append(pf.read(columns=names).cast(schema))
+    return pa.concat_tables(parts)
+
+
+def _collect_chunked(corpus: DataFrame, n_segments: int):
+    """_collect_input of any plan, in ONE Spark job: the content is
+    exploded into _COLLECT_CHUNK-byte chunks, one row each, under a
+    limit of _collect_limit() rows, so the collect moves at most about
+    LOCAL_UPDATE_MAX_DOCS * _COLLECT_CHUNK + LOCAL_UPDATE_MAX_BYTES
+    content bytes (plus the other columns once per chunk) however small
+    the input is on disk; the driver joins the chunks back. None when
+    the input reaches the limit or its collected docs and bytes
+    (_input_fits) are over a cap."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     chunk = _COLLECT_CHUNK
     limit = _collect_limit()
-    sha = F.sha2("content", 256)
     body = F.col("content").cast("binary")
     n_chunks = F.greatest(F.ceil(F.octet_length(body) / chunk), F.lit(1))
     chunks = F.when(body.isNull(), F.array(F.lit(None).cast("binary"))).otherwise(
         F.transform(F.sequence(F.lit(0), n_chunks.cast("int") - 1),
                     lambda i: body.substr(i * chunk + 1, F.lit(chunk))))
     t = (
-        corpus.withColumn("doc_id", doc_id_expr())
-        .select(
-            "doc_id",
-            seg_expr(n_segments).alias("seg"),
-            snapshot_sha_expr(corpus).alias("new_sha"),
-            sha.alias("content_sha256"),
-            F.xxhash64("repo", "path", "commit", sha).alias("row_hash"),
-            F.contains("content", F.lit("\x00")).alias("is_binary"),
-            "repo", "path", "commit", "lang",
-            F.posexplode(chunks).alias("pos", "chunk"),
-        )
+        _with_ids(corpus, n_segments, *_INPUT_COLS[:-1],
+                  F.posexplode(chunks).alias("pos", "chunk"))
         .limit(limit)
         .toArrow()
     )
@@ -1162,7 +1325,8 @@ def _collect_input(corpus: DataFrame, n_segments: int):
     content = pc.binary_join(
         pa.ListArray.from_arrays(offsets, t.column("chunk").combine_chunks()), b"")
     heads = t.drop_columns(["pos", "chunk"]).take(pa.array(starts))
-    return heads.append_column("content", content.view(pa.string()))
+    inp = heads.append_column("content", content.view(pa.string()))
+    return inp if _input_fits(inp) else None
 
 
 class _StageClock:
@@ -1222,12 +1386,14 @@ def _update_delta(
     updates by XOR self-inversion (lsm.merge_snapshot).
 
     Tiers: when the live doc set (_live_rows_fit), the term dictionary
-    (_terms_fit) and the input (_input_plan_fits before its collect,
-    _input_fits after) are under the LOCAL_UPDATE_* caps, the driver tier
-    (_stage_local) computes the diff, tombstones, fresh doc_map,
-    postings, term-dictionary merge, trigram append and content-store
-    delta with pyarrow and the Arrow/numpy kernels of the Spark tier's
-    tasks, in ONE Spark job; otherwise the Spark tier (_stage_spark) runs
+    (_terms_fit) and the input (_input_plan_fits before its read,
+    _collect_input's bounds while it reads) are under the
+    LOCAL_UPDATE_* caps, the driver tier (_stage_local) computes the
+    diff, tombstones, fresh doc_map, postings, term-dictionary merge,
+    trigram append and content-store delta with pyarrow and the
+    Arrow/numpy kernels of the Spark tier's tasks — in no Spark job for
+    a local-relation or bare local parquet input, one (the chunked
+    collect) for any other; otherwise the Spark tier (_stage_spark) runs
     them as distributed jobs. Both write the same generation directories
     and hand them to ONE commit (_commit_generation), whose single commit
     point is the atomic meta write adding the generation to
@@ -1247,8 +1413,6 @@ def _update_delta(
     inp = None
     if _live_rows_fit(meta) and _terms_fit(meta) and _input_plan_fits(corpus):
         inp = _collect_input(corpus, int(meta["n_segments"]))
-        if inp is not None and not _input_fits(inp):
-            inp = None
     if inp is not None:
         g = _stage_local(spark, inp, out_dir, full_snapshot, meta, gen,
                          clock, stats)

@@ -140,11 +140,15 @@ def live_doc_map(spark: SparkSession, root: str, meta: dict | None = None) -> Da
     indexes that never update pay nothing). With generations, the view
     carries a `gen` column (0 = base) and the tombstone anti-join; the
     tombstone table is delta-sized, so Spark broadcasts it."""
+    from ck_spark.index.builder import doc_map_schema
+
     if meta is None:
         from ck_spark.index.manifest import Manifest
 
         meta = Manifest(root).load_meta()
-    base = spark.read.parquet(os.path.join(root, "doc_map"))
+    # the declared schema (the inferred one, seg last): no inference job
+    base = spark.read.schema(doc_map_schema(bool(meta.get("store_content", False)))) \
+        .parquet(os.path.join(root, "doc_map"))
     gens = live_gens(meta)
     if not gens:
         return base
@@ -180,7 +184,12 @@ def live_postings(spark: SparkSession, root: str, meta: dict) -> DataFrame:
     here — they are excluded inside the segment scorers via the
     per-(gen, seg) banned set (bm25._seg_grouped), keeping this a pure
     metadata union."""
-    base = spark.read.parquet(os.path.join(root, "postings"))
+    from ck_spark.index.builder import POSTINGS_SCHEMA
+
+    # the declared schema (the inferred one: partition columns seg and
+    # bucket last): no inference job
+    base = spark.read.schema(POSTINGS_SCHEMA + ", seg int, bucket int") \
+        .parquet(os.path.join(root, "postings"))
     gens = live_gens(meta)
     if not gens:
         return base

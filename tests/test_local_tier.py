@@ -21,6 +21,7 @@ from ck_spark.query.trigram import (
     required_trigrams,
     trigram_dnf,
 )
+from tests.conftest import spark_jobs
 
 
 def _upsert(base: pd.DataFrame, round_no: int) -> pd.DataFrame:
@@ -279,20 +280,18 @@ def test_trigram_candidates_local_equal_distributed(spark, roots, which, pattern
 def test_small_search_and_fetch_run_no_spark_job(spark, roots):
     """A fresh handle's small search, its result fetch and projection
     (default and full_section) and a small batch: zero jobs."""
-    sc = spark.sparkContext
-    group = "ck-local-tier-test"
     idx = BM25Index.load(spark, roots["gens"])
-    sc.setJobGroup(group, "driver-local read tier")
-    try:
+
+    def turn():
         hits = idx.search("parse buffer", k=10).collect()
         fetched = [idx.fetch_search_results(idx.search("parse buffer", k=10),
                                             full_section=f).collect()
                    for f in (False, True)]
-        batch = idx.search_many(BATCH, k=10).collect()
-    finally:
-        sc.setJobGroup("", "")
+        return hits, fetched, idx.search_many(BATCH, k=10).collect()
+
+    (hits, fetched, batch), jobs = spark_jobs(spark, turn)
     assert hits and all(len(f) == len(hits) for f in fetched) and batch
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert jobs == []
 
 
 def test_dead_postings_count_toward_the_cap(spark, roots, monkeypatch):
@@ -508,16 +507,11 @@ def test_small_grep_runs_no_spark_job(spark, text_roots, pattern):
     """A fresh handle's pruned grep (driver candidates, driver point read),
     its SCAN-tier grep (driver live view) and a grep with no candidate run
     zero Spark jobs."""
-    sc = spark.sparkContext
-    group = f"ck-local-grep-{len(pattern)}"
     tri = TrigramIndex.load(spark, text_roots["gens"])
-    sc.setJobGroup(group, "driver-local regex verify")
-    try:
-        rows = tri.grep(None, pattern, count_matches=True).collect()
-    finally:
-        sc.setJobGroup("", "")
+    rows, jobs = spark_jobs(
+        spark, lambda: tri.grep(None, pattern, count_matches=True).collect())
     assert bool(rows) == (pattern in ("zephyrblade", r"def \w+\("))
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert jobs == []
 
 
 @pytest.mark.parametrize("pattern", ["(gyroscope|palindrome)", r"def \w+\("])

@@ -363,3 +363,38 @@ def test_compaction_drift_keeps_the_generations(spark, tmp_path):
     assert man.load_meta()["gens"] == []
     idx = BM25Index.load(spark, root)
     assert len(idx.search("zzdriftprobe", k=10).collect()) == 3
+
+
+def test_live_views_read_with_the_declared_schema(spark, rooted, tmp_path):
+    """The live doc_map and postings views read the base with its declared
+    schema, which equals the one Spark infers (partition columns last —
+    the generation union is built on the base's columns), so a fresh
+    handle's first doc_map_df and postings_df access runs no Spark job,
+    with generations and without, stored content or not."""
+    from ck_spark.index import lsm
+    from ck_spark.index.builder import POSTINGS_SCHEMA, doc_map_schema
+    from tests.conftest import spark_jobs
+
+    plain = str(tmp_path / "plain")
+    build_index(spark, spark.createDataFrame(generate_corpus(30, seed=8)), plain,
+                n_segments=2, term_buckets=4, store_content=False)
+    inc_root, fresh_root = rooted[:2]
+    for root in (inc_root, fresh_root, plain):
+        meta = Manifest(root).load_meta()
+        for table, ddl in (
+            ("doc_map", doc_map_schema(bool(meta["store_content"]))),
+            ("postings", POSTINGS_SCHEMA + ", seg int, bucket int"),
+        ):
+            path = os.path.join(root, table)
+            assert (spark.read.schema(ddl).parquet(path).schema
+                    == spark.read.parquet(path).schema), (root, table)
+        idx = BM25Index.load(spark, root)
+        cols, jobs = spark_jobs(
+            spark, lambda: (idx.doc_map_df.columns, idx.postings_df.columns))
+        assert jobs == [], root
+        dm = spark.read.parquet(os.path.join(root, "doc_map")).columns
+        post = spark.read.parquet(os.path.join(root, "postings")).columns
+        if lsm.live_gens(meta):  # the tombstone anti-join leads with its keys
+            dm = ["gen", "doc_id"] + [c for c in dm if c != "doc_id"]
+            post = post + ["gen"]
+        assert cols == (dm, post), root

@@ -1,8 +1,9 @@
 """Driver-local write tier (index/builder.py _stage_local): a small
-update runs on the driver in at most one Spark job and stages a
-generation identical to the Spark tier's (_stage_spark), through the one
-shared commit. The Spark tier is forced by monkeypatching the input cap
-LOCAL_UPDATE_MAX_DOCS to 0."""
+update runs on the driver — in no Spark job when its input is a local
+relation or a bare local parquet scan, in one (the chunked collect)
+otherwise — and stages a generation identical to the Spark tier's
+(_stage_spark), through the one shared commit. The Spark tier is forced
+by monkeypatching the input cap LOCAL_UPDATE_MAX_DOCS to 0."""
 
 import os
 import shutil
@@ -35,6 +36,7 @@ from ck_spark.query.trigram import (
     build_trigram_index,
     trigram_dnf,
 )
+from tests.conftest import spark_jobs
 
 QUERIES = [("parse buffer", "or"), ("def return", "and"),
            ("catalyst marker", "or"), ("totally new function", "and")]
@@ -195,26 +197,63 @@ SCENARIOS = {
 }
 
 
+def _input_df(spark, batch: pd.DataFrame, source: str, path: str):
+    """The batch as the update's input: a local relation ("pandas") or a
+    bare scan of one parquet file ("parquet")."""
+    if source == "pandas":
+        return spark.createDataFrame(batch)
+    batch.to_parquet(path, index=False)
+    return spark.read.parquet(path)
+
+
+def _spy_direct_reads(monkeypatch) -> list:
+    """Record the direct parquet reads _collect_input takes."""
+    calls = []
+    orig = builder._read_parquet_input
+
+    def spy(files, *a):
+        calls.append(files)
+        return orig(files, *a)
+
+    monkeypatch.setattr(builder, "_read_parquet_input", spy)
+    return calls
+
+
 @pytest.mark.parametrize("scenario", list(SCENARIOS))
 def test_tiers_stage_identical_generations(spark, bases, monkeypatch, scenario):
     """Both tiers, the same updates on copies of one index: equal stats
     (but timings), generation files, term dictionary, pointer rows,
     trigram candidates, bit-identical search answers — and a compaction
     that verifies (no drift) to the same fingerprint."""
+    _check_tiers_identical(spark, bases, monkeypatch, scenario, "pandas")
+
+
+@pytest.mark.parametrize("scenario", list(SCENARIOS))
+def test_tiers_stage_identical_generations_from_parquet(spark, bases,
+                                                        monkeypatch, scenario):
+    """test_tiers_stage_identical_generations with parquet batches: the
+    driver tier stages from the direct read."""
+    _check_tiers_identical(spark, bases, monkeypatch, scenario, "parquet")
+
+
+def _check_tiers_identical(spark, bases, monkeypatch, scenario, source):
     tmp, corpus, roots = bases
     base_name, steps = SCENARIOS[scenario]
     states, stats = {}, {}
+    direct = _spy_direct_reads(monkeypatch)
     for tier in ("driver", "spark"):
-        root = str(tmp / f"{scenario}_{tier}")
+        root = str(tmp / f"{scenario}_{source}_{tier}")
         shutil.copytree(roots[base_name], root)
         cur, log = corpus, []
         for rnd, (edit, full) in enumerate(steps, start=1):
             batch = edit(cur, rnd)
             cur = batch if full else cur
+            df = _input_df(spark, batch, source, f"{root}_batch{rnd}.parquet")
             log.append(_no_timings(_with_tier(
                 monkeypatch, tier,
-                lambda: update_index(spark, spark.createDataFrame(batch), root,
-                                     full_snapshot=full))))
+                lambda: update_index(spark, df, root, full_snapshot=full))))
+        if source == "parquet" and tier == "driver":
+            assert len(direct) == len(steps)
         stats[tier] = log
         states[tier] = _state(spark, root)
         assert compact_index(spark, root) is True
@@ -240,17 +279,206 @@ def test_small_upsert_runs_at_most_one_job(spark, bases, tmp_path):
     path = str(tmp_path / "batch.parquet")
     pd.concat([batch, new], ignore_index=True).to_parquet(path, index=False)
     df = spark.read.parquet(path)
-    sc = spark.sparkContext
-    sc.setJobGroup("write_tier_upsert", "15-doc upsert")
-    try:
-        stats = update_index(spark, df, root, full_snapshot=False)
-        jobs = sc.statusTracker().getJobIdsForGroup("write_tier_upsert")
-    finally:
-        sc.setJobGroup("", "")
+    stats, jobs = spark_jobs(
+        spark, lambda: update_index(spark, df, root, full_snapshot=False))
     assert (stats["added"], stats["modified"]) == (5, 10)
     assert len(jobs) <= 1, jobs
     hits = BM25Index.load(spark, root).search("zzjobprobe", k=50).collect()
     assert len(hits) == 15
+
+
+def _marked_batch(corpus: pd.DataFrame, marker: str) -> pd.DataFrame:
+    """10 modified docs and 5 new ones, each carrying `marker`."""
+    batch = corpus.iloc[:10].copy()
+    new = generate_corpus(8, seed=78).iloc[:5].copy()
+    new["path"] = [f"{marker}/{i}.py" for i in range(5)]
+    batch = pd.concat([batch, new], ignore_index=True)
+    batch["content"] += f"\n# {marker} marker\n"
+    return batch
+
+
+@pytest.mark.parametrize("source", ["parquet", "pandas"])
+def test_small_upsert_runs_no_spark_job(spark, bases, tmp_path, source):
+    """A 15-doc upsert whose input is a bare parquet scan or a local
+    relation, on an index with a trigram index and a content store, runs
+    no Spark job — the input read included — and stays searchable."""
+    tmp, corpus, roots = bases
+    root = str(tmp_path / "jobs")
+    shutil.copytree(roots["store"], root)
+    marker = f"zznojob{source}"
+    df = _input_df(spark, _marked_batch(corpus, marker), source,
+                   str(tmp_path / "batch.parquet"))
+    stats, jobs = spark_jobs(
+        spark, lambda: update_index(spark, df, root, full_snapshot=False))
+    assert (stats["added"], stats["modified"]) == (5, 10)
+    assert jobs == []
+    hits = BM25Index.load(spark, root).search(marker, k=50).collect()
+    assert len(hits) == 15
+
+
+def _sorted_by_id(t):
+    return t.take(np.argsort(t.column("doc_id").to_numpy(), kind="stable"))
+
+
+def _edge_batch(case: str) -> pd.DataFrame:
+    """12 docs with one edge: a NUL (binary) doc, a null lang, multibyte
+    UTF-8 content or a trusted content_sha256 column (a wrong value for
+    one doc: the diff must trust it, not rehash)."""
+    import hashlib
+
+    pdf = generate_corpus(12, seed=61)
+    if case == "binary":
+        pdf.loc[3, "content"] = "PK\x00\x03" + pdf.loc[3, "content"]
+    elif case == "null_lang":
+        pdf.loc[[2, 7], "lang"] = None
+    elif case == "utf8":
+        pdf.loc[4, "content"] = "def ünïcødé():\n    return '日本語 😀 ∑'\n" * 40
+        pdf.loc[5, "path"] = "src/モジュール/ß.py"
+    elif case == "trusted_sha":
+        pdf["content_sha256"] = [hashlib.sha256(c.encode()).hexdigest()
+                                 for c in pdf["content"]]
+        pdf.loc[0, "content_sha256"] = "0" * 64
+    return pdf
+
+
+@pytest.mark.parametrize("case", ["one_file", "directory", "trusted_sha",
+                                  "binary", "null_lang", "utf8"])
+def test_direct_read_equals_the_chunked_collect(spark, monkeypatch, tmp_path,
+                                                case):
+    """_collect_input of a bare parquet scan (one file, or a directory of
+    several with a hidden and an _-prefixed file Spark skips) and of a
+    local relation reads without the chunked collect, and equals the
+    chunked collect of the same input column for column, schema
+    included."""
+    pdf = _edge_batch(case)
+    path = tmp_path / "in"
+    if case == "directory":
+        path.mkdir()
+        for i, part in enumerate(np.array_split(np.arange(len(pdf)), 3)):
+            pdf.iloc[part].to_parquet(path / f"part-{i}.parquet", index=False)
+        pdf.iloc[:2].to_parquet(path / ".hidden.parquet", index=False)
+        pdf.iloc[:2].to_parquet(path / "_skipped.parquet", index=False)
+    else:
+        pdf.to_parquet(path, index=False)
+    direct = _spy_direct_reads(monkeypatch)
+    for df in (spark.read.parquet(str(path)), spark.createDataFrame(pdf)):
+        want = builder._collect_chunked(df, 3)
+        with monkeypatch.context() as m:
+            m.setattr(builder, "_collect_chunked",
+                      lambda *a: pytest.fail("chunked collect"))
+            got = builder._collect_input(df, 3)
+        assert got.num_rows == len(pdf)
+        assert _sorted_by_id(got).equals(_sorted_by_id(want))
+    assert len(direct) == 1 and len(direct[0]) == (3 if case == "directory" else 1)
+    if case == "trusted_sha":
+        assert got.column("new_sha")[0].as_py() == "0" * 64
+        assert got.column("content_sha256")[0].as_py() != "0" * 64
+
+
+@pytest.mark.parametrize("plan", ["filter", "hive_partitioned", "json",
+                                  "binary_lang", "arrow_rdd", "empty"])
+def test_declined_plans_take_the_chunked_collect(spark, monkeypatch, tmp_path,
+                                                 plan):
+    """A plan the direct read declines — a filter the optimizer keeps, a
+    hive-partitioned directory, a JSON source, a parquet file with a
+    needed column that is not a string, a declared-schema scan of a
+    directory with no files — is read by the chunked collect, with the
+    same answer as the direct read of the same rows; so is a parquet
+    batch whose Arrow frame is over Spark's local-relation threshold
+    (the frame would be an RDD scan, collected in a job)."""
+    from pyspark.sql import functions as F
+
+    from ck_spark.sources.corpus_io import read_corpus
+
+    pdf = _edge_batch("binary")
+    want = _sorted_by_id(builder._collect_input(spark.createDataFrame(pdf), 3))
+    if plan == "empty":
+        (tmp_path / "in").mkdir()
+        df = read_corpus(spark, str(tmp_path / "in"))
+        want = want.slice(0, 0)
+    elif plan == "hive_partitioned":
+        for k in range(2):
+            d = tmp_path / "in" / f"part={k}"
+            d.mkdir(parents=True)
+            pdf.iloc[k::2].to_parquet(d / "f.parquet", index=False)
+        df = spark.read.parquet(str(tmp_path / "in"))
+    elif plan == "json":
+        pdf.to_json(tmp_path / "in.json", orient="records", lines=True)
+        df = spark.read.json(str(tmp_path / "in.json"))
+    elif plan == "binary_lang":
+        pdf.assign(lang=pdf["lang"].str.encode("utf-8")).to_parquet(
+            tmp_path / "in.parquet", index=False)
+        df = spark.read.parquet(str(tmp_path / "in.parquet"))
+        want = want.set_column(want.schema.get_field_index("lang"), "lang",
+                               want.column("lang").cast("binary"))
+    else:
+        pdf.to_parquet(tmp_path / "in.parquet", index=False)
+        df = spark.read.parquet(str(tmp_path / "in.parquet"))
+        if plan == "filter":
+            df = df.where(F.col("path") != "no/such/path")
+    chunked = []
+    orig = builder._collect_chunked
+
+    def spy(*a):
+        chunked.append(1)
+        return orig(*a)
+
+    monkeypatch.setattr(builder, "_collect_chunked", spy)
+    if plan != "arrow_rdd":
+        monkeypatch.setattr(builder, "_read_parquet_input",
+                            lambda *a: pytest.fail("direct read"))
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    threshold = spark.conf.get(key)
+    if plan == "arrow_rdd":
+        spark.conf.set(key, "1")
+    try:
+        got = _sorted_by_id(builder._collect_input(df, 3))
+    finally:
+        spark.conf.set(key, threshold)
+    assert chunked == [1]
+    for c in want.column_names:
+        assert got.column(c).to_pylist() == want.column(c).to_pylist(), c
+
+
+@pytest.mark.parametrize("encoding", ["dictionary", "zstd"])
+def test_large_content_is_refused_before_decoding(spark, bases, monkeypatch,
+                                                  tmp_path, encoding):
+    """Content over the byte cap that stores small — one 40 KiB body
+    repeated in dictionary pages, or distinct 400 KiB bodies that zstd
+    compresses to almost nothing — is never decoded on the driver: the
+    footers refuse both before any page is read, and both take the
+    Spark tier."""
+    import pyarrow.parquet as pq
+
+    tmp, corpus, roots = bases
+    root = str(tmp_path / "refused")
+    shutil.copytree(roots["plain"], root)
+    monkeypatch.setattr(builder, "LOCAL_UPDATE_MAX_BYTES", 64 << 10)
+    monkeypatch.setattr(builder, "LOCAL_UPDATE_MAX_DOCS", 20)
+    batch = corpus.iloc[:6].copy()
+    if encoding == "dictionary":
+        batch["content"] = "def f(x):\n    return x\n" + "#" * (40 << 10)
+    else:
+        batch["content"] = [f"def f{i}(x):\n    return x\n" + "#" * (400 << 10)
+                            for i in range(len(batch))]
+    path = str(tmp_path / "batch.parquet")
+    batch.to_parquet(path, index=False, compression="zstd")
+    read = []
+    orig = pq.ParquetFile.read
+
+    def spy(self, *a, **k):
+        t = orig(self, *a, **k)
+        read.append(t.nbytes)
+        return t
+
+    monkeypatch.setattr(pq.ParquetFile, "read", spy)
+    direct = _spy_direct_reads(monkeypatch)
+    df = spark.read.parquet(path)
+    stats = _with_tier(monkeypatch, "spark", lambda: update_index(
+        spark, df, root, full_snapshot=False), force=False)
+    assert stats["modified"] == len(batch)
+    assert direct == [] and read == []
+    assert batch["content"].str.len().sum() > 3 * (64 << 10)
 
 
 def test_row_hash_matches_spark_xxhash64(spark):
